@@ -303,14 +303,6 @@ def to_raw_df(spark, docs: list[Doc]):
     return spark.createDataFrame(raw_rows(docs), schema=DOCUMENTS_RAW)
 
 
-def expected_spans_rows(docs: list[Doc]) -> list[tuple]:
-    return [
-        (d.doc_id, [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d.expected_spans])
-        for d in docs
-        if d.expected_spans is not None
-    ]
-
-
 def expected_record_rows(docs: list[Doc]) -> list[dict]:
     out = []
     for d in docs:

@@ -33,25 +33,6 @@ def token_usage_overview(results: DataFrame) -> DataFrame:
     )
 
 
-def stats_by_model(results: DataFrame) -> DataFrame:
-    """A2 — per-model agg ordered by total cost
-    (app/services/storage.py:461-479)."""
-    return (
-        results.filter(F.col("input_tokens").isNotNull())
-        .groupBy("model_used")
-        .agg(
-            F.count("*").alias("extraction_count"),
-            F.sum("input_tokens").alias("total_input_tokens"),
-            F.sum("output_tokens").alias("total_output_tokens"),
-            F.sum("estimated_cost").alias("total_cost"),
-            F.avg("estimated_cost").alias("avg_cost"),
-            F.avg("input_tokens").alias("avg_input_tokens"),
-            F.avg("output_tokens").alias("avg_output_tokens"),
-        )
-        .orderBy(F.desc("total_cost"))
-    )
-
-
 def daily_cost_trends(results: DataFrame, now: datetime, days: int = 30) -> DataFrame:
     """A3 — daily agg over the trailing window
     (app/services/storage.py:482-497). ``now`` is explicit for

@@ -12,7 +12,7 @@ Two execution paths:
   document is one row, so the whole extraction is embarrassingly
   parallel.
 - shard path (see plans/pipeline.py): oversized documents are split
-  into page-range shards first (``shard_content_udf``), tokenized and
+  into page-range shards first (``shard_offsets_udf``), tokenized and
   laid out per shard, then merged per doc_id with
   ``merge_sharded_lines`` (applyInPandas) where boilerplate stripping
   and media interleave run on the merged line set.
@@ -29,15 +29,6 @@ from .boilerplate import strip_boilerplate
 from .html import extract_html, sniff_format
 from .layout import layout_lines
 from .tokenize import tokenize_content
-
-SHARD = T.StructType(
-    [
-        T.StructField("shard_idx", T.IntegerType(), False),
-        T.StructField("chunk", T.BinaryType(), False),
-        T.StructField("base_offset", T.LongType(), False),
-        T.StructField("base_page", T.IntegerType(), False),
-    ]
-)
 
 SHARD_SPAN = T.StructType(
     [
@@ -237,21 +228,6 @@ def shard_offsets_udf(content: pd.Series, pages_per_shard: pd.Series) -> pd.Seri
             ]
         )
     return pd.Series(out)
-
-
-@F.pandas_udf(T.ArrayType(SHARD))
-def shard_content_udf(content: pd.Series, pages_per_shard: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            [
-                {"shard_idx": i, "chunk": chunk, "base_offset": boff, "base_page": bpage}
-                for i, chunk, boff, bpage in shard_content(bytes(c), int(p))
-            ]
-            if c is not None
-            else []
-            for c, p in zip(content, pages_per_shard)
-        ]
-    )
 
 
 @F.pandas_udf(LINES_COLUMNAR)

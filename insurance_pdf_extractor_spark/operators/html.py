@@ -64,7 +64,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -199,20 +199,41 @@ _ATTR_RE = re.compile(
 )
 _NONWS_RE = re.compile(rb"[^ \t\r\n\f]")
 
-_FORMAT_SNIFF = (b"<!doc", b"<html")
+# The format prefix table, read by both classifiers below: the kernel's
+# per-document ``sniff_format`` and the plan's ``format_expr`` over the
+# 5-byte prefix (the ``magic`` column). The PDF header is matched
+# exactly; HTML prefixes match the ASCII-lower-cased prefix, so any
+# doctype casing is accepted. A BOM or whitespace before the prefix
+# matches neither.
+PDF_MAGIC = b"%PDF-"
+HTML_PREFIXES = (b"<!doc", b"<html")
 
 
 def sniff_format(content: bytes | None) -> str | None:
-    """'pdf' | 'html' | None from the first bytes (the same 5-byte
-    prefix the pipeline's metadata-width ``magic`` column stores)."""
+    """'pdf' | 'html' | None from the first 5 bytes."""
     if not content:
         return None
     head = bytes(content[:5])
-    if head == b"%PDF-":
+    if head == PDF_MAGIC:
         return "pdf"
-    if head.lower() in _FORMAT_SNIFF:
+    if head.lower() in HTML_PREFIXES:
         return "html"
     return None
+
+
+def is_pdf_expr(prefix: Column) -> Column:
+    """``sniff_format == 'pdf'`` over a 5-byte binary prefix column. A
+    plain equality, so parquet scans push it down."""
+    return prefix == F.lit(PDF_MAGIC)
+
+
+def format_expr(prefix: Column) -> Column:
+    """Column twin of :func:`sniff_format` over a 5-byte binary prefix
+    column: 'pdf', 'html' or NULL (a NULL prefix included)."""
+    html = [p.decode("ascii") for p in HTML_PREFIXES]
+    return F.when(is_pdf_expr(prefix), "pdf").when(
+        F.lower(prefix.cast("string")).isin(html), "html"
+    )
 
 
 def _parse_tag(

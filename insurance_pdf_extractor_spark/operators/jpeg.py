@@ -955,7 +955,7 @@ def _decode_prog_scan(
     grids. DC scans (Ss=0) may interleave components in MCU order; AC
     scans are single-component in non-interleaved block order (A.2.2).
     Restart intervals reset DC predictors and the EOB run."""
-    if not (0 <= ss <= se <= 63) or al > 13 or ah > 14:
+    if not (0 <= ss <= se <= 63) or al > 13 or ah > 13:
         raise ValueError("invalid progressive scan parameters")
     if ss == 0 and se != 0:
         raise ValueError("progressive DC scan must have Se=0")

@@ -25,12 +25,6 @@ def token_count_expr(col: Column) -> Column:
     return F.when(F.length(t) == 0, 0).otherwise(F.size(F.split(t, r"\s+")))
 
 
-def bpe_ish_token_count_expr(col: Column) -> Column:
-    """BPE-ish token estimate: count word pieces + digits + punctuation
-    via a GPT-2-style pre-tokenizer regex."""
-    return F.size(F.regexp_extract_all(col, F.lit(r"[A-Za-z]+|\d+|[^\sA-Za-z\d]"), 0))
-
-
 def _stop_hits_expr(col: Column, words: list[str]) -> Column:
     pat = r"\b(" + "|".join(words) + r")\b"
     return F.size(F.regexp_extract_all(F.lower(col), F.lit(pat), 0))
@@ -98,12 +92,6 @@ def lang_guess_expr(col: Column) -> Column:
     for lang in ("de", "fr", "es"):
         expr = expr.when(hits[lang] == best, lang)
     return expr.otherwise("unknown")
-
-
-def doc_fingerprint_expr(col: Column) -> Column:
-    """Deterministic document fingerprint: md5 of casefolded,
-    whitespace-collapsed text."""
-    return F.md5(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))))
 
 
 # --- winnowing (rolling-hash) fingerprints ---------------------------------

@@ -11,17 +11,12 @@ Every run records the byte offset of its string object in the source —
 offsets are the authoritative, data-derived ordering key, so results
 are invariant across partitioning/parallelism (north rule).
 
-Exposed as a scalar ``pandas_udf`` over Arrow batches (no per-row
-Python at the Spark API level).
+Runs inside the fused Arrow kernel (operators/assemble.py
+``extract_spans_udf``) and the shard path's ``shard_lines_udf`` — no
+per-row Python at the Spark API level.
 """
 
 from __future__ import annotations
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..schema import RUN
 
 _STR_ESCAPES = {"n": "\n", "r": "\r", "t": "\t", "b": "\b", "f": "\f", "(": "(", ")": ")", "\\": "\\"}
 
@@ -202,10 +197,6 @@ def _raw_hex_string(body: str) -> str:
     if len(hx) % 2:
         hx += "0"
     return bytes.fromhex(hx).decode("latin-1")
-
-
-def _decode_hex_string(body: str) -> str:
-    return _decode(_raw_hex_string(body))
 
 
 def _show_decode(raw: str, cur_font: str | None, fonts) -> str:
@@ -714,8 +705,3 @@ def page_marker_offsets_text(text: str) -> list[int]:
 def count_pages(content: bytes) -> int:
     return len(page_marker_offsets(content))
 
-
-@F.pandas_udf(T.ArrayType(RUN))
-def tokenize_content_streams(content: pd.Series) -> pd.Series:
-    """Vectorized Stage-1 kernel: binary content → array of text runs."""
-    return content.map(lambda b: [] if b is None else tokenize_content(bytes(b)))

@@ -4,9 +4,10 @@ Documents are assigned to stable buckets by ``pmod(xxhash64(doc_id),
 n_buckets)`` — a pure function of data, so bucket membership is
 identical across runs and cluster sizes. Each completed bucket appends
 one lineage row (source files, doc-id range, extractor version,
-counters, wall time) to a checkpoint table; a resumed run left-anti
-joins the input against completed buckets (SURVEY.md J3) and processes
-only the remainder, making re-runs idempotent.
+counters, wall time) to a checkpoint table; a resumed run skips the
+buckets already recorded (the anti-join of SURVEY.md J3, taken in
+Python over at most ``n_buckets`` bucket ids) and processes only the
+remainder, making re-runs idempotent.
 
 The writer is parquet-partitioned by bucket (an Iceberg table with the
 same layout drops in when catalog jars are present — see
@@ -32,16 +33,17 @@ def bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
 
 
-def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> DataFrame:
-    """Buckets already recorded for this run (empty DF when no
-    checkpoint exists yet)."""
+def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
+    """Buckets already recorded for this run (empty when no checkpoint
+    exists yet)."""
     from pyspark.errors import AnalysisException
 
     try:
         ck = spark.read.parquet(f"{out_dir}/{CHECKPOINT_DIR}")
     except AnalysisException:  # no checkpoint dir yet (PATH_NOT_FOUND)
-        return spark.createDataFrame([], "bucket int")
-    return ck.filter(F.col("run_id") == run_id).select(F.col("partition_id").alias("bucket")).distinct()
+        return set()
+    rows = ck.filter(F.col("run_id") == run_id).select("partition_id").distinct().collect()
+    return {r["partition_id"] for r in rows}
 
 
 def run_extract_job(
@@ -57,6 +59,12 @@ def run_extract_job(
 ) -> dict:
     """One (possibly resumed) extraction run. Returns run stats.
 
+    The run is planned up front: one collect of the input's distinct
+    buckets, minus the run's completed buckets, gives the sorted list
+    of pending buckets (at most ``n_buckets`` ints). The
+    input, the written-output read-back and the lineage rows all filter
+    on that list.
+
     ``_limit_buckets`` is a test hook simulating a mid-run failure: only
     the first k pending buckets are processed before 'dying'.
     """
@@ -64,23 +72,15 @@ def run_extract_job(
     t0 = time.monotonic()
 
     raw = raw.withColumn("bucket", bucket_expr(n_buckets))
-    done = completed_buckets(spark, out_dir, run_id)
-    # resume anti-join (J3): only not-yet-checkpointed buckets
-    pending = raw.join(done, "bucket", "left_anti")
-
-    if pending.isEmpty():
+    present = {r["bucket"] for r in raw.select("bucket").distinct().collect()}
+    pending = sorted(present - completed_buckets(spark, out_dir, run_id))[:_limit_buckets]
+    if not pending:
         # fully-checkpointed run: nothing to do (common on retry loops)
         return {"run_id": run_id, "buckets_completed": 0, "wall_ms": int((time.monotonic() - t0) * 1000)}
-
-    if _limit_buckets is not None:
-        keep = [
-            r["bucket"]
-            for r in pending.select("bucket").distinct().orderBy("bucket").limit(_limit_buckets).collect()
-        ]
-        pending = pending.filter(F.col("bucket").isin(keep))
+    in_run = F.col("bucket").isin(pending)
 
     docs, rejects = extract_documents(
-        pending.drop("bucket"),
+        raw.filter(in_run).drop("bucket"),
         max_size_bytes=max_size_bytes,
         shard_size_bytes=shard_size_bytes,
         shard_pages=shard_pages,
@@ -88,57 +88,38 @@ def run_extract_job(
     docs = docs.withColumn("bucket", bucket_expr(n_buckets))
     rejects = rejects.withColumn("bucket", bucket_expr(n_buckets))
 
-    docs.write.partitionBy("bucket").mode("append").parquet(f"{out_dir}/{DOCUMENTS_DIR}")
-    rejects.write.partitionBy("bucket").mode("append").parquet(f"{out_dir}/{REJECTS_DIR}")
+    docs_path = f"{out_dir}/{DOCUMENTS_DIR}"
+    rejects_path = f"{out_dir}/{REJECTS_DIR}"
+    docs.write.partitionBy("bucket").mode("append").parquet(docs_path)
+    rejects.write.partitionBy("bucket").mode("append").parquet(rejects_path)
 
     wall_ms = int((time.monotonic() - t0) * 1000)
 
-    # lineage counters per bucket, computed from what was just written.
-    # Either side can be EMPTY (all docs rejected / zero rejects): an
-    # empty write leaves a schemaless parquet dir and the read-back
-    # throws UNABLE_TO_INFER_SCHEMA — substitute an empty frame for
-    # exactly that AnalysisException, never for other read failures
-    # (those must surface, not silently zero the lineage counters).
-    # Matched on the stable errorClass (not the message text, which
-    # varies across Spark versions); the fallback schema is derived from
-    # the frame that was just written, so it cannot drift if the
-    # documents schema evolves.
-    from pyspark.errors import AnalysisException
-
-    def _read_written(path: str, written_df: DataFrame) -> DataFrame:
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException as ex:
-            get_cls = getattr(ex, "getErrorClass", None) or getattr(ex, "errorClass", None)
-            cls = get_cls() if callable(get_cls) else get_cls
-            matched = (
-                cls == "UNABLE_TO_INFER_SCHEMA"
-                if cls is not None
-                else "UNABLE_TO_INFER_SCHEMA" in str(ex)  # very old Spark: no errorClass API
-            )
-            if not matched:
-                raise
-            return spark.createDataFrame([], written_df.schema)
-
-    written = _read_written(f"{out_dir}/{DOCUMENTS_DIR}", docs).join(
-        pending.select("bucket").distinct(), "bucket", "left_semi"
-    )
-    doc_stats = written.groupBy("bucket").agg(
-        F.count("*").alias("docs_processed"),
-        F.sum(F.size("spans")).alias("spans_emitted"),
-        F.min("doc_id").alias("min_doc_id"),
-        F.max("doc_id").alias("max_doc_id"),
+    # lineage counters per bucket, counted from what was just written.
+    # The read-back uses the written frame's schema: an empty write
+    # leaves a schemaless dir, which then reads as 0 rows, and the
+    # bucket filter prunes the read to this run's partitions.
+    doc_stats = (
+        spark.read.schema(docs.schema).parquet(docs_path)
+        .filter(in_run)
+        .groupBy("bucket")
+        .agg(
+            F.count("*").alias("docs_processed"),
+            F.sum(F.size("spans")).alias("spans_emitted"),
+            F.min("doc_id").alias("min_doc_id"),
+            F.max("doc_id").alias("max_doc_id"),
+        )
     )
     rej_stats = (
-        _read_written(f"{out_dir}/{REJECTS_DIR}", rejects)
-        .join(pending.select("bucket").distinct(), "bucket", "left_semi")
+        spark.read.schema(rejects.schema).parquet(rejects_path)
+        .filter(in_run)
         .groupBy("bucket")
         .agg(F.count("*").alias("docs_rejected"))
     )
     # every pending bucket gets a row even if it had 0 docs
-    all_pending = pending.select("bucket").distinct()
     ck = (
-        all_pending.join(doc_stats, "bucket", "left")
+        spark.createDataFrame([(b,) for b in pending], "bucket int")
+        .join(doc_stats, "bucket", "left")
         .join(rej_stats, "bucket", "left")
         .select(
             F.lit(run_id).alias("run_id"),
@@ -154,6 +135,4 @@ def run_extract_job(
         )
     )
     ck.write.mode("append").parquet(f"{out_dir}/{CHECKPOINT_DIR}")
-
-    n_done = ck.count()
-    return {"run_id": run_id, "buckets_completed": n_done, "wall_ms": wall_ms}
+    return {"run_id": run_id, "buckets_completed": len(pending), "wall_ms": wall_ms}

@@ -1,22 +1,22 @@
 """End-to-end extraction plan.
 
-Shape (scale rationale):
+Both entry points are built from one private plan function, ``_extract``:
 
     scan(documents_raw)
-      → validity filters (P1-P3) with a rejects side-output (lineage,
-        never silently dropped)
-      → explicit repartition on hash(doc_id) (north rule: salted spread
-        of documents across partitions)
-      → normal docs: ONE fused Arrow kernel (tokenize→layout→
-        boilerplate→assemble). Each document is a single row, so this
-        path is shuffle-free and embarrassingly parallel — at 10^12
-        docs the plan is a pure map, bounded only by scan + CPU.
-      → oversized docs (size > shard threshold): page-range sharding →
-        per-shard kernel → groupBy(doc_id) merge. Only the skewed tail
-        pays a shuffle, and it is a shuffle of *small line lists*, not
-        raw bytes-heavy content.
-      → union → field extraction/validation (pure Catalyst expressions)
-      → results + per-partition checkpoint/lineage writes.
+      → classify_rejects: size cap, format prefix, zero pages. Rejects
+        are a side output (lineage), never silently dropped.
+      → normal docs and all HTML: repartition on hash(doc_id), a
+        salted spread over partitions (skipped when presalted), then
+        ONE fused Arrow kernel (tokenize → layout → boilerplate →
+        assemble). One document is one row, so the kernel is a map.
+      → oversized PDFs: page-range sharding → shard spread → per-shard
+        kernel → groupBy(doc_id) merge. Only the skewed tail pays these
+        shuffles, of page chunks and small line lists.
+      → accepted (doc_id, spans, size_bytes) + rejects
+
+``extract_documents`` returns the spans and the rejects;
+``extract_results`` projects the spans into results rows
+(:func:`build_results`) and appends one stub row per reject.
 
 Reference lifecycle being re-expressed: POST /api/v1/extract
 (app/api/routes/extraction.py:79-199 → app/services/pdf_processor.py:29-169).
@@ -27,7 +27,7 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import (
@@ -46,15 +46,9 @@ from ..operators.assemble import (
     shard_offsets_udf,
 )
 from ..operators.fields import DOC_TEXT, extract_fields
+from ..operators.html import format_expr, is_pdf_expr
 from ..schema import DOCUMENTS_SIZED
 from ..functions.confidence import confidence_map_expr, estimated_cost_expr, token_count_expr
-
-PDF_MAGIC = bytes(b"%PDF-")
-# 5-byte magic prefixes the pipeline accepts. HTML joins PDF (north
-# rule: the corpus interleaves formats; operators/html.py) — the two
-# case variants cover real-world doctype casing without a per-row
-# lower() on a binary column.
-VALID_MAGICS = (b"%PDF-", b"<!DOC", b"<!doc", b"<html", b"<HTML")
 
 
 def effective_shard_size(max_size_bytes: int, shard_size_bytes: int | None) -> int:
@@ -67,14 +61,23 @@ def effective_shard_size(max_size_bytes: int, shard_size_bytes: int | None) -> i
     return min(SHARD_SIZE_BYTES, int(max_size_bytes * SHARD_FRAC))
 
 
+def _prefix(df: DataFrame) -> Column:
+    """The 5-byte format prefix: the stored ``magic`` column when the
+    source has one, else a slice of ``content``."""
+    if "magic" in df.columns:
+        return F.col("magic")
+    return F.substring(F.col("content").cast("binary"), 1, 5)
+
+
 def classify_rejects(raw: DataFrame, max_size_bytes: int = MAX_FILE_SIZE_BYTES) -> DataFrame:
-    """P1-P3: size cap (app/services/pdf_processor.py:355-360), magic
-    bytes (app/utils/file_helpers.py:15-50), zero pages
+    """P1-P3: size cap (app/services/pdf_processor.py:355-360), format
+    prefix (app/utils/file_helpers.py:15-50; PDF or HTML, see
+    operators/html.format_expr), zero pages
     (app/services/pdf_processor.py:366-368).
 
     When the source carries a ``magic`` prefix column (written by
     render_documents_raw / any ingest that stores the first 5 bytes),
-    the magic check uses it instead of slicing ``content`` — so the
+    the prefix check uses it instead of slicing ``content`` — so the
     reject branch of the extraction plan never references the content
     column and its scan prunes to metadata width. At corpus scale that
     is the difference between the reject side-output being free and it
@@ -88,60 +91,23 @@ def classify_rejects(raw: DataFrame, max_size_bytes: int = MAX_FILE_SIZE_BYTES) 
     schema evolution. Under that contract ``magic IS NULL`` genuinely
     means unreadable content, so the fast path may reject on it without
     touching ``content``."""
-    if "magic" in raw.columns:
-        magic_bad = F.col("magic").isNull() | ~F.col("magic").isin(list(VALID_MAGICS))
-    else:
-        magic_bad = F.col("content").isNull() | ~F.substring(
-            F.col("content").cast("binary"), 1, 5
-        ).isin(list(VALID_MAGICS))
     return raw.withColumn(
         "reject_reason",
         F.when(F.col("size_bytes") > max_size_bytes, "size_exceeds_limit")
-        .when(magic_bad, "invalid_pdf")
+        .when(format_expr(_prefix(raw)).isNull(), "invalid_pdf")
         .when(F.col("n_pages") <= 0, "no_pages"),
     )
 
 
-def extract_documents(
+def _extract(
     raw: DataFrame,
-    max_size_bytes: int = MAX_FILE_SIZE_BYTES,
-    shard_size_bytes: int | None = None,
-    shard_pages: int = SHARD_PAGES,
-    partitions: int | None = None,
-    presalted: bool = False,
+    max_size_bytes: int,
+    shard_size_bytes: int | None,
+    shard_pages: int,
+    presalted: bool,
 ) -> tuple[DataFrame, DataFrame]:
-    """documents_raw → (documents(doc_id, spans), rejects).
-
-    ``partitions``: explicit salt/repartition width before the kernel
-    stage (defaults to spark.sql.shuffle.partitions).
-    ``presalted``: the input is already hash(doc_id)-spread (e.g. by
-    render_documents_raw) — skip the repartition so the content bytes
-    are never shuffled a second time.
-    """
-    spark = raw.sparkSession
-    n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    classified = classify_rejects(raw, max_size_bytes)
-    rejects = classified.filter(F.col("reject_reason").isNotNull()).select(
-        "doc_id", "reject_reason", "size_bytes", F.lit("error").alias("status")
-    )
-    ok = classified.filter(F.col("reject_reason").isNull()).drop("reject_reason")
-
-    # explicit salt: uniform hash spread of docs over partitions so a
-    # run of adjacent oversized policies cannot pile into one task
-    if not presalted:
-        ok = ok.repartition(n_part, F.xxhash64("doc_id"))
-
-    sized = _extract_spans_sized(
-        ok, effective_shard_size(max_size_bytes, shard_size_bytes), shard_pages
-    )
-    return sized.drop("size_bytes"), rejects
-
-
-def _extract_spans_sized(
-    ok: DataFrame, shard_size_bytes: int, shard_pages: int
-) -> DataFrame:
-    """Kernel stage over validated docs → (doc_id, spans, size_bytes).
+    """The one extraction plan: raw → (accepted documents (doc_id, spans,
+    size_bytes), rejects (doc_id, reject_reason, size_bytes)).
     size_bytes rides along so results assembly needs no join back to
     the raw table (a full-width shuffle at corpus scale).
 
@@ -152,18 +118,37 @@ def _extract_spans_sized(
     page is a bounded straggler task, not a correctness or memory
     hazard; at corpus scale such documents are a vanishing tail of the
     interleaved mix."""
-    if "magic" in ok.columns:
-        is_pdf = F.col("magic") == F.lit(PDF_MAGIC)
-    else:
-        is_pdf = F.substring(F.col("content").cast("binary"), 1, 5) == F.lit(PDF_MAGIC)
-    small = ok.filter((F.col("size_bytes") <= shard_size_bytes) | ~is_pdf)
+    classified = classify_rejects(raw, max_size_bytes)
+    rejects = classified.filter(F.col("reject_reason").isNotNull()).select(
+        "doc_id", "reject_reason", "size_bytes"
+    )
+    ok = classified.filter(F.col("reject_reason").isNull()).drop("reject_reason")
+
+    threshold = effective_shard_size(max_size_bytes, shard_size_bytes)
+    is_pdf = is_pdf_expr(_prefix(ok))
+    small = ok.filter((F.col("size_bytes") <= threshold) | ~is_pdf)
+    # explicit salt: uniform hash spread of the fused-kernel docs over
+    # partitions so a run of adjacent large documents cannot pile into
+    # one task. Oversized PDFs are spread per shard instead (below): a
+    # salt exchange in front of the shard path's Python UDFs would start
+    # them in every shuffle partition even when no document is
+    # oversized, since AQE cannot prune an empty exchange below a
+    # Python UDF.
+    if not presalted:
+        n_part = int(raw.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        small = small.repartition(n_part, F.xxhash64("doc_id"))
     small_docs = small.select(
         "doc_id",
         extract_spans_udf("content", "media", "n_pages").alias("spans"),
         "size_bytes",
     )
+    big = ok.filter((F.col("size_bytes") > threshold) & is_pdf)
+    return small_docs.unionByName(_sharded_spans(big, shard_pages)), rejects
 
-    big = ok.filter((F.col("size_bytes") > shard_size_bytes) & is_pdf)
+
+def _sharded_spans(big: DataFrame, shard_pages: int) -> DataFrame:
+    """Oversized PDFs → (doc_id, spans, size_bytes): page-range shards,
+    a per-shard kernel, and a merge per doc_id."""
     # filtered (compressed) oversized docs must be rewritten to plain
     # bytes BEFORE the %%PAGE marker scan and JVM-side slicing (see
     # decode_filters_udf); the contains() guard keeps plain-corpus
@@ -221,10 +206,30 @@ def _extract_spans_sized(
         "size_bytes",
         shard_lines_udf("shard.chunk", "shard.base_offset", "shard.base_page").alias("lines"),
     )
-    big_docs = shard_lines.groupBy("doc_id").applyInPandas(
+    return shard_lines.groupBy("doc_id").applyInPandas(
         merge_sharded_lines, schema=DOCUMENTS_SIZED
     )
-    return small_docs.unionByName(big_docs)
+
+
+def extract_documents(
+    raw: DataFrame,
+    max_size_bytes: int = MAX_FILE_SIZE_BYTES,
+    shard_size_bytes: int | None = None,
+    shard_pages: int = SHARD_PAGES,
+    presalted: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """documents_raw → (documents(doc_id, spans), rejects).
+
+    ``presalted``: the input is already hash(doc_id)-spread (e.g. by
+    render_documents_raw, or a bucketed/multi-file parquet table read
+    with ``files.maxPartitionBytes`` sizing) — skip the repartition so
+    the content bytes are never shuffled a second time. Use salted mode
+    when the layout is unknown or adversarial (few huge files, doc
+    order correlated with size); measured on a balanced layout,
+    presalted is strictly faster (BENCH.md).
+    """
+    sized, rejects = _extract(raw, max_size_bytes, shard_size_bytes, shard_pages, presalted)
+    return sized.drop("size_bytes"), rejects.withColumn("status", F.lit("error"))
 
 
 @contextmanager
@@ -234,7 +239,7 @@ def materialized_source(raw: DataFrame, storage_level: StorageLevel | None = Non
     :func:`extract_results`) read one materialization instead of each
     re-executing the source.
 
-    Catalyst pushes every branch filter below the salt exchange, which
+    Catalyst pushes every branch filter down to the source, which
     is the right plan over a pruned columnar scan but triples the
     source evaluation when the source is a UDF/join subtree (measured:
     the corpus-render stage ran 3x per action, ~35% of executor time;
@@ -265,78 +270,36 @@ def extract_results(
     max_size_bytes: int = MAX_FILE_SIZE_BYTES,
     shard_size_bytes: int | None = None,
     shard_pages: int = SHARD_PAGES,
-    partitions: int | None = None,
     model_used: str = DEFAULT_MODEL,
     prompt_version: str = "v1",
     presalted: bool = False,
 ) -> DataFrame:
     """Single-pass flagship plan: raw docs → ONE results DataFrame that
-    contains successful/partial records AND reject stubs (the reference
-    stores failed extractions in the same `extractions` table,
-    app/services/storage.py:167-306).
+    holds :func:`build_results` over ``_extract``'s accepted documents
+    AND one stub row per reject (the reference stores failed
+    extractions in the same `extractions` table,
+    app/services/storage.py:167-306). One action writes both;
+    ``presalted`` as in :func:`extract_documents`.
 
-    Scale shape (what the physical plan ACTUALLY compiles to — earlier
-    rounds claimed ReuseExchange shared one salt exchange across the
-    branches; inspection of the plan shows the optimizer instead pushes
-    each branch's filter BELOW its salt exchange, which defeats
-    exchange reuse but produces something just as good):
+    Physical plan: each branch scans the source pruned and shuffles only
+    its own subset. The small-doc branch pushes ``size_bytes <=
+    threshold`` into parquet below its salt exchange, the oversized
+    branch ``size_bytes > threshold AND magic = '%PDF-'``, and the
+    reject branch reads only metadata-width columns (no ``content``)
+    when the source has a ``magic`` column (see classify_rejects).
 
-    - three branch scans of the source, each pruned: the small-doc
-      branch carries ``size_bytes <= shard_threshold`` as a pushed
-      parquet filter (reads ~the whole corpus — it IS the corpus); the
-      oversized branch carries ``size_bytes > shard_threshold`` (row-
-      group statistics skip ~everything); the reject branch reads only
-      metadata-width columns (doc_id, size_bytes, n_pages, magic) —
-      never ``content`` — when the source has a ``magic`` prefix
-      column (see classify_rejects), so it costs ~nothing despite its
-      CASE predicate being unpushable.
-    - each branch shuffles only ITS filtered subset, so the union's
-      total shuffle volume is one corpus, not three.
-    - one action for records + rejects — no second job over the corpus.
-
-    ``presalted``: skip the salt repartition when the source is already
-    well-spread — a bucketed/multi-file parquet table read with
-    ``files.maxPartitionBytes`` sizing gives balanced input splits, and
-    re-shuffling the full byte payload (the job's single largest
-    network cost) buys nothing. Use salted mode when the layout is
-    unknown or adversarial (few huge files, doc order correlated with
-    size); measured on a balanced layout, presalted is strictly faster
-    (BENCH.md).
-
-    COMPUTED (non-scan) sources: the per-branch pushdown above is only
-    free when the source is a columnar scan (pruned columns / skipped
-    row groups make the extra branch scans ~costless). When ``raw`` is
-    itself a computed subtree — a decode/render UDF stage, a join, a
-    prior pipeline's output that was never persisted — each branch
-    RE-EXECUTES that subtree: stage-level measurement showed the
-    corpus-render UDF running 3x inside one action (~40 of 114 core-s
-    wasted; BENCH.md "computed-source triple evaluation"). Wrap such a
-    source in :func:`materialized_source` so all branches read one
-    materialization."""
-    spark = raw.sparkSession
-
-    if presalted:
-        salted = raw
-    else:
-        n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        salted = raw.repartition(n_part, F.xxhash64("doc_id"))
-    classified = classify_rejects(salted, max_size_bytes)
-    ok = classified.filter(F.col("reject_reason").isNull()).drop("reject_reason")
-    sized = _extract_spans_sized(
-        ok, effective_shard_size(max_size_bytes, shard_size_bytes), shard_pages
-    )
+    A COMPUTED (non-scan) source — a render/decode UDF stage, a join —
+    is re-executed once per branch (BENCH.md "computed-source triple
+    evaluation"); wrap it in :func:`materialized_source`."""
+    sized, rejects = _extract(raw, max_size_bytes, shard_size_bytes, shard_pages, presalted)
     results = build_results(sized, model_used=model_used, prompt_version=prompt_version)
-
-    reject_stubs = (
-        classified.filter(F.col("reject_reason").isNotNull())
-        .select(
-            "doc_id",
-            F.col("size_bytes").alias("file_size"),
-            F.lit("error").alias("status"),
-            F.lit(model_used).alias("model_used"),
-            F.lit(prompt_version).alias("prompt_version"),
-            F.array(F.concat(F.lit("rejected: "), F.col("reject_reason"))).alias("warnings"),
-        )
+    reject_stubs = rejects.select(
+        "doc_id",
+        F.col("size_bytes").alias("file_size"),
+        F.lit("error").alias("status"),
+        F.lit(model_used).alias("model_used"),
+        F.lit(prompt_version).alias("prompt_version"),
+        F.array(F.concat(F.lit("rejected: "), F.col("reject_reason"))).alias("warnings"),
     )
     return results.unionByName(reject_stubs, allowMissingColumns=True)
 

@@ -42,17 +42,6 @@ DOCUMENTS_SIZED = T.StructType(
     ]
 )
 
-# A positioned text run produced by the content-stream tokenizer.
-RUN = T.StructType(
-    [
-        T.StructField("page", T.IntegerType(), False),
-        T.StructField("x", T.DoubleType(), False),
-        T.StructField("y", T.DoubleType(), False),
-        T.StructField("off", T.LongType(), False),
-        T.StructField("text", T.StringType(), False),
-    ]
-)
-
 MEDIA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),

@@ -14,8 +14,13 @@ Local smoke:
 
 Input documents may interleave FORMATS — PDF content streams and HTML
 pages in one table — with no flags: the kernel dispatches per document
-by magic sniff (operators/html.py, plans/pipeline.py), and non-PDF
-documents route around the PDF page-range shard path.
+by its first 5 bytes (operators/html.py prefix table, shared by the
+reject filter in plans/pipeline.py), and non-PDF documents route around
+the PDF page-range shard path. Accepted prefixes: ``%PDF-`` exactly,
+and ``<!doc`` / ``<html`` in any letter case. A page with a byte-order
+mark or whitespace before its doctype is rejected with reason
+``invalid_pdf`` (in ``rejects/`` and the lineage counters), never
+dropped silently.
 
 The job is resumable: re-running with the same --run-id and --output
 processes only buckets missing from the checkpoint table

@@ -13,9 +13,10 @@ from insurance_pdf_extractor_spark.plans.pipeline import build_results, extract_
 
 
 @pytest.fixture(scope="module")
-def results_df(spark, corpus_docs):
+def results_df(spark, corpus_docs, shuffle_partitions):
     raw = C.to_raw_df(spark, corpus_docs)
-    docs, _ = extract_documents(raw, partitions=4)
+    with shuffle_partitions(4):
+        docs, _ = extract_documents(raw)
     res = build_results(docs, raw=raw)
     # deterministic created_at spread over 60 days for time-window ops
     res = res.withColumn(

@@ -8,7 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from insurance_pdf_extractor_spark.plans.pipeline import PDF_MAGIC, classify_rejects
+from insurance_pdf_extractor_spark.operators.html import PDF_MAGIC
+from insurance_pdf_extractor_spark.plans.pipeline import classify_rejects
 from insurance_pdf_extractor_spark.sources.catalog import read_table_evolved
 
 

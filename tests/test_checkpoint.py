@@ -7,12 +7,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from insurance_pdf_extractor_spark import corpus as C
-from insurance_pdf_extractor_spark.plans.checkpoint import run_extract_job
+from insurance_pdf_extractor_spark.plans.checkpoint import bucket_expr, run_extract_job
 
 
 def _spans_map(spark, path):
     df = spark.read.parquet(path)
     return {r["doc_id"]: r["spans"] for r in df.collect()}
+
+
+def _lineage(spark, out_dir, run_id):
+    ck = spark.read.parquet(f"{out_dir}/checkpoint").filter(F.col("run_id") == run_id)
+    return [r.asDict() for r in ck.collect()]
 
 
 def test_kill_resume(spark, corpus_docs, tmp_path):
@@ -28,12 +33,26 @@ def test_kill_resume(spark, corpus_docs, tmp_path):
     assert stats1["buckets_completed"] == 3
     partial = _spans_map(spark, f"{part_dir}/documents")
     assert 0 < len(partial) < len(full)
+    killed = {r["partition_id"] for r in _lineage(spark, part_dir, "r1")}
+    assert len(killed) == 3
 
     # resume: processes exactly the remaining 5 buckets
     stats2 = run_extract_job(raw, part_dir, run_id="r1", n_buckets=8)
     assert stats2["buckets_completed"] == 5
     resumed = _spans_map(spark, f"{part_dir}/documents")
     assert resumed == full
+
+    # the resume wrote one lineage row per pending bucket, and nothing
+    # else; every bucket's counters add up to a recount of the input
+    lineage = _lineage(spark, part_dir, "r1")
+    resumed_buckets = sorted(r["partition_id"] for r in lineage if r["partition_id"] not in killed)
+    assert resumed_buckets == sorted(set(range(8)) - killed)
+    assert len(lineage) == 8
+    recount = {
+        r["bucket"]: r["count"]
+        for r in raw.groupBy(bucket_expr(8).alias("bucket")).count().collect()
+    }
+    assert {r["partition_id"]: r["docs_processed"] + r["docs_rejected"] for r in lineage} == recount
 
     # re-run after completion: nothing left to do (idempotent)
     stats3 = run_extract_job(raw, part_dir, run_id="r1", n_buckets=8)

@@ -298,7 +298,7 @@ def test_pipeline_mixed_filters_equivalence(spark):
     assert set(a) == set(b) and a == b
 
 
-def test_shard_path_decodes_filtered_oversized(spark):
+def test_shard_path_decodes_filtered_oversized(spark, shuffle_partitions):
     """A compressed oversized document forced through the shard path
     yields the same spans as the plain fused path: decode_filters_udf
     runs before %%PAGE marker scanning and JVM-side slicing."""
@@ -317,9 +317,10 @@ def test_shard_path_decodes_filtered_oversized(spark):
     comp, n = render_text("big1", long_text, filters=("FlateDecode",))
     plain, n2 = render_text("big1", long_text)
     assert n == n2 and n >= 4
-    sharded, _ = extract_documents(raw_df(comp, n), shard_size_bytes=1, shard_pages=2, partitions=2)
-    fused, _ = extract_documents(raw_df(plain, n2), shard_size_bytes=10**9, partitions=2)
-    assert _span_map(sharded) == _span_map(fused)
+    with shuffle_partitions(2):
+        sharded, _ = extract_documents(raw_df(comp, n), shard_size_bytes=1, shard_pages=2)
+        fused, _ = extract_documents(raw_df(plain, n2), shard_size_bytes=10**9)
+        assert _span_map(sharded) == _span_map(fused)
 
 
 @pytest.mark.parametrize("mix", [m for m in FILTER_MIX if m])

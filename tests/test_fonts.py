@@ -460,7 +460,7 @@ def test_pipeline_encoded_matrix_spans_match_mirror(spark):
         assert got[doc_id] == exp, (doc_id, encoding_for_doc(doc_id))
 
 
-def test_shard_path_extracts_encoded_oversized(spark):
+def test_shard_path_extracts_encoded_oversized(spark, shuffle_partitions):
     """A font-encoded oversized document forced through the shard path
     (preamble-prepend slices) equals the fused path's spans."""
     from insurance_pdf_extractor_spark.plans.pipeline import extract_documents
@@ -479,12 +479,11 @@ def test_shard_path_extracts_encoded_oversized(spark):
                 "n_pages int, size_bytes long, magic binary",
             )
 
-        sharded, _ = extract_documents(
-            raw_df(content), shard_size_bytes=1, shard_pages=2, partitions=2
-        )
-        fused, _ = extract_documents(raw_df(content), partitions=2)
-        assert _span_map(sharded) == _span_map(fused)
-        assert len(_span_map(sharded)["big1"]) > 100
+        with shuffle_partitions(2):
+            sharded, _ = extract_documents(raw_df(content), shard_size_bytes=1, shard_pages=2)
+            fused, _ = extract_documents(raw_df(content))
+            assert _span_map(sharded) == _span_map(fused)
+            assert len(_span_map(sharded)["big1"]) > 100
 
 
 def test_hex_run_object_scan_is_linear():

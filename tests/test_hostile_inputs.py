@@ -50,14 +50,14 @@ def test_tokenizer_never_crashes_and_tiers_agree(name, content):
         assert isinstance(row[4], str)
 
 
-def test_pipeline_accounts_for_every_hostile_doc(spark):
+def test_pipeline_accounts_for_every_hostile_doc(spark, shuffle_partitions):
     rows = [
         (name, content, [], content.count(b"%%PAGE") or 1, len(content))
         for name, content in HOSTILE
     ]
     raw = spark.createDataFrame(rows, DOCUMENTS_RAW)
-    res = extract_results(raw, partitions=4)
-    got = res.select("doc_id", "status").collect()
+    with shuffle_partitions(4):
+        got = extract_results(raw).select("doc_id", "status").collect()
     # conservation: every input doc appears exactly once, success or reject
     assert sorted(r["doc_id"] for r in got) == sorted(n for n, _ in HOSTILE)
     by_id = {r["doc_id"]: r["status"] for r in got}

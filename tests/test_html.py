@@ -278,6 +278,11 @@ def test_sniff_format():
     assert sniff_format(b"%PDF-1.4 ...") == "pdf"
     assert sniff_format(b"<!DOCTYPE html><html>") == "html"
     assert sniff_format(b"<!doctype html>") == "html"
+    assert sniff_format(b"<!Doctype html>") == "html"
+    assert sniff_format(b"<HtMl>") == "html"
+    assert sniff_format(b"%pdf-1.4") is None
+    assert sniff_format(b"\xef\xbb\xbf<!DOCTYPE html>") is None
+    assert sniff_format(b" <html>") is None
     assert sniff_format(b"<html lang='en'>") == "html"
     assert sniff_format(b"GIF89a") is None
     assert sniff_format(None) is None
@@ -569,19 +574,20 @@ def test_spark_interleaved_pipeline_matches_fixture(spark, interleaved_corpus):
         assert got[doc_id] == _expected_for(doc_id, text), doc_id
 
 
-def test_spark_interleaved_parallelism_invariance(spark, interleaved_corpus):
+def test_spark_interleaved_parallelism_invariance(spark, interleaved_corpus, shuffle_partitions):
     from insurance_pdf_extractor_spark.plans.pipeline import extract_documents
     from insurance_pdf_extractor_spark.sources.render import render_documents_raw
 
     docs = interleaved_corpus.select("doc_id", "text").limit(40)
 
     def run(n_part):
-        raw = render_documents_raw(docs, partitions=n_part, interleaved=True)
-        out, _ = extract_documents(raw, presalted=True, partitions=n_part)
-        return sorted(
-            (r["doc_id"], tuple((s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]))
-            for r in out.collect()
-        )
+        with shuffle_partitions(n_part):
+            raw = render_documents_raw(docs, partitions=n_part, interleaved=True)
+            out, _ = extract_documents(raw, presalted=True)
+            return sorted(
+                (r["doc_id"], tuple((s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]))
+                for r in out.collect()
+            )
 
     assert run(2) == run(7)
 
@@ -606,6 +612,34 @@ def test_oversized_html_stays_in_fused_kernel(spark):
     assert len(spans) > 50
     expected = _expected_for(big_id, big_text)
     assert [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans] == expected
+
+
+def test_spark_mixed_case_doctype_extracts(spark):
+    """The plan's prefix classifier agrees with the kernel's
+    sniff_format: a mixed-case doctype page extracts (with or without a
+    stored ``magic`` column), while BOM- or whitespace-prefixed pages
+    are rejected with a reason."""
+    from insurance_pdf_extractor_spark.plans.pipeline import extract_documents
+
+    page = b"<!Doctype html><html><body><p>Policy number QX-1.</p></body></html>"
+    rows = [
+        ("mixed-case", page),
+        ("bom", b"\xef\xbb\xbf" + page.upper()),
+        ("space", b" " + page),
+    ]
+    schema = "doc_id string, content binary, media array<struct<media_ref:string,offset:int>>, n_pages int, size_bytes long"
+    for with_magic in (False, True):
+        data = [(d, bytearray(c), [], 1, len(c)) for d, c in rows]
+        if with_magic:
+            data = [r + (bytearray(r[1][:5]),) for r in data]
+        raw = spark.createDataFrame(data, schema + (", magic binary" if with_magic else ""))
+        docs, rejects = extract_documents(raw)
+        spans = {r["doc_id"]: [s["text"] for s in r["spans"]] for r in docs.collect()}
+        assert spans == {"mixed-case": ["Policy number QX-1."]}, with_magic
+        assert {r["doc_id"]: r["reject_reason"] for r in rejects.collect()} == {
+            "bom": "invalid_pdf",
+            "space": "invalid_pdf",
+        }
 
 
 def test_field_extraction_equal_across_formats(spark):

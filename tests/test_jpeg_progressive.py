@@ -118,6 +118,10 @@ def test_malformed_progressive_raises_valueerror():
     sos = good.find(b"\xff\xda")
     with pytest.raises(ValueError):
         decode_jpeg(good[:sos] + b"\xff\xd9")
+    # Ah=14 in the first scan header: T.81 G.1.1.1.2 caps Ah at 13
+    ahal = sos + 5 + 2 * good[sos + 4] + 2
+    with pytest.raises(ValueError):
+        decode_jpeg(good[:ahal] + bytes([14 << 4]) + good[ahal + 1 :])
 
 
 def test_hostile_mutation_sweep():

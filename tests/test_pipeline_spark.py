@@ -1,6 +1,6 @@
 """End-to-end Spark pipeline tests: span-sequence equality vs corpus
-ground truth, reject routing, sharded-path equivalence, and
-partitioning invariance."""
+ground truth, reject routing, sharded-path equivalence, partitioning
+invariance, and the two entry points' agreement."""
 
 from __future__ import annotations
 
@@ -8,16 +8,21 @@ import pytest
 from pyspark.sql import functions as F
 
 from insurance_pdf_extractor_spark import corpus as C
-from insurance_pdf_extractor_spark.plans.pipeline import build_results, extract_documents
-from insurance_pdf_extractor_spark.schema import DOCUMENTS
+from insurance_pdf_extractor_spark.plans.pipeline import (
+    build_results,
+    extract_documents,
+    extract_results,
+)
+from insurance_pdf_extractor_spark.schema import DOCUMENTS, DOCUMENTS_RAW
 
 
 @pytest.fixture(scope="module")
-def pipeline_out(spark, corpus_docs):
+def pipeline_out(spark, corpus_docs, shuffle_partitions):
     raw = C.to_raw_df(spark, corpus_docs)
-    docs, rejects = extract_documents(
-        raw, max_size_bytes=60_000, shard_size_bytes=8_192, shard_pages=4, partitions=4
-    )
+    with shuffle_partitions(4):
+        docs, rejects = extract_documents(
+            raw, max_size_bytes=60_000, shard_size_bytes=8_192, shard_pages=4
+        )
     return raw, docs.cache(), rejects.cache()
 
 
@@ -57,29 +62,32 @@ def test_rejects_routed(pipeline_out, corpus_docs):
     assert rejects.filter(F.col("status") != "error").count() == 0
 
 
-def test_sharded_path_used_and_equivalent(spark, corpus_docs):
+def test_sharded_path_used_and_equivalent(spark, corpus_docs, shuffle_partitions):
     """Big docs go through shard→merge and must produce identical spans
     to the fused path."""
     big = [d for d in corpus_docs if d.n_pages >= 10 and d.expected_spans is not None][:5]
     assert big
     raw = C.to_raw_df(spark, big)
-    sharded, _ = extract_documents(raw, shard_size_bytes=1, shard_pages=3, partitions=2)
-    fused, _ = extract_documents(raw, shard_size_bytes=10**9, partitions=2)
-    a = {r["doc_id"]: r["spans"] for r in sharded.collect()}
-    b = {r["doc_id"]: r["spans"] for r in fused.collect()}
+    with shuffle_partitions(2):
+        sharded, _ = extract_documents(raw, shard_size_bytes=1, shard_pages=3)
+        fused, _ = extract_documents(raw, shard_size_bytes=10**9)
+        a = {r["doc_id"]: r["spans"] for r in sharded.collect()}
+        b = {r["doc_id"]: r["spans"] for r in fused.collect()}
     assert a == b
 
 
-def test_parallelism_invariance(spark, corpus_docs):
+def test_parallelism_invariance(spark, corpus_docs, shuffle_partitions):
     """Identical output at different partition counts (north rule: all
     ordering derives from data, never task order)."""
     sample = [d for d in corpus_docs if d.expected_spans is not None][:40]
     raw = C.to_raw_df(spark, sample)
-    out1, _ = extract_documents(raw, partitions=1)
-    out8, _ = extract_documents(raw, partitions=8)
-    rows1 = {r["doc_id"]: r["spans"] for r in out1.collect()}
-    rows8 = {r["doc_id"]: r["spans"] for r in out8.collect()}
-    assert rows1 == rows8
+
+    def spans_at(n_part):
+        with shuffle_partitions(n_part):
+            out, _ = extract_documents(raw)
+            return {r["doc_id"]: r["spans"] for r in out.collect()}
+
+    assert spans_at(1) == spans_at(8)
 
 
 def test_records_match_oracle(pipeline_out, corpus_docs):
@@ -110,28 +118,25 @@ def test_documents_schema(pipeline_out):
     assert docs.schema == DOCUMENTS or [f.name for f in docs.schema.fields] == ["doc_id", "spans"]
 
 
-def test_extract_results_parallelism_invariant(spark, corpus_docs):
+def test_extract_results_parallelism_invariant(spark, corpus_docs, shuffle_partitions):
     """The single-pass plan emits identical rows at different partition
     counts (north rule: all ordering data-derived)."""
-    from insurance_pdf_extractor_spark.plans.pipeline import extract_results
-    from insurance_pdf_extractor_spark import corpus as C
-
     raw = C.to_raw_df(spark, corpus_docs[:40])
 
     def snapshot(partitions):
-        res = extract_results(raw, partitions=partitions)
-        rows = res.select("doc_id", "status", "extracted_data", "warnings", "file_size").collect()
+        with shuffle_partitions(partitions):
+            res = extract_results(raw)
+            rows = res.select("doc_id", "status", "extracted_data", "warnings", "file_size").collect()
         return sorted((r["doc_id"], r["status"], r["extracted_data"], tuple(r["warnings"] or []), r["file_size"]) for r in rows)
 
     assert snapshot(2) == snapshot(16)
 
 
-def test_materialized_source_value_identical(spark, corpus_docs):
+def test_materialized_source_value_identical(spark, corpus_docs, shuffle_partitions):
     """materialized_source changes only WHERE the branches read from
     (one cached materialization vs per-branch re-execution of a
     computed source) — never the rows. Compare full results frames."""
-    from insurance_pdf_extractor_spark.plans.pipeline import extract_results, materialized_source
-    from insurance_pdf_extractor_spark import corpus as C
+    from insurance_pdf_extractor_spark.plans.pipeline import materialized_source
 
     raw = C.to_raw_df(spark, corpus_docs[:40])
 
@@ -144,12 +149,45 @@ def test_materialized_source_value_identical(spark, corpus_docs):
             for r in rows
         )
 
-    base = snapshot(extract_results(raw, partitions=4))
-    with materialized_source(raw) as shared_raw:
-        shared = snapshot(extract_results(shared_raw, partitions=4))
-        # the branches must actually read the cache, not re-plan around it
-        plan = extract_results(shared_raw, partitions=4)._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan
+    with shuffle_partitions(4):
+        base = snapshot(extract_results(raw))
+        with materialized_source(raw) as shared_raw:
+            shared = snapshot(extract_results(shared_raw))
+            # the branches must actually read the cache, not re-plan around it
+            plan = extract_results(shared_raw)._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+            )
+            assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan
     assert base == shared
+
+
+@pytest.mark.parametrize("n_part", [1, 8])
+@pytest.mark.parametrize("presalted", [False, True])
+def test_entry_points_share_one_plan(spark, corpus_docs, shuffle_partitions, presalted, n_part):
+    """extract_results is build_results over extract_documents' accepted
+    documents plus one stub per extract_documents reject, salted or
+    presalted, at any partition count."""
+    rejected_docs = [d for d in corpus_docs if d.n_pages == 0 or len(d.content) > 60_000]
+    accepted_docs = [d for d in corpus_docs if d not in rejected_docs][:24]
+    rows = C.raw_rows(rejected_docs + accepted_docs) + [("not-a-format", b"GIF89a....", [], 1, 10)]
+    raw = spark.createDataFrame(rows, DOCUMENTS_RAW)
+    opts = dict(max_size_bytes=60_000, shard_size_bytes=8_192, shard_pages=4, presalted=presalted)
+
+    def by_doc(df):
+        return {r["doc_id"]: r.asDict(recursive=True) for r in df.collect()}
+
+    with shuffle_partitions(n_part):
+        docs, rejects = extract_documents(raw, **opts)
+        expected = by_doc(build_results(docs, raw=raw))
+        results = by_doc(extract_results(raw, **opts))
+        rejected = {r["doc_id"]: r for r in rejects.collect()}
+
+    assert {"size_exceeds_limit", "invalid_pdf", "no_pages"} <= {r["reject_reason"] for r in rejected.values()}
+    assert set(results) == set(expected) | set(rejected)
+    for doc_id, row in expected.items():
+        assert {k: results[doc_id][k] for k in row} == row, doc_id
+    for doc_id, rej in rejected.items():
+        stub = results[doc_id]
+        assert (stub["status"], stub["file_size"], stub["warnings"]) == (
+            "error", rej["size_bytes"], [f"rejected: {rej['reject_reason']}"]
+        ), doc_id

@@ -373,7 +373,7 @@ def expected_html_spans(
         if (i + 1) % _HTML_MEDIA_EVERY == 0:
             k = (i + 1) // _HTML_MEDIA_EVERY - 1
             ref = f"media:{_esc_h(doc_id)}/{k}"
-            kk = k + int(hashlib.md5(doc_id.encode(cs, "replace")).hexdigest()[20:22], 16)
+            kk = k + int(hashlib.md5(doc_id.encode("utf-8")).hexdigest()[20:22], 16)
             if kk % 3 == 0:
                 mtag = f'<img src="{ref}" alt="exhibit {k}">'
                 m_off = len("<figure>")  # the <img byte
@@ -457,7 +457,7 @@ def fx_html_bytes(doc_id: str, text: str) -> bytes:
         if (i + 1) % _HTML_MEDIA_EVERY == 0:
             k = (i + 1) // _HTML_MEDIA_EVERY - 1
             ref = f"media:{_esc_h(doc_id)}/{k}"
-            kk = k + int(hashlib.md5(doc_id.encode(cs, "replace")).hexdigest()[20:22], 16)
+            kk = k + int(hashlib.md5(doc_id.encode("utf-8")).hexdigest()[20:22], 16)
             if kk % 3 == 0:
                 mtag = f'<img src="{ref}" alt="exhibit {k}">'
             elif kk % 3 == 1:
