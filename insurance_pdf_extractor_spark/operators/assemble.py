@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from ..schema import SPAN
 from .boilerplate import strip_boilerplate
+from .filters import decode_or_poison
 from .html import extract_html, sniff_format
 from .layout import layout_lines
 from .tokenize import tokenize_content
@@ -119,21 +120,7 @@ def decode_filters_udf(content: pd.Series) -> pd.Series:
     extra Arrow round trip. A budget-cap bomb poisons the document
     text-free (empty content → one empty shard → media-only spans),
     matching the small-doc path's poison rule."""
-    from .filters import decode_content_filters
-
-    out = []
-    for c in content:
-        if c is None:
-            out.append(None)
-            continue
-        b = bytes(c)
-        if b"stream" in b and (b"/Filter" in b or b"/ObjStm" in b):
-            try:
-                b = decode_content_filters(b)
-            except ValueError:
-                b = b""
-        out.append(b)
-    return pd.Series(out)
+    return pd.Series([None if c is None else decode_or_poison(bytes(c)) for c in content])
 
 
 def shard_content(content: bytes, pages_per_shard: int) -> list[tuple[int, bytes, int, int]]:

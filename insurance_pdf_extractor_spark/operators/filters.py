@@ -34,6 +34,20 @@ dirty-corpus behavior):
   (contributes no text) and the rest of the document still extracts,
   which is exactly what the reference's pypdf does per stream.
 
+One of each, shared by every caller:
+
+- :func:`read_stream_object` reads one stream object (dict, payload,
+  end); the buffer rewrite and the font layer's ToUnicode lookup
+  (operators/fonts.py) both read through it;
+- :func:`_rewrite_stream_objects` is the one walk over a buffer's
+  objects; the ObjStm/XRef pre-pass and the filter pass are each a
+  small per-stream rewrite on top of it;
+- :func:`png_unfilter` is the one PNG row unfilter, used by the
+  §7.4.4.4 predictors here and by the PNG image decoder
+  (operators/multimodal.py);
+- :func:`decode_or_poison` is the one entry the kernels call
+  (tokenize, the shard path's decode UDF, the S3 info scan).
+
 Decode rides the scan: this is pure per-document Python called from
 inside the existing Arrow kernels (tokenize / shard), map-side, no
 plan change — at 100 TB decompression is embarrassingly parallel and
@@ -44,6 +58,8 @@ from __future__ import annotations
 
 import re
 import zlib
+
+import numpy as np
 
 # Per-document decoded-output budget. Matches the spirit of the 10 MB
 # raw-size cap (constants.MAX_FILE_SIZE_BYTES) with generous headroom
@@ -79,6 +95,10 @@ class StreamBombError(ValueError):
     """Decoded output exceeded the per-document budget (resource
     attack). Subclasses ValueError so callers that poison on
     ValueError need no new handling."""
+
+
+class _Unsupported(Exception):
+    """A legal filter this module does not decode (DCTDecode …)."""
 
 
 # ---------------------------------------------------------------------------
@@ -392,16 +412,24 @@ def encode_chain(data: bytes, names: tuple[str, ...]) -> bytes:
     return data
 
 
+def _filter_entries(names: tuple[str, ...]) -> str:
+    """The `` /Filter … /DecodeParms …`` dict entries that declare the
+    filter chain ``names`` (render side; ``""`` for no filter)."""
+    if not names:
+        return ""
+    bases = [_split_predictor(n)[0] for n in names]
+    preds = [p for n in names if (p := _split_predictor(n)[1]) is not None]
+    f = f"/{bases[0]}" if len(bases) == 1 else "[ " + " ".join("/" + n for n in bases) + " ]"
+    parms = f" /DecodeParms << /Predictor {preds[0]} /Columns 1 >>" if preds else ""
+    return f" /Filter {f}{parms}"
+
+
 def stream_object_bytes(data: bytes, names: tuple[str, ...], obj_num: int = 2) -> bytes:
     """Wrap ``data`` as an indirect stream object with the given filter
     chain — the render-side counterpart of the decoder's splice
     contract (decode(wrap(data)) drops the wrapper exactly)."""
     enc = encode_chain(data, names)
-    bases = [_split_predictor(n)[0] for n in names]
-    preds = [p for n in names if (p := _split_predictor(n)[1]) is not None]
-    f = f"/{bases[0]}" if len(bases) == 1 else "[ " + " ".join("/" + n for n in bases) + " ]"
-    parms = f" /DecodeParms << /Predictor {preds[0]} /Columns 1 >>" if preds else ""
-    head = f"{obj_num} 0 obj\n<< /Length {len(enc)} /Filter {f}{parms} >>\nstream\n".encode()
+    head = f"{obj_num} 0 obj\n<< /Length {len(enc)}{_filter_entries(names)} >>\nstream\n".encode()
     return head + enc + b"\nendstream\nendobj\n"
 
 
@@ -506,66 +534,86 @@ def _parse_decode_parms(d: bytes) -> dict[bytes, int] | None:
     return out or None
 
 
+def _lane_cumsum(rows: np.ndarray, bpp: int) -> np.ndarray:
+    """The Sub recurrence ``x[i] += x[i - bpp]`` over every row of
+    ``rows`` at once: one mod-256 cumsum per byte lane."""
+    h, w = rows.shape
+    return rows.reshape(h, w // bpp, bpp).cumsum(axis=1, dtype=np.uint8).reshape(h, w)
+
+
+def png_unfilter(data: bytes, row_w: int, bpp: int) -> np.ndarray:
+    """Undo PNG row filtering over a whole buffer of ``1 + row_w``-byte
+    rows, each led by its filter tag (the tag in the data wins):
+    ``(rows, row_w)`` uint8. None and Sub rows read no other row, so
+    they run vectorized across the buffer; each run of Up rows is one
+    column cumsum on top of the row above the run; Average and Paeth
+    rows read their own left neighbours and run one sequential loop per
+    row. Raises ``ValueError`` on a truncated row or a tag above 4."""
+    if len(data) % (row_w + 1):
+        raise ValueError("PNG unfilter: truncated row")
+    rows = np.frombuffer(data, np.uint8).reshape(-1, row_w + 1)
+    tags = rows[:, 0]
+    if tags.size and tags.max() > 4:
+        raise ValueError(f"PNG unfilter: bad filter tag {tags.max()}")
+    out = rows[:, 1:].copy()
+    sub = np.flatnonzero(tags == 1)
+    if sub.size:
+        out[sub] = _lane_cumsum(out[sub], bpp)
+    # rows that read the row above, in order: (start, end) per Up run,
+    # (row, row + 1) per Average/Paeth row
+    up = np.concatenate(([False], tags == 2, [False]))
+    edges = np.flatnonzero(up[1:] != up[:-1]).tolist()
+    steps = list(zip(edges[0::2], edges[1::2]))
+    steps += [(r, r + 1) for r in np.flatnonzero(tags > 2).tolist()]
+    for r, end in sorted(steps):
+        prev = out[r - 1] if r else np.zeros(row_w, np.uint8)
+        if tags[r] == 2:  # Up: uint8 adds wrap mod 256
+            out[r:end] = np.cumsum(out[r:end], axis=0, dtype=np.uint8) + prev
+            continue
+        row, above, avg = bytearray(out[r].tobytes()), prev.tobytes(), tags[r] == 3
+        for i in range(row_w):
+            a = row[i - bpp] if i >= bpp else 0
+            if avg:  # Average
+                row[i] = (row[i] + ((a + above[i]) >> 1)) & 0xFF
+                continue
+            b = above[i]  # Paeth
+            c = above[i - bpp] if i >= bpp else 0
+            p = a + b - c
+            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+            pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+            row[i] = (row[i] + pred) & 0xFF
+        out[r] = np.frombuffer(row, np.uint8)
+    return out
+
+
 def apply_predictor(data: bytes, predictor: int, columns: int = 1, colors: int = 1, bpc: int = 8) -> bytes:
     """Undo a §7.4.4.4 predictor on decompressed bytes. Predictor 1 is
-    identity, 2 is TIFF horizontal differencing, ≥10 is PNG (the row's
-    leading filter byte selects None/Sub/Up/Average/Paeth per row —
-    the tag in the DATA wins, not the dict value, per spec)."""
+    identity, 2 is TIFF horizontal differencing (the Sub recurrence per
+    row, no tag bytes; a short final row is undone as far as it goes),
+    ≥10 is PNG (:func:`png_unfilter`)."""
     if predictor <= 1:
         return data
     if bpc != 8:
         raise ValueError(f"predictor with BitsPerComponent={bpc} not supported")
-    stride = colors  # bytes per pixel at 8 bpc
-    row_w = columns * colors
+    row_w = columns * colors  # bytes per row at 8 bpc
     if row_w <= 0:
         raise ValueError("predictor with non-positive Columns")
     if predictor == 2:
-        out = bytearray(data)
-        n = len(out)
-        for r0 in range(0, n, row_w):
-            end = min(r0 + row_w, n)
-            for i in range(r0 + stride, end):
-                out[i] = (out[i] + out[i - stride]) & 0xFF
-        return bytes(out)
+        n = len(data)
+        if colors >= n:  # no byte has a left neighbour in its lane
+            return data
+        # zero-pad the short final row to a whole row (padding past a
+        # prefix sum never changes the bytes before it); a row wider
+        # than the data is one short row
+        row_w = min(row_w, -(-n // colors) * colors)
+        buf = np.zeros(-(-n // row_w) * row_w, np.uint8)
+        buf[:n] = np.frombuffer(data, np.uint8)
+        return _lane_cumsum(buf.reshape(-1, row_w), colors).tobytes()[:n]
     if predictor < 10 or predictor > 15:
         raise ValueError(f"unknown predictor {predictor}")
-    # PNG: each stored row is 1 filter byte + row_w data bytes
-    out = bytearray()
-    prev = bytearray(row_w)
-    pos = 0
-    n = len(data)
-    while pos < n:
-        if pos + 1 + row_w > n:
-            raise ValueError("predictor: truncated row")
-        ftype = data[pos]
-        row = bytearray(data[pos + 1 : pos + 1 + row_w])
-        pos += 1 + row_w
-        if ftype == 0:
-            pass
-        elif ftype == 1:  # Sub
-            for i in range(stride, row_w):
-                row[i] = (row[i] + row[i - stride]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(row_w):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(row_w):
-                left = row[i - stride] if i >= stride else 0
-                row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(row_w):
-                a = row[i - stride] if i >= stride else 0
-                b = prev[i]
-                c = prev[i - stride] if i >= stride else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                row[i] = (row[i] + pred) & 0xFF
-        else:
-            raise ValueError(f"predictor: bad PNG filter byte {ftype}")
-        out += row
-        prev = row
-    return bytes(out)
+    if not data:
+        return data
+    return png_unfilter(data, row_w, colors).tobytes()
 
 
 def encode_predictor(data: bytes, predictor: int, columns: int = 1, colors: int = 1) -> bytes:
@@ -636,13 +684,29 @@ def _consume_eol(buf: bytes, i: int) -> int:
     return i
 
 
-def _locate_payload(content: bytes, d: bytes, j: int) -> tuple[bytes, int] | None:
-    """Payload bytes and end index (past ``endstream``/``endobj`` plus
-    one EOL) of the stream whose dict is ``d`` and whose data begins at
-    ``j``. ``/Length`` wins when direct (or resolvable as an indirect
-    integer object via a linear scan — no xref needed) and truthful;
-    otherwise scan for the ``endstream`` keyword (the pypdf fallback).
-    Returns ``None`` on hopeless truncation (no ``endstream``)."""
+def read_stream_object(content: bytes, start: int) -> tuple[bytes, bytes | None, int] | None:
+    """Read the object body that follows an ``N G obj`` header ending at
+    ``start``: ``(dict, payload, end)``, ``end`` being past
+    ``endstream``/``endobj`` plus one EOL. The EOL after the ``stream``
+    keyword may be CRLF, LF or a lone CR. ``/Length`` wins when direct
+    (or resolvable as an indirect integer object via a linear scan — no
+    xref needed) and truthful; otherwise scan for the ``endstream``
+    keyword (the pypdf fallback). ``payload`` is None when the dict is
+    not followed by ``stream`` (``end`` is then the dict's end) or when
+    no ``endstream`` follows (hopeless truncation: ``end`` is the end of
+    ``content``). None when no complete ``<<…>>`` dict starts there."""
+    i = _skip_ws(content, start)
+    if content[i : i + 2] != b"<<":
+        return None
+    try:
+        dend = _dict_extent(content, i)
+    except ValueError:
+        return None
+    d = content[i:dend]
+    j = _skip_ws(content, dend)
+    if content[j : j + 6] != b"stream":
+        return d, None, dend
+    j = _consume_eol(content, j + 6)
     n = len(content)
     data: bytes | None = None
     end = -1
@@ -670,7 +734,7 @@ def _locate_payload(content: bytes, d: bytes, j: int) -> tuple[bytes, int] | Non
     if data is None:
         e = content.find(b"endstream", j)
         if e == -1:
-            return None
+            return d, None, n
         data = content[j:e]
         if data.endswith(b"\r\n"):
             data = data[:-2]
@@ -680,7 +744,7 @@ def _locate_payload(content: bytes, d: bytes, j: int) -> tuple[bytes, int] | Non
     k2 = _skip_ws(content, end)
     if content[k2 : k2 + 6] == b"endobj":
         end = k2 + 6
-    return data, _consume_eol(content, end)
+    return d, data, _consume_eol(content, end)
 
 
 def _decode_stream_data(data: bytes, d: bytes, budget: int) -> bytes:
@@ -718,22 +782,16 @@ def _decode_stream_data(data: bytes, d: bytes, budget: int) -> bytes:
     return decoded
 
 
-def decode_content_filters(content: bytes, max_decoded: int = MAX_DECODED_BYTES) -> bytes:
-    """Rewrite ``content``, replacing every filtered stream object with
-    its decoded payload (see module docstring for the splice and error
-    contracts). PDF-1.5 compressed-object containers are normalized
-    first: ``/Type /ObjStm`` streams expand to classic ``N 0 obj …
-    endobj`` objects and ``/Type /XRef`` streams (binary cross-reference
-    rows a linear-scan reader never consults) drop whole. Buffers
-    without any of the trigger substrings return unchanged — the
-    caller's cheap guards keep the plain-corpus fast path at literally
-    zero cost."""
-    if b"stream" not in content:
-        return content
-    if b"/ObjStm" in content or b"/XRef" in content:
-        content = _expand_object_streams(content, max_decoded)
-    if b"/Filter" not in content:
-        return content
+def _rewrite_stream_objects(content: bytes, rewrite, max_decoded: int) -> bytes:
+    """The one walk over a buffer's indirect objects. Each stream
+    object's ``(dict, payload)`` goes to ``rewrite`` with the remaining
+    budget; it returns the bytes that replace the whole object (header
+    through ``endobj`` plus one EOL) or None to keep the object as it
+    is. A rewrite that fails on ordinary dirt (``ValueError``,
+    ``_Unsupported``) replaces the object with nothing; a
+    ``StreamBombError`` propagates. Non-stream objects pass through;
+    a stream with no ``endstream`` ends the walk with the rest of the
+    buffer untouched."""
     out: list[bytes] = []
     pos = 0
     budget = max_decoded
@@ -742,58 +800,70 @@ def decode_content_filters(content: bytes, max_decoded: int = MAX_DECODED_BYTES)
         if m is None:
             out.append(content[pos:])
             break
-        i = _skip_ws(content, m.end())
-        if content[i : i + 2] != b"<<":
+        obj = read_stream_object(content, m.end())
+        if obj is None:
             out.append(content[pos : m.end()])
             pos = m.end()
             continue
-        try:
-            dend = _dict_extent(content, i)
-        except ValueError:
-            out.append(content[pos : m.end()])
-            pos = m.end()
-            continue
-        d = content[i:dend]
-        j = _skip_ws(content, dend)
-        if content[j : j + 6] != b"stream":
-            # non-stream object (info dict etc.): emit through and
-            # continue scanning right after its dict
-            out.append(content[pos:dend])
-            pos = dend
-            continue
-        j = _consume_eol(content, j + 6)
-        loc = _locate_payload(content, d, j)
-        if loc is None:
-            # hopeless truncation: emit the rest untouched
-            out.append(content[pos:])
-            break
-        data, end = loc
-
-        if _parse_filters(d) is None:
-            # unfiltered stream object: pass through untouched
+        d, data, end = obj
+        new = None
+        if data is not None:
+            try:
+                new = rewrite(d, data, budget)
+            except StreamBombError:
+                raise
+            except (ValueError, _Unsupported):
+                new = b""
+        if new is None:
+            # kept: resume past the object (past a payload, binary
+            # bytes never alias an object header)
             out.append(content[pos:end])
-            pos = end
-            continue
-        try:
-            decoded = _decode_stream_data(data, d, budget)
-        except StreamBombError:
-            raise
-        except _Unsupported:
-            # legal-but-unsupported (DCTDecode image XObjects, JBIG2,
-            # Crypt, …): this object yields no text
-            decoded = b""
-        except ValueError:
-            # corrupt payload under a supported filter: per-stream skip
-            decoded = b""
-        budget -= len(decoded)
-        out.append(content[pos : m.start()])
-        out.append(decoded)
+        else:
+            budget -= len(new)
+            out.append(content[pos : m.start()])
+            out.append(new)
         pos = end
     return b"".join(out)
 
 
-class _Unsupported(Exception):
-    pass
+def _decode_filtered(d: bytes, data: bytes, budget: int) -> bytes | None:
+    """Filter pass: a filtered stream object becomes its decoded
+    payload; an unfiltered one is kept."""
+    if _parse_filters(d) is None:
+        return None
+    return _decode_stream_data(data, d, budget)
+
+
+def decode_content_filters(content: bytes, max_decoded: int = MAX_DECODED_BYTES) -> bytes:
+    """Rewrite ``content``, replacing every filtered stream object with
+    its decoded payload (see module docstring for the splice and error
+    contracts). PDF-1.5 compressed-object containers are normalized
+    first (:func:`_expand_container`), so indirect ``/Length`` integers
+    stored inside an ObjStm resolve against the expanded buffer.
+    Buffers without any of the trigger substrings return unchanged."""
+    if b"stream" not in content:
+        return content
+    if b"/ObjStm" in content or b"/XRef" in content:
+        content = _rewrite_stream_objects(content, _expand_container, max_decoded)
+    if b"/Filter" not in content:
+        return content
+    return _rewrite_stream_objects(content, _decode_filtered, max_decoded)
+
+
+def decode_or_poison(content: bytes) -> bytes:
+    """The one entry the kernels call: the plain buffer of ``content``,
+    or ``b""`` when decoding poisons the document (a budget-cap bomb
+    raises ``ValueError``; the caller yields it text-free, the
+    hostile-media poison-row rule). The C-level substring trigger keeps
+    the plain corpus at zero added cost. ``decode_content_filters`` is
+    looked up at call time, so a wrapper bound to this module's name
+    sees every call."""
+    if b"stream" in content and (b"/Filter" in content or b"/ObjStm" in content):
+        try:
+            return decode_content_filters(content)
+        except ValueError:
+            return b""
+    return content
 
 
 # ---------------------------------------------------------------------------
@@ -855,66 +925,15 @@ def _emit_objstm_objects(payload: bytes, d: bytes) -> bytes:
     return b"".join(out)
 
 
-def _expand_object_streams(content: bytes, max_decoded: int = MAX_DECODED_BYTES) -> bytes:
-    """Pre-pass: expand ``/Type /ObjStm`` streams in place, drop
-    ``/Type /XRef`` streams, pass everything else through untouched
-    (ordinary filtered streams are the second pass's job). Runs BEFORE
-    the filter pass so indirect ``/Length`` integers stored inside an
-    ObjStm resolve against the expanded buffer."""
-    out: list[bytes] = []
-    pos = 0
-    budget = max_decoded
-    while True:
-        m = _OBJ_HDR.search(content, pos)
-        if m is None:
-            out.append(content[pos:])
-            break
-        i = _skip_ws(content, m.end())
-        if content[i : i + 2] != b"<<":
-            out.append(content[pos : m.end()])
-            pos = m.end()
-            continue
-        try:
-            dend = _dict_extent(content, i)
-        except ValueError:
-            out.append(content[pos : m.end()])
-            pos = m.end()
-            continue
-        d = content[i:dend]
-        j = _skip_ws(content, dend)
-        if content[j : j + 6] != b"stream":
-            out.append(content[pos:dend])
-            pos = dend
-            continue
-        j = _consume_eol(content, j + 6)
-        loc = _locate_payload(content, d, j)
-        if loc is None:
-            out.append(content[pos:])
-            break
-        data, end = loc
-        if _TYPE_XREF.search(d) is not None:
-            # xref stream: no content for a sequential reader
-            out.append(content[pos : m.start()])
-            pos = end
-            continue
-        if _TYPE_OBJSTM.search(d) is None:
-            # ordinary stream object: pass through, payload and all
-            # (skipping past the payload keeps binary bytes from
-            # aliasing an object header)
-            out.append(content[pos:end])
-            pos = end
-            continue
-        try:
-            expanded = _emit_objstm_objects(_decode_stream_data(data, d, budget), d)
-        except StreamBombError:
-            raise
-        except (ValueError, _Unsupported):
-            expanded = b""
-        budget -= len(expanded)
-        out.append(content[pos : m.start()])
-        out.append(expanded)
-        pos = end
-    return b"".join(out)
+def _expand_container(d: bytes, data: bytes, budget: int) -> bytes | None:
+    """ObjStm/XRef pre-pass: an ``/Type /ObjStm`` stream expands to its
+    objects, an ``/Type /XRef`` stream drops whole, anything else is
+    kept (ordinary filtered streams are the filter pass's job)."""
+    if _TYPE_XREF.search(d) is not None:
+        return b""
+    if _TYPE_OBJSTM.search(d) is None:
+        return None
+    return _emit_objstm_objects(_decode_stream_data(data, d, budget), d)
 
 
 def objstm_object_bytes(
@@ -938,18 +957,10 @@ def objstm_object_bytes(
     header = (" ".join(f"{n} {o}" for (n, _b), o in zip(objects, offs)) + "\n").encode()
     payload = header + b"\n".join(bodies) + b"\n"
     first = len(header)
-    enc = encode_chain(payload, names) if names else payload
-    fpart = ""
-    if names:
-        bases = [_split_predictor(n)[0] for n in names]
-        preds = [p for n in names if (p := _split_predictor(n)[1]) is not None]
-        f = f"/{bases[0]}" if len(bases) == 1 else "[ " + " ".join("/" + n for n in bases) + " ]"
-        fpart = f" /Filter {f}"
-        if preds:
-            fpart += f" /DecodeParms << /Predictor {preds[0]} /Columns 1 >>"
+    enc = encode_chain(payload, names)
     head = (
         f"{obj_num} 0 obj\n<< /Type /ObjStm /N {len(objects)} /First {first} "
-        f"/Length {len(enc)}{fpart} >>\nstream\n"
+        f"/Length {len(enc)}{_filter_entries(names)} >>\nstream\n"
     ).encode()
     return head + enc + b"\nendstream\nendobj\n"
 

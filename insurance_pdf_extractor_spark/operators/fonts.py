@@ -54,8 +54,7 @@ from .filters import (
     StreamBombError,
     _decode_stream_data,
     _dict_extent,
-    _locate_payload,
-    _skip_ws,
+    read_stream_object,
 )
 
 _SP = r"[ \t\r\n\f\x00]"
@@ -487,26 +486,10 @@ def _tounicode_map(
         tu = orphans[len(assigned)] if len(assigned) < len(orphans) else None
         assigned[objnum] = tu
         return tu
-    i = _skip_ws(orig, hdr.end())
-    if orig[i : i + 2] != b"<<":
+    obj = read_stream_object(orig, hdr.end())
+    if obj is None or obj[1] is None:
         return None
-    try:
-        dend = _dict_extent(orig, i)
-    except ValueError:
-        return None
-    d = orig[i:dend]
-    j = _skip_ws(orig, dend)
-    if orig[j : j + 6] != b"stream":
-        return None
-    j += 6
-    if orig[j : j + 2] == b"\r\n":
-        j += 2
-    elif orig[j : j + 1] == b"\n":
-        j += 1
-    located = _locate_payload(orig, d, j)
-    if located is None:
-        return None
-    data, _end = located
+    d, data, _end = obj
     try:
         payload = _decode_stream_data(data, d, budget)
         return parse_cmap(payload)

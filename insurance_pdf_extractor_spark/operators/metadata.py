@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .filters import decode_or_poison
 from .layout import layout_lines
 from .tokenize import (
     _FLAT,
@@ -151,22 +152,14 @@ def pdf_info(content: bytes | None) -> dict:
 
     Filtered / PDF-1.5 documents (compressed content streams, the Info
     dict packed in a ``/Type /ObjStm``) normalize through
-    ``decode_content_filters`` first — like pypdf's ``reader.metadata``
+    ``filters.decode_or_poison`` first — like pypdf's ``reader.metadata``
     resolving compressed objects transparently — so page markers, the
-    preview, and the /Info keys all read from the plain buffer. The
-    substring guards keep the plain corpus at zero added cost;
+    preview, and the /Info keys all read from the plain buffer.
     ``size_bytes``/``size_mb`` always report the RAW file size. A
-    budget-cap bomb (ValueError) poisons the document text-free,
-    mirroring the tokenizer's rule."""
+    budget-cap bomb poisons the document text-free, mirroring the
+    tokenizer's rule."""
     raw = content or b""
-    b = raw
-    if b"stream" in b and (b"/Filter" in b or b"/ObjStm" in b):
-        from .filters import decode_content_filters
-
-        try:
-            b = decode_content_filters(b)
-        except ValueError:
-            b = b""
+    b = decode_or_poison(raw)
     text = b.decode("latin-1")  # one decode feeds both full-doc scans
     info = parse_info_dict(b, text=text)
     marks = page_marker_offsets_text(text)

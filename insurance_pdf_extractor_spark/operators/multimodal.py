@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .filters import png_unfilter
+
 MEDIA_ASSET = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
@@ -135,9 +137,10 @@ def decode_png(payload: bytes) -> np.ndarray:
     """Decode an 8-bit non-interlaced truecolor PNG (color type 2, or
     6 with the alpha channel dropped) to (h, w, 3) uint8 RGB — a real
     decoder over stdlib zlib: chunk walk with CRC verification,
-    multi-IDAT concatenation, and ALL FIVE scanline filters (None/Sub/
-    Up/Average/Paeth; Sub and Up vectorize as per-lane mod-256 cumsum
-    and uint8 wraparound adds, Average/Paeth are inherently sequential
+    multi-IDAT concatenation, and ALL FIVE scanline filters through
+    ``filters.png_unfilter`` — the one PNG unfilter, shared with the PDF
+    stream predictors (None/Sub/Up vectorize over the whole image as
+    mod-256 cumsums, Average/Paeth are inherently sequential
     recurrences). Palette, sub-byte depths, 16-bit, and Adam7 raise
     loudly — poison-row handled by the caller."""
     if len(payload) < 8 or payload[:8] != _PNG_SIG:
@@ -186,36 +189,7 @@ def decode_png(payload: bytes) -> np.ndarray:
         raise ValueError(f"PNG inflate failed: {exc}") from exc
     if len(raw) != expected:
         raise ValueError("PNG pixel data length mismatch")
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        ft = raw[y * (stride + 1)]
-        line = np.frombuffer(raw, np.uint8, stride, y * (stride + 1) + 1)
-        if ft == 0:  # None
-            rec = line.copy()
-        elif ft == 1:  # Sub: recon[x] = filt[x] + recon[x-bpp] — lane cumsum mod 256
-            rec = line.reshape(-1, ch).cumsum(axis=0, dtype=np.uint64).astype(np.uint8).reshape(-1)
-        elif ft == 2:  # Up: uint8 add wraps mod 256
-            rec = line + prev
-        elif ft == 3:  # Average
-            rec = np.empty(stride, np.uint8)
-            for x in range(stride):
-                left = int(rec[x - ch]) if x >= ch else 0
-                rec[x] = (int(line[x]) + ((left + int(prev[x])) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            rec = np.empty(stride, np.uint8)
-            for x in range(stride):
-                a = int(rec[x - ch]) if x >= ch else 0
-                b = int(prev[x])
-                c = int(prev[x - ch]) if x >= ch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                rec[x] = (int(line[x]) + pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter type {ft}")
-        out[y] = rec
-        prev = rec
+    out = png_unfilter(raw, stride, ch)
     img = out.reshape(h, w, ch)
     return np.ascontiguousarray(img[:, :, :3])
 

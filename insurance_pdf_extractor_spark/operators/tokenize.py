@@ -26,6 +26,8 @@ _DELIM = "()<>[]{}/%"
 
 import re
 
+from .filters import decode_or_poison
+
 # master token pattern for finditer: whitespace is NOT an alternative —
 # the regex engine skips it during search at C speed, so the Python
 # loop iterates once per MEANINGFUL token (strings, names, numbers,
@@ -229,21 +231,13 @@ def tokenize_content(content: bytes) -> list[tuple[int, float, float, int, str]]
     if not content:
         return []
     orig = content
-    if b"stream" in content and (b"/Filter" in content or b"/ObjStm" in content):
-        # real-world PDFs ship content streams filtered (FlateDecode
-        # et al.) and, since PDF 1.5, non-stream objects packed in
-        # /Type /ObjStm containers; rewrite both to the plain buffer
-        # first. The substring guards are C-level and keep the
-        # uncompressed corpus fast path at zero added cost. A
-        # decompression bomb (ValueError from the budget cap) poisons
-        # the document text-free, mirroring the hostile-media
-        # poison-row rule.
-        from .filters import decode_content_filters
-
-        try:
-            content = decode_content_filters(content)
-        except ValueError:
-            return []
+    # real-world PDFs ship content streams filtered (FlateDecode et al.)
+    # and, since PDF 1.5, non-stream objects packed in /Type /ObjStm
+    # containers; rewrite both to the plain buffer first. A
+    # decompression bomb poisons the document text-free (b"").
+    content = decode_or_poison(content)
+    if not content:
+        return []
     if b"/Font" in content:
         # real-world text is shown through FONTS whose /Encoding
         # (Differences) or /ToUnicode CMap maps string bytes to

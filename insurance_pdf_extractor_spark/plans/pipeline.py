@@ -151,17 +151,9 @@ def _sharded_spans(big: DataFrame, shard_pages: int) -> DataFrame:
     a per-shard kernel, and a merge per doc_id."""
     # filtered (compressed) oversized docs must be rewritten to plain
     # bytes BEFORE the %%PAGE marker scan and JVM-side slicing (see
-    # decode_filters_udf); the contains() guard keeps plain-corpus
-    # plans from ever invoking the UDF — and only the oversized tail
-    # can pay this extra Arrow round trip at all
-    big = big.withColumn(
-        "content",
-        F.when(
-            F.contains(F.col("content"), F.lit(b"/Filter"))
-            | F.contains(F.col("content"), F.lit(b"/ObjStm")),
-            decode_filters_udf("content"),
-        ).otherwise(F.col("content")),
-    )
+    # decode_filters_udf, which returns plain documents unchanged); only
+    # the oversized tail pays this extra Arrow round trip
+    big = big.withColumn("content", decode_filters_udf("content"))
     # offsets-only sharding: bytes cross Arrow into Python once (marker
     # scan), chunks are sliced JVM-side INSIDE the transform that feeds
     # the explode. Slicing before the Generate matters: exploding

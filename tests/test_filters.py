@@ -118,6 +118,51 @@ def test_predictor_hostility():
         encode_predictor(b"abc", 12, columns=2)  # unaligned encode
 
 
+@pytest.mark.parametrize(
+    "columns,colors,tags",
+    [
+        (1, 1, [0, 1, 2, 3, 4, 2, 2, 1, 0, 3, 4, 4]),
+        (1, 3, [4, 2, 2, 3, 1, 0, 2, 4, 3, 2]),
+        (5, 3, [4, 2, 2, 2, 3, 2, 1, 2]),  # an Up run right after a Paeth row
+        (7, 4, [2, 2, 4, 3, 3, 1, 1, 2]),  # an Up run on the first row
+    ],
+)
+def test_predictor_mixed_row_tags(columns, colors, tags):
+    """Writers may pick a PNG filter per row (predictor 15 is the
+    encoder's "optimum" choice); decode follows each row's own tag,
+    whatever the dict says. ``encode_predictor`` writes one tag per
+    stream, so the mixed streams come from the reference filterer."""
+    from png_rows import png_filter_rows
+
+    from insurance_pdf_extractor_spark.operators.filters import apply_predictor
+
+    rng = random.Random(repr((columns, colors, tags)))
+    rows = [bytes(rng.randrange(256) for _ in range(columns * colors)) for _ in tags]
+    enc = png_filter_rows(rows, tags, colors)
+    for predictor in (10, 12, 15):
+        assert apply_predictor(enc, predictor, columns=columns, colors=colors) == b"".join(rows)
+
+
+def test_predictor_zero_rows_and_short_tiff_row():
+    from insurance_pdf_extractor_spark.operators.filters import apply_predictor
+
+    for predictor in (2, 10, 12, 15):
+        assert apply_predictor(b"", predictor, columns=4, colors=3) == b""
+    # TIFF 2 over 6-byte rows (Columns 2 × Colors 3) with a 4-byte final
+    # row: the short row is undone as far as it goes (byte 3 adds byte
+    # 0), sums wrap mod 256
+    data = bytes([200, 100, 50, 200, 200, 200, 1, 2, 3, 255])
+    assert apply_predictor(data, 2, columns=2, colors=3) == bytes(
+        [200, 100, 50, 144, 44, 250, 1, 2, 3, 0]
+    )
+    # a hostile /Columns wider than the data is one short row, not an
+    # allocation of the declared row width
+    assert apply_predictor(data, 2, columns=10**12, colors=3) == apply_predictor(
+        data, 2, columns=4, colors=3
+    )
+    assert apply_predictor(b"", 12, columns=10**12) == b""
+
+
 def test_decode_parms_predictor_through_stream_object():
     # explicit dict form: LZW + TIFF predictor 2, exactly as a PDF
     # writer would emit it
@@ -299,28 +344,38 @@ def test_pipeline_mixed_filters_equivalence(spark):
 
 
 def test_shard_path_decodes_filtered_oversized(spark, shuffle_partitions):
-    """A compressed oversized document forced through the shard path
-    yields the same spans as the plain fused path: decode_filters_udf
-    runs before %%PAGE marker scanning and JVM-side slicing."""
+    """One oversized document per filter mix (plus one PDF-1.5
+    ``objstm_xref`` layout), forced through the shard path, yields the
+    same spans as the fused path over the plain renders:
+    decode_filters_udf runs before %%PAGE marker scanning and JVM-side
+    slicing."""
     from insurance_pdf_extractor_spark.plans.pipeline import extract_documents
 
     long_text = " ".join(f"tok{i % 41} lorem ipsum dolor" for i in range(3000))
     media = [{"media_ref": "m-1", "offset": 5}]
+    layouts = [(mix, "classic") for mix in FILTER_MIX] + [(("FlateDecode",), "objstm_xref")]
 
-    def raw_df(content, n):
+    def raw_df(rows):
         return spark.createDataFrame(
-            [("big1", bytearray(content), media, n, len(content), bytearray(content[:5]))],
+            [(d, bytearray(c), media, n, len(c), bytearray(c[:5])) for d, c, n in rows],
             "doc_id string, content binary, media array<struct<media_ref:string,offset:int>>, "
             "n_pages int, size_bytes long, magic binary",
         )
 
-    comp, n = render_text("big1", long_text, filters=("FlateDecode",))
-    plain, n2 = render_text("big1", long_text)
-    assert n == n2 and n >= 4
+    filtered, plain = [], []
+    for k, (mix, structure) in enumerate(layouts):
+        doc_id = f"big{k}"
+        comp, n = render_text(doc_id, long_text, filters=mix, structure=structure)
+        flat, n2 = render_text(doc_id, long_text)
+        assert n == n2 and n >= 4
+        filtered.append((doc_id, comp, n))
+        plain.append((doc_id, flat, n2))
     with shuffle_partitions(2):
-        sharded, _ = extract_documents(raw_df(comp, n), shard_size_bytes=1, shard_pages=2)
-        fused, _ = extract_documents(raw_df(plain, n2), shard_size_bytes=10**9)
-        assert _span_map(sharded) == _span_map(fused)
+        sharded, _ = extract_documents(raw_df(filtered), shard_size_bytes=1, shard_pages=2)
+        fused, _ = extract_documents(raw_df(plain), shard_size_bytes=10**9)
+        got, want = _span_map(sharded), _span_map(fused)
+    assert len(want) == len(layouts)
+    assert got == want
 
 
 @pytest.mark.parametrize("mix", [m for m in FILTER_MIX if m])

@@ -370,6 +370,44 @@ def test_sharded_runs_equal_fused(encoding):
     assert sorted(merged, key=lambda r: r[3]) == fused
 
 
+def _shard_lines(raw: bytes) -> list[dict]:
+    """The shard path's Python bodies in-process: decode_filters_udf,
+    the %%PAGE split, then shard_lines_udf per shard."""
+    import pandas as pd
+
+    from insurance_pdf_extractor_spark.operators.assemble import (
+        decode_filters_udf,
+        shard_lines_udf,
+    )
+
+    c = decode_filters_udf.func(pd.Series([raw]))[0]
+    shards = shard_spans(c, 2)
+    lines = shard_lines_udf.func(
+        pd.Series([c[:pl] + c[s : s + ln] for _i, s, ln, _bp, pl in shards]),
+        pd.Series([s - pl for _i, s, _ln, _bp, pl in shards]),
+        pd.Series([bp for _i, _s, _ln, bp, _pl in shards]),
+    )
+    return lines.to_dict("records")
+
+
+def test_lone_cr_after_stream_keyword_decodes_tounicode():
+    """CRLF, LF and a lone CR all end the ``stream`` keyword line: the
+    ToUnicode CMap of a cid document written with CR still decodes, so
+    its text extracts exactly like the LF twin's instead of as 2-byte
+    garbage (the font layer reads stream objects through the same
+    reader as the filter splice)."""
+    lf = render_text("crdoc", _TEXT, filters=("FlateDecode",), encoding="cid")[0]
+    n_streams = lf.count(b">>\nstream\n")
+    cr = lf.replace(b">>\nstream\n", b">>\nstream\r")
+    assert n_streams > 1 and cr.count(b">>\nstream\r") == n_streams
+    runs = tokenize_content(lf)
+    assert any(r[4] == "Document crdoc" for r in runs)
+    assert tokenize_content(cr) == runs
+    sharded = _shard_lines(lf)
+    assert len(sharded) > 1
+    assert _shard_lines(cr) == sharded
+
+
 def test_font_after_first_page_is_unshardable():
     c = (
         b"%PDF-1.4\n%%PAGE 0\nBT (x) Tj ET\n"

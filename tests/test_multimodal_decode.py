@@ -220,41 +220,6 @@ def test_frame_sample_into_feature_extraction(spark):
 # --- PNG (stdlib-zlib real codec, new r5) ------------------------------
 
 
-def _png_filter_rows(img, filters, ch=3):
-    """Reference FORWARD filterer (spec direction, the inverse of what
-    decode_png undoes): produce the filtered scanline stream for the
-    given per-row filter types."""
-    h, w, _ = img.shape
-    stride = w * ch
-    flat = img.reshape(h, stride).astype(int)
-    out = bytearray()
-    prev = [0] * stride
-    for y in range(h):
-        row = list(flat[y])
-        ft = filters[y]
-        out.append(ft)
-        for x in range(stride):
-            a = row[x - ch] if x >= ch else 0
-            b = prev[x]
-            c = prev[x - ch] if x >= ch else 0
-            if ft == 0:
-                v = row[x]
-            elif ft == 1:
-                v = row[x] - a
-            elif ft == 2:
-                v = row[x] - b
-            elif ft == 3:
-                v = row[x] - ((a + b) >> 1)
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                v = row[x] - pred
-            out.append(v & 0xFF)
-        prev = row
-    return bytes(out)
-
-
 def _png_wrap(ihdr_fields, idat_raw):
     import struct as st
     import zlib
@@ -285,13 +250,14 @@ def test_png_all_five_filters_decode():
     """decode_png undoes every scanline filter the spec defines —
     pinned against an independent forward filterer."""
     import numpy as np
+    from png_rows import png_filter_rows
 
     from insurance_pdf_extractor_spark.operators import multimodal as mm
 
     rng = np.random.RandomState(11)
     img = rng.randint(0, 256, size=(10, 6, 3)).astype(np.uint8)
     for filters in ([0, 1, 2, 3, 4, 0, 4, 3, 2, 1], [4] * 10, [3] * 10, [1] * 10, [2] * 10):
-        raw = _png_filter_rows(img, filters)
+        raw = png_filter_rows(img.reshape(10, -1), filters, 3)
         payload = _png_wrap((6, 10, 8, 2, 0, 0, 0), raw)
         assert (mm.decode_png(payload) == img).all(), filters
 
