@@ -12,10 +12,12 @@ Two execution paths:
   document is one row, so the whole extraction is embarrassingly
   parallel.
 - shard path (see plans/pipeline.py): oversized documents are split
-  into page-range shards first (``shard_offsets_udf``), tokenized and
-  laid out per shard, then merged per doc_id with
-  ``merge_sharded_lines`` (applyInPandas) where boilerplate stripping
-  and media interleave run on the merged line set.
+  into page-range shards first (``shard_offsets_udf``, at the
+  tokenizer's own %%PAGE comment tokens), tokenized and laid out per
+  shard, then merged per doc_id with ``merge_sharded_lines``
+  (applyInPandas), which sorts the shard lines back into document
+  order and finishes them with the same ``strip_boilerplate`` and
+  ``assemble_spans`` the fused path calls.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ from .boilerplate import strip_boilerplate
 from .filters import decode_or_poison
 from .html import extract_html, sniff_format
 from .layout import layout_lines
-from .tokenize import tokenize_content
+from .tokenize import page_marker_offsets, tokenize_content
 
 SHARD_SPAN = T.StructType(
     [
@@ -83,7 +85,7 @@ def extract_spans(
     just media): HTML documents route to the HTML tokenizer/DOM-lite
     block extractor (operators/html.py), whose output is already
     boilerplate-stripped and carries the document's own ``<img>`` media
-    refs; PDF-style content streams take the existing three-tier path.
+    refs; PDF-style content streams take the two-tier tokenizer.
     Both converge on the same (kind, text, media_ref, offset) span
     contract, ordered by byte offset."""
     if content and sniff_format(content) == "html":
@@ -151,13 +153,10 @@ def shard_spans(
     """(shard_idx, start, length, base_page, pre_len) tuples — the
     offsets-only shape the JVM-side slicer consumes; ``pre_len`` > 0
     means "prepend content[:pre_len]" (non-contiguous chunk, two
-    substring slices)."""
-    marker = b"%%PAGE"
-    positions: list[int] = []
-    pos = content.find(marker)
-    while pos != -1:
-        positions.append(pos)
-        pos = content.find(marker, pos + 1)
+    substring slices). Split points are the %%PAGE comment tokens the
+    tokenizer reads (``page_marker_offsets``), never a marker quoted in
+    a string, so no shard starts mid-token."""
+    positions = page_marker_offsets(content)
     if not positions:
         return [(0, 0, len(content), 0, 0)]
     pre_len = 0
@@ -238,57 +237,22 @@ def shard_lines_udf(chunk: pd.Series, base_offset: pd.Series, base_page: pd.Seri
 
 
 def merge_sharded_lines(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas per doc_id: merge shard line-lists, strip
-    boilerplate over the full document, interleave media, emit spans
-    (+ carried size_bytes, DOCUMENTS_SIZED schema)."""
-    import numpy as np
-
-    from ..constants import BOILERPLATE_MIN_FRAC, BOILERPLATE_MIN_PAGES
-    from .boilerplate import _DIGIT_TBL
-
-    doc_id = pdf["doc_id"].iloc[0]
-    n_pages = int(pdf["n_pages"].iloc[0])
-    parts = [l for l in pdf["lines"] if l is not None and len(l["pages"])]
-    if parts:
-        pages = np.concatenate([np.asarray(l["pages"], dtype=np.int64) for l in parts])
-        offs = np.concatenate([np.asarray(l["offs"], dtype=np.int64) for l in parts])
-        texts = np.concatenate([np.asarray(l["texts"], dtype=object) for l in parts])
-        order = np.lexsort((offs, pages))
-        pages, offs, texts = pages[order], offs[order], texts[order]
-    else:
-        pages = offs = np.empty(0, dtype=np.int64)
-        texts = np.empty(0, dtype=object)
-
-    # boilerplate strip, vectorized but key-for-key identical to
-    # boilerplate.norm_key: lower → digits→0 → ws-collapse → strip
-    if n_pages >= BOILERPLATE_MIN_PAGES and len(texts):
-        keys = (
-            pd.Series(texts)
-            .str.lower()
-            .str.translate(_DIGIT_TBL)   # ASCII digits only, like norm_key
-            .str.replace(r"\s+", " ", regex=True)
-            .str.strip()
-        )
-        frac = pd.DataFrame({"k": keys.values, "p": pages}).groupby("k")["p"].nunique() / n_pages
-        drop = frac.index[(frac >= BOILERPLATE_MIN_FRAC).values]
-        keep = ~keys.isin(set(drop)).values
-        pages, offs, texts = pages[keep], offs[keep], texts[keep]
-
-    spans = [
-        {"kind": "text", "text": t, "media_ref": None, "offset": int(o)}
-        for o, t in zip(offs, texts)
-    ]
+    """applyInPandas per doc_id: merge shard line-lists back into
+    (page, offset) order, then strip boilerplate over the full document
+    and interleave media with the fused path's own ``strip_boilerplate``
+    and ``assemble_spans`` (+ carried size_bytes, DOCUMENTS_SIZED
+    schema)."""
+    lines = sorted(
+        (int(p), int(o), t)
+        for part in pdf["lines"]
+        if part is not None
+        for p, o, t in zip(part["pages"], part["offs"], part["texts"])
+    )
     media_raw = pdf["media"].iloc[0]
-    if media_raw is not None:
-        spans.extend(
-            {"kind": "media", "text": None, "media_ref": m["media_ref"], "offset": int(m["offset"])}
-            for m in media_raw
-        )
-    # offset sort UNCONDITIONALLY, matching assemble_spans on the
-    # small-doc path: with non-monotonic explicit '%%PAGE n' numbering
-    # the (page, offset) lexsort above is not offset order, and the
-    # emitted sequence must not depend on which path a doc took
-    # (path-equivalence / parallelism invariant)
-    spans.sort(key=lambda s: s["offset"])
+    media = (
+        [(m["media_ref"], int(m["offset"])) for m in media_raw] if media_raw is not None else None
+    )
+    lines = strip_boilerplate(lines, int(pdf["n_pages"].iloc[0]))
+    spans = assemble_spans(lines, media)
     size = int(pdf["size_bytes"].iloc[0]) if "size_bytes" in pdf.columns else None
-    return pd.DataFrame({"doc_id": [doc_id], "spans": [spans], "size_bytes": [size]})
+    return pd.DataFrame({"doc_id": [pdf["doc_id"].iloc[0]], "spans": [spans], "size_bytes": [size]})

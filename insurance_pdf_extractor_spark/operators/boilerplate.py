@@ -18,8 +18,7 @@ from ..constants import BOILERPLATE_MIN_FRAC, BOILERPLATE_MIN_PAGES
 _WS_RE = re.compile(r"\s+")
 # ASCII digits fold to '0' via a C-level translate table (measured ~1.7×
 # over a regex sub on the typical line mix). Deliberate spec: ONLY ASCII
-# digits fold — oracle.normalize_line and the vectorized shard-merge
-# replica implement the identical rule.
+# digits fold — oracle.normalize_line implements the identical rule.
 _DIGIT_TBL = str.maketrans("0123456789", "0000000000")
 
 

@@ -7,6 +7,14 @@ the text-object operator subset (PDF 32000-1:2008 §9.4): ``BT/ET``
 blocks, ``Tf`` font selection, ``Td/TD/Tm/T*`` positioning, and
 ``Tj/TJ/'/\"`` string-showing operators, plus ``%%PAGE n`` page markers.
 
+Two tiers with one semantics: a block-level fast path (one compiled
+match per simple text block) and a token-level interpreter for every
+other arrangement. The interpreter reads nested, unterminated and
+backslash-EOL literal strings itself (``_read_string``), so no input
+re-parses the whole document. The straight-line per-character parser
+in tests/naive_tokenize.py is the differential oracle both tiers are
+fuzzed against; it is not on any production path.
+
 Every run records the byte offset of its string object in the source —
 offsets are the authoritative, data-derived ordering key, so results
 are invariant across partitioning/parallelism (north rule).
@@ -18,37 +26,42 @@ per-row Python at the Spark API level.
 
 from __future__ import annotations
 
-_STR_ESCAPES = {"n": "\n", "r": "\r", "t": "\t", "b": "\b", "f": "\f", "(": "(", ")": ")", "\\": "\\"}
-
-_WS = " \t\r\n\f\x00"
-_DELIM = "()<>[]{}/%"
-
-
 import re
 
 from .filters import decode_or_poison
+
+_STR_ESCAPES = {"n": "\n", "r": "\r", "t": "\t", "b": "\b", "f": "\f", "(": "(", ")": ")", "\\": "\\"}
+
+# flat literal string (no nesting), unrolled so every quantifier is
+# possessive: a run of plain chars, then (escape, plain run)*. '.' is
+# not DOTALL, so a backslash-EOL string is not flat either — it reaches
+# _read_string like a nested one.
+_FLAT = r"\([^()\\]*+(?:\\.[^()\\]*+)*+\)"
 
 # master token pattern for finditer: whitespace is NOT an alternative —
 # the regex engine skips it during search at C speed, so the Python
 # loop iterates once per MEANINGFUL token (strings, names, numbers,
 # operators), not per character or whitespace run. A '(' that the flat
-# string alternative cannot swallow (nested parens) surfaces as the
-# lone '\(' alternative → whole-doc fallback to the straight-line
-# parser (nested strings are rare).
+# string alternative cannot swallow (nested, unterminated or
+# backslash-EOL string) surfaces as the lone '\(' alternative, and the
+# interpreter reads that string with _read_string in place.
 _MASTER = re.compile(
-    r"""
-      \((?:\\.|[^()\\])*\)             # flat literal string (no nesting)
-    | [()]                             # stray/nested paren → fallback signal
-    | %[^\r\n]*                        # comment (incl. %%PAGE markers)
-    | /[^ \t\r\n\f\x00()<>\[\]{}/%]*   # name
-    | [\[\]]                           # array delimiters
-    | <[^<>]*>                         # hex string (§7.3.4.3; cannot match the << dict open)
-    | [<>{}]                           # other delimiters (consumed, never operands)
-    | [^ \t\r\n\f\x00()<>\[\]{}/%]+    # number or operator keyword
+    rf"""
+      {_FLAT}                            # flat literal string
+    | [()]                               # other string open (read in place), or stray closer
+    | %[^\r\n]*                          # comment (incl. %%PAGE markers)
+    | /[^ \t\r\n\f\x00()<>\[\]{{}}/%]*   # name
+    | [\[\]]                             # array delimiters
+    | <[^<>]*>                           # hex string (§7.3.4.3; cannot match the << dict open)
+    | [<>{{}}]                           # other delimiters (consumed, never operands)
+    | [^ \t\r\n\f\x00()<>\[\]{{}}/%]+    # number or operator keyword
     """,
     re.X,
 )
-_ESC = re.compile(r"\\([0-7]{1,3}|.)")
+# DOTALL: a backslash escapes ANY next byte, an EOL byte included (the
+# oracle keeps that byte); flat strings never hold a backslash-EOL, so
+# this only matters for _read_string bodies
+_ESC = re.compile(r"\\([0-7]{1,3}|.)", re.S)
 # ASCII number chars ONLY (PDF numbers are ASCII, §7.3.3). NOT \d and
 # NOT str.isdigit(): Python's \d skips latin-1 superscripts ¹²³ while
 # isdigit() accepts them, and the tiers must split a glued token like
@@ -90,9 +103,8 @@ def _decode(s: str) -> str:
         return s
 
 
-_FLAT = r"\((?:\\.|[^()\\])*\)"
 # strict float grammar — float() can never raise on a match. A loose
-# [\d.]+ would match '12.5.6', which the interpreter/reference tiers
+# [\d.]+ would match '12.5.6', which the interpreter (and the oracle)
 # treat as an unparseable number token; the block path must NOT match
 # it (it falls back to the interpreter for the whole doc instead of
 # crashing the task on ValueError). Quantifiers are POSSESSIVE so that
@@ -101,9 +113,9 @@ _FLAT = r"\((?:\\.|[^()\\])*\)"
 # explores exponentially many NUM splits before failing (reproduced:
 # 40 digits hung the scanner; same ReDoS class fixed in _INFO_OBJ).
 _NUM = r"[+-]?+(?:\d++\.?+\d*+|\.\d++)"
-# inter-token whitespace EXACTLY as the reference parser's _WS set —
+# inter-token whitespace EXACTLY as the interpreter's master pattern —
 # Python's \s additionally matches \x0b \x1c-\x1f \x85 \xa0, which are
-# NOT whitespace to the reference tier, and a fast-path match across
+# NOT whitespace to the interpreter, and a fast-path match across
 # them would silently diverge from the interpreter (tier equivalence).
 _SP = r"[ \t\r\n\f\x00]"
 # one whole simple text block per C-level match: optional Tf, one
@@ -132,8 +144,8 @@ _SKIP_WS = re.compile(r"[ \t\r\n\f\x00]*")
 
 # A simple indirect object holding a dictionary of names/strings/numbers
 # (the /Info metadata shape). The fast path may SKIP it wholesale: such
-# a dict contains only operands — the interpreter/reference tiers push
-# them and clear at the 'endobj' keyword, emitting nothing and touching
+# a dict contains only operands — the interpreter pushes them and
+# clears at the 'endobj' keyword, emitting nothing and touching
 # no text state, so skipping is semantics-preserving. Anything fancier
 # (nested strings, arrays, streams) fails this match and falls back to
 # the interpreter for the whole doc, as usual.
@@ -165,6 +177,36 @@ def _unescape_raw(s: str) -> str:
 
 def _unescape_str(s: str) -> str:
     return _decode(_unescape_raw(s))
+
+
+# a literal string's body up to its next unescaped paren: only '(' and
+# ')' change the nesting depth, and an escape consumes one following
+# byte of any kind (DOTALL). Possessive, so the scan is linear.
+_STR_RUN = re.compile(r"(?:[^()\\]++|\\.)*+", re.S)
+
+
+def _read_string(text: str, start: int) -> tuple[int, str]:
+    """Literal string whose '(' is at ``start``, with balanced nested
+    parens (§7.3.4.2): returns (end, raw). ``end`` is just past the
+    closing ')'; an unterminated string consumes the rest of the text
+    (end = len(text)). ``raw`` is the body's latin-1 byte image with
+    escapes applied and inner parens kept — the flat-string rule, so
+    the charset decode stays at show time."""
+    n = len(text)
+    depth = 0
+    j = start
+    while j < n:
+        c = text[j]
+        if c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+            if depth == 0:
+                return j + 1, _unescape_raw(text[start + 1 : j])
+        else:  # a backslash as the last byte: kept literally
+            break
+        j = _STR_RUN.match(text, j + 1).end()
+    return n, _unescape_raw(text[start + 1 :])
 
 
 _HEX_ONLY = re.compile(r"[0-9a-fA-F]+")
@@ -202,7 +244,7 @@ def _raw_hex_string(body: str) -> str:
 
 
 def _show_decode(raw: str, cur_font: str | None, fonts) -> str:
-    """Show-time decode shared by the interpreter and reference tiers:
+    """Show-time decode shared by the interpreter and the oracle:
     the current font's byte→text map when it has one (operators/
     fonts.py), else the charset heuristic ``_decode``. With
     ``fonts=None`` (every font-free document) this is exactly the
@@ -306,9 +348,10 @@ def tokenize_content(content: bytes) -> list[tuple[int, float, float, int, str]]
 def _tokenize_interpreter(
     content: bytes, fonts=None
 ) -> list[tuple[int, float, float, int, str]]:
-    """Token-level interpreter (finditer master pattern): handles every
-    operator arrangement the block fast path cannot. Nested literal
-    strings fall back once more to the straight-line reference parser.
+    """Token-level interpreter (search loop over the master pattern):
+    handles every operator arrangement the block fast path cannot.
+    Nested, unterminated and backslash-EOL literal strings are read in
+    place by ``_read_string``; the scan then continues after them.
 
     ``fonts`` ({'/F1': FontMap} from operators/fonts.py) switches the
     tier to font-aware decode: string operands are held as raw byte
@@ -340,13 +383,11 @@ def _tokenize_interpreter(
         t0 = tok[0]
         if t0 == "(":
             if len(tok) == 1:
-                # nested or unterminated string: the flat alternative
-                # could not swallow it — reparse the whole doc with the
-                # straight-line reference parser (identical semantics)
-                return tokenize_content_reference(content, fonts)
-            s = tok[1:-1]
-            if "\\" in s:
-                s = _ESC.sub(_unescape, s)
+                # nested, unterminated or backslash-EOL string: the flat
+                # alternative could not swallow it
+                pos, s = _read_string(text, m.start())
+            else:
+                s = _unescape_raw(tok[1:-1])
             stack.append(("s", m.start(), s))
             continue
         if t0 == ")":
@@ -378,13 +419,13 @@ def _tokenize_interpreter(
         if t0 in ">{}":
             continue
         if t0 in "+-.0123456789":
-            # the reference scanner reads the maximal [+-.\d]+ run as a
-            # number token, then scans what follows as a SEPARATE
-            # operator keyword — so a glued token like ".'" or "5Tj"
-            # must split the same way here (push-or-drop the number,
-            # then dispatch the remainder as an operator). Treating the
+            # the oracle reads the maximal [+-.\d]+ run as a number
+            # token, then scans what follows as a SEPARATE operator
+            # keyword — so a glued token like ".'" or "5Tj" must split
+            # the same way here (push-or-drop the number, then
+            # dispatch the remainder as an operator). Treating the
             # whole run as one unknown keyword diverged on show/leading
-            # operators: reference emitted "(x).'" as a run, this tier
+            # operators: the oracle emitted "(x).'" as a run, this tier
             # cleared the stack (caught by the raw-byte fuzz soak).
             m2 = _NUM_ONLY.match(tok)
             try:
@@ -463,222 +504,29 @@ def _tokenize_interpreter(
     return runs
 
 
-def tokenize_content_reference(
-    content: bytes, fonts=None
-) -> list[tuple[int, float, float, int, str]]:
-    """Straight-line per-character implementation, kept as the
-    differential-testing reference for the regex scanner above.
-    ``fonts`` follows the interpreter tier's contract exactly (raw
-    string operands, show-time decode through the Tf-selected map)."""
-    if not content:
-        return []
-    text = content.decode("latin-1")
-    n = len(text)
-    i = 0
-    page = 0
-    lm_x = lm_y = 0.0      # text-line matrix origin (e, f components)
-    leading = 0.0
-    cur_font: str | None = None
-    stack: list = []       # operands: floats, ('s', off, str), ('a', off, [items])
-    runs: list[tuple[int, float, float, int, str]] = []
-    array_marks: list[int] = []
-
-    def parse_string(start: int) -> tuple[int, str]:
-        # start points at '('; PDF literal string with escapes and
-        # balanced nested parens (§7.3.4.2)
-        j = start + 1
-        depth = 1
-        out: list[str] = []
-        while j < n and depth > 0:
-            c = text[j]
-            if c == "\\" and j + 1 < n:
-                nxt = text[j + 1]
-                if nxt in _STR_ESCAPES:
-                    out.append(_STR_ESCAPES[nxt])
-                    j += 2
-                elif nxt in "01234567":  # octal \ddd (1-3 digits)
-                    k = j + 1
-                    digits = ""
-                    while k < n and text[k] in "01234567" and len(digits) < 3:
-                        digits += text[k]
-                        k += 1
-                    out.append(chr(int(digits, 8) & 0xFF))
-                    j = k
-                else:
-                    out.append(nxt)
-                    j += 2
-            elif c == "(":
-                depth += 1
-                out.append(c)
-                j += 1
-            elif c == ")":
-                depth -= 1
-                if depth > 0:
-                    out.append(c)
-                j += 1
-            else:
-                out.append(c)
-                j += 1
-        # the scan is byte-transparent (latin-1) so offsets stay exact;
-        # charset interpretation happens at SHOW time via the shared
-        # _show_decode — all tiers must agree byte-for-byte
-        return j, "".join(out)
-
-    while i < n:
-        c = text[i]
-        if c in _WS:
-            i += 1
-            continue
-        if c == "%":
-            eol = i
-            while eol < n and text[eol] not in "\r\n":
-                eol += 1
-            comment = text[i:eol]
-            if comment.startswith("%%PAGE"):
-                rest = comment[6:].strip()
-                page = int(rest) if rest.lstrip("-").isdigit() else page + 1
-            i = eol
-            continue
-        if c == "(":
-            off = i
-            i, s = parse_string(i)
-            stack.append(("s", off, s))
-            continue
-        if c == "[":
-            array_marks.append(len(stack))
-            stack.append(("mark", i, None))
-            i += 1
-            continue
-        if c == "]":
-            if array_marks:
-                m = array_marks.pop()
-                items = stack[m + 1 :]
-                off = stack[m][1]
-                del stack[m:]
-                stack.append(("a", off, items))
-            i += 1
-            continue
-        if c == "/":
-            j = i + 1
-            while j < n and text[j] not in _WS and text[j] not in _DELIM:
-                j += 1
-            stack.append(("n", i, text[i:j]))
-            i = j
-            continue
-        if c in "+-.0123456789":
-            j = i
-            # ASCII digits only — isdigit() would also take ¹²³ and
-            # split glued tokens differently from the other tiers
-            while j < n and text[j] in "+-.0123456789":
-                j += 1
-            try:
-                stack.append(float(text[i:j]))
-            except ValueError:
-                pass
-            i = j
-            continue
-        if c == "<":
-            # hex string (§7.3.4.3) — mirror the master pattern's
-            # <[^<>]*> rule EXACTLY: scan to the first '>' stopping at
-            # any '<' (so '<<' dict opens are two lone delimiters, and
-            # an unterminated '<' is consumed alone)
-            j = i + 1
-            while j < n and text[j] not in "<>":
-                j += 1
-            if j < n and text[j] == ">":
-                stack.append(("s", i, _raw_hex_string(text[i + 1 : j])))
-                i = j + 1
-            else:
-                i += 1
-            continue
-        # operator keyword
-        j = i
-        while j < n and text[j] not in _WS and text[j] not in _DELIM:
-            j += 1
-        if j == i:  # lone delimiter (< > { } or stray ')'): consume it
-            i += 1
-            continue
-        op = text[i:j]
-        i = j
-        if op == "BT":
-            lm_x = lm_y = 0.0
-            leading = 0.0
-            stack.clear(); array_marks.clear()
-        elif op == "ET":
-            stack.clear(); array_marks.clear()
-        elif op == "Td" or op == "TD":
-            if len(stack) >= 2 and isinstance(stack[-1], float) and isinstance(stack[-2], float):
-                ty, tx = stack[-1], stack[-2]
-                lm_x += tx
-                lm_y += ty
-                if op == "TD":
-                    leading = -ty
-            stack.clear(); array_marks.clear()
-        elif op == "Tm":
-            if len(stack) >= 6 and all(isinstance(v, float) for v in stack[-6:]):
-                lm_x, lm_y = stack[-2], stack[-1]
-            stack.clear(); array_marks.clear()
-        elif op == "T*":
-            lm_y -= leading
-            stack.clear(); array_marks.clear()
-        elif op == "TL":
-            if stack and isinstance(stack[-1], float):
-                leading = stack[-1]
-            stack.clear(); array_marks.clear()
-        elif op == "Tj" or op == "'":
-            if op == "'":
-                lm_y -= leading
-            if stack and isinstance(stack[-1], tuple) and stack[-1][0] == "s":
-                _, off, s = stack[-1]
-                runs.append((page, lm_x, lm_y, off, _show_decode(s, cur_font, fonts)))
-            stack.clear(); array_marks.clear()
-        elif op == "TJ":
-            if stack and isinstance(stack[-1], tuple) and stack[-1][0] == "a":
-                _, off, items = stack[-1]
-                s = "".join(
-                    _show_decode(it[2], cur_font, fonts)
-                    for it in items
-                    if isinstance(it, tuple) and it[0] == "s"
-                )
-                if s:
-                    runs.append((page, lm_x, lm_y, off, s))
-            stack.clear(); array_marks.clear()
-        elif op == '"':
-            # §9.4.3: aw ac (string) " — set spacings (no effect on the
-            # line model), move to next line, show; string leniency
-            # mirrors Tj/' exactly
-            lm_y -= leading
-            if stack and isinstance(stack[-1], tuple) and stack[-1][0] == "s":
-                _, off, s = stack[-1]
-                runs.append((page, lm_x, lm_y, off, _show_decode(s, cur_font, fonts)))
-            stack.clear(); array_marks.clear()
-        elif op == "Tf":
-            # §9.3.1 text state: font selection persists across BT/ET
-            if (
-                len(stack) >= 2
-                and isinstance(stack[-1], float)
-                and isinstance(stack[-2], tuple)
-                and stack[-2][0] == "n"
-            ):
-                cur_font = stack[-2][2]
-            stack.clear(); array_marks.clear()
-        elif op == "BI":  # inline image: skip its binary data wholesale
-            i = _skip_inline_image(text, i)
-            stack.clear(); array_marks.clear()
-        else:
-            # unknown operator (Tf, Tc, Tw, gs, ...) — consume operands
-            stack.clear(); array_marks.clear()
-    return runs
-
-
-# String-literal-aware %%PAGE scan: flat literal strings and generic
-# comments are consumed by the non-capturing alternatives, so a ``%%PAGE``
-# byte sequence INSIDE a text-run string (a legit doc quoting the marker)
-# or in the tail of another comment is not counted — matching the
-# tokenizer, which only treats a comment TOKEN starting with %%PAGE as a
-# page marker. (Raw content.count(b"%%PAGE") inflated both cases — r2
-# advice.) Nested strings remain the documented interpreter-fallback edge.
-_PAGE_SCAN = re.compile(rf"{_FLAT}|(%%PAGE)[^\r\n]*|%[^\r\n]*")
+# Token-aware %%PAGE scan: one C-level match runs over everything that
+# cannot hold a page marker — flat strings, hex strings, generic
+# comments and ordinary bytes — and stops at the next %%PAGE comment
+# (group 1), a '(' the flat alternative cannot take (group 2, read with
+# _read_string) or a 'BI' that may be the inline-image operator (group
+# 3, skipped with _skip_inline_image when it is a whole token). Those
+# are exactly the places where the interpreter's tokens hide '%' bytes,
+# so a ``%%PAGE`` counts exactly where the tokenizer reads a comment
+# token: one quoted in a text string, in a hex string, in inline-image
+# data or in the tail of another comment does not. (Raw
+# content.count(b"%%PAGE") inflated all of these.)
+_PAGE_SCAN = re.compile(
+    rf"""
+    (?: [^(%<B]++                       # bytes that start none of the below
+      | {_FLAT}                         # flat literal string
+      | <(?:[^<>]*+>)?+                 # hex string, or a lone '<'
+      | %(?!%PAGE)[^\r\n]*+             # comment other than a page marker
+      | B(?!I(?![^ \t\r\n\f\x00()<>\[\]{{}}/%]))   # 'B' not ending as a 'BI' token
+    )*+
+    (?: (%%PAGE)[^\r\n]*+ | (\() | (BI) )?
+    """,
+    re.X,
+)
 
 
 def page_marker_offsets(content: bytes) -> list[int]:
@@ -693,9 +541,26 @@ def page_marker_offsets_text(text: str) -> list[int]:
     """Same scan over an already-decoded latin-1 text — lets callers
     that need several full-document scans (metadata.pdf_info) decode
     the bytes exactly once."""
-    return [m.start() for m in _PAGE_SCAN.finditer(text) if m.group(1) is not None]
-
-
-def count_pages(content: bytes) -> int:
-    return len(page_marker_offsets(content))
-
+    out: list[int] = []
+    pos = 0
+    scan = _PAGE_SCAN.match
+    while True:
+        m = scan(text, pos)
+        g = m.lastindex
+        if g == 1:
+            out.append(m.start(1))
+            pos = m.end()
+        elif g == 2:
+            pos = _read_string(text, m.start(2))[0]
+        elif g == 3:
+            # an operator token iff 'BI' is the whole token after any
+            # glued number prefix (the interpreter splits '5BI' into 5
+            # and BI); a name such as /XBI or a word like 'xBI' is not
+            i = m.start(3)
+            while i and text[i - 1] in "+-.0123456789":
+                i -= 1
+            pos = m.end()
+            if not i or text[i - 1] in " \t\r\n\f\x00()<>[]{}":
+                pos = _skip_inline_image(text, pos)
+        else:
+            return out

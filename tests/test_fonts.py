@@ -18,6 +18,8 @@ import random
 
 import pytest
 
+from naive_tokenize import tokenize_content_reference
+
 from insurance_pdf_extractor_spark.operators.assemble import (
     extract_spans,
     shard_content,
@@ -33,7 +35,6 @@ from insurance_pdf_extractor_spark.operators.fonts import (
 from insurance_pdf_extractor_spark.operators.tokenize import (
     _tokenize_interpreter,
     tokenize_content,
-    tokenize_content_reference,
 )
 from insurance_pdf_extractor_spark.sources.render import (
     ENCODING_MIX,
@@ -262,6 +263,13 @@ def test_tiers_agree_on_font_docs(encoding):
     texts = [r[4] for r in ref]
     assert f"Document fdoc" in texts[0]
     assert any("Quote WC-1234" in t for t in texts)
+    # a nested literal string shown through the font: the interpreter
+    # reads it in place and decodes it at show time like any string
+    show = b"BT\n/F1 12 Tf\n72.0 90.0 Td\n(Ab(cd)e\\051) Tj\nET\n"
+    ref = tokenize_content_reference(doc + show, fonts)
+    assert tokenize_content(raw + show) == ref
+    assert _tokenize_interpreter(doc + show, fonts) == ref
+    assert ref[-1][3] == len(doc) + show.index(b"(")
 
 
 def test_font_state_persists_across_blocks_and_pages():

@@ -62,18 +62,45 @@ def test_rejects_routed(pipeline_out, corpus_docs):
     assert rejects.filter(F.col("status") != "error").count() == 0
 
 
+def _quoted_marker_doc(doc_id: str, show: str, every_page: bool) -> tuple:
+    """A 6-page render with ``show`` (a literal string quoting a
+    ``%%PAGE`` marker) as its own text line on page 2 — the 4th raw
+    marker, where a shard_pages=3 split at raw bytes would fall — or on
+    every page (a repeated header the merge must strip)."""
+    from insurance_pdf_extractor_spark.sources.render import render_text
+
+    words = ["".join("abcdefghij"[int(c)] for c in str(i)) for i in range(6 * 18 * 10)]
+    content, n_pages = render_text(doc_id, " ".join(words))
+    assert n_pages == 6
+    block = f"BT\n72.0 780.0 Td\n{show} Tj\nET\n".encode()
+    for pg in range(n_pages) if every_page else [2]:
+        marker = f"%%PAGE {pg}\n".encode()
+        content = content.replace(marker, marker + block)
+    return (doc_id, content, [], n_pages, len(content))
+
+
 def test_sharded_path_used_and_equivalent(spark, corpus_docs, shuffle_partitions):
     """Big docs go through shard→merge and must produce identical spans
-    to the fused path."""
+    to the fused path. The quoted-marker documents split only at real
+    %%PAGE comment tokens (a split inside the string loses its line)."""
     big = [d for d in corpus_docs if d.n_pages >= 10 and d.expected_spans is not None][:5]
     assert big
-    raw = C.to_raw_df(spark, big)
+    quoted = [
+        _quoted_marker_doc("q-flat", "(see %%PAGE 9 below)", every_page=False),
+        _quoted_marker_doc("q-nested", "(see (note) %%PAGE 9 below)", every_page=False),
+        _quoted_marker_doc("q-header", "(Form (A) %%PAGE 9 header)", every_page=True),
+    ]
+    raw = spark.createDataFrame(C.raw_rows(big) + quoted, DOCUMENTS_RAW)
     with shuffle_partitions(2):
         sharded, _ = extract_documents(raw, shard_size_bytes=1, shard_pages=3)
         fused, _ = extract_documents(raw, shard_size_bytes=10**9)
         a = {r["doc_id"]: r["spans"] for r in sharded.collect()}
         b = {r["doc_id"]: r["spans"] for r in fused.collect()}
     assert a == b
+    texts = {k: [s["text"] for s in v] for k, v in a.items()}
+    assert "see %%PAGE 9 below" in texts["q-flat"]
+    assert "see (note) %%PAGE 9 below" in texts["q-nested"]
+    assert not any("header" in (t or "") for t in texts["q-header"])
 
 
 def test_parallelism_invariance(spark, corpus_docs, shuffle_partitions):

@@ -6,7 +6,7 @@ from __future__ import annotations
 from insurance_pdf_extractor_spark.operators.assemble import assemble_spans, extract_spans, shard_content
 from insurance_pdf_extractor_spark.operators.boilerplate import strip_boilerplate
 from insurance_pdf_extractor_spark.operators.layout import layout_lines
-from insurance_pdf_extractor_spark.operators.tokenize import count_pages, tokenize_content
+from insurance_pdf_extractor_spark.operators.tokenize import page_marker_offsets, tokenize_content
 
 
 def test_tokenize_tj_tm():
@@ -44,7 +44,32 @@ def test_tokenize_multipage():
     content = b"%%PAGE 0\nBT\n10 10 Td\n(p0) Tj\nET\n%%PAGE 1\nBT\n10 10 Td\n(p1) Tj\nET\n"
     runs = tokenize_content(content)
     assert [(r[0], r[4]) for r in runs] == [(0, "p0"), (1, "p1")]
-    assert count_pages(content) == 2
+    assert len(page_marker_offsets(content)) == 2
+
+
+def test_page_markers_are_comment_tokens_only():
+    """A %%PAGE counts exactly where the tokenizer reads a comment
+    token: quoted in a flat, nested, backslash-EOL or unterminated
+    string, in a hex string or in inline-image data it is no marker."""
+    real = b"%%PAGE 1\n"
+    parts = [
+        real,
+        b"BT 1 2 Td (see %%PAGE 9) Tj ET\n",
+        real,
+        b"BT 1 2 Td (see (a) %%PAGE 9) Tj ET\n",
+        b"BT 1 2 Td (line\\\n%%PAGE 9) Tj ET\n",
+        real,
+        b"BT 1 2 Td <25%%PAGE 9> Tj ET\n",
+        b"BI /W 1 ID ( \n%%PAGE 9\n EI\n",
+        b"5BI ID \x00\n%%PAGE 9\n EI\n",
+        real,
+        b"/XBI (a) Tj\n",  # a name, not the inline-image operator
+        real,
+        b"BT 1 2 Td (open (never closed\n%%PAGE 9\n",
+    ]
+    starts = [sum(map(len, parts[:i])) for i in range(len(parts))]
+    content = b"".join(parts)
+    assert page_marker_offsets(content) == [o for o, p in zip(starts, parts) if p == real]
 
 
 def test_layout_reading_order():
@@ -171,10 +196,11 @@ def test_inline_image_data_skipped():
 
 
 def test_quote_show_operators():
+    from naive_tokenize import tokenize_content_reference
+
     from insurance_pdf_extractor_spark.operators.tokenize import (
         _tokenize_interpreter,
         tokenize_content,
-        tokenize_content_reference,
     )
 
     # §9.4.3: ' = next line + show; " = aw ac (s) " spacings + next
@@ -190,10 +216,11 @@ def test_quote_show_operators():
 
 
 def test_inline_image_truncation_consumes_tail():
+    from naive_tokenize import tokenize_content_reference
+
     from insurance_pdf_extractor_spark.operators.tokenize import (
         _tokenize_interpreter,
         tokenize_content,
-        tokenize_content_reference,
     )
 
     # missing EI: the rest of the doc is image data (never garbage runs)
@@ -217,10 +244,11 @@ def test_ei_inside_image_needs_token_boundary():
 
 
 def test_bom_utf16be_string_decodes_across_tiers():
+    from naive_tokenize import tokenize_content_reference
+
     from insurance_pdf_extractor_spark.operators.tokenize import (
         _tokenize_interpreter,
         tokenize_content,
-        tokenize_content_reference,
     )
 
     val = "Ünïcø∂é titlé"
@@ -234,10 +262,11 @@ def test_bom_utf16be_string_decodes_across_tiers():
 
 def test_bom_utf16be_hex_string_operand():
     # the real-world shape: writers emit UTF-16BE text strings as hex
+    from naive_tokenize import tokenize_content_reference
+
     from insurance_pdf_extractor_spark.operators.tokenize import (
         _tokenize_interpreter,
         tokenize_content,
-        tokenize_content_reference,
     )
 
     val = "Ünïcø∂é"

@@ -6,12 +6,13 @@ stray delimiters, unknown operators, \\r line endings."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
+
+from naive_tokenize import tokenize_content_reference
 
 from insurance_pdf_extractor_spark.operators.tokenize import (
     _tokenize_interpreter,
     tokenize_content,
-    tokenize_content_reference,
 )
 
 _string_body = st.text(
@@ -129,8 +130,19 @@ _piece = st.one_of(
 )
 
 
+_TWO_BLOCKS = ["BT\n1 2 Td\n(a) Tj\nET\n", "%%PAGE 1\n", "BT\n3 4 Td\n[(b) 5 (c)] TJ\nET\n"]
+
+
 @settings(max_examples=120, deadline=None)
 @given(st.lists(_piece, min_size=1, max_size=12))
+# nested strings at the start, middle and end of a document, then an
+# unterminated '(' and backslash-EOL strings: the interpreter reads
+# each in place and carries on scanning after it
+@example(["BT\n5 6 Td\n(x(y(z))w) Tj\nET\n"] + _TWO_BLOCKS)
+@example(_TWO_BLOCKS[:2] + ["BT\n5 6 Td\n[(p(q)r) -9 (s)] TJ\nET\n", _TWO_BLOCKS[2]])
+@example(_TWO_BLOCKS + ["BT\n5 6 Td\n(end (of) doc\\)) Tj\nET\n"])
+@example(_TWO_BLOCKS[:2] + ["BT\n5 6 Td\n(open (never) closed Tj\nET\n", _TWO_BLOCKS[2]])
+@example(_TWO_BLOCKS + ["BT\n5 6 Td\n(line\\\nnext\\\r\nlast\\101) Tj\nET\n", "%%PAGE 2\n"])
 def test_tokenizer_tiers_agree(pieces):
     content = ("%PDF-1.4\n" + "".join(pieces)).encode("latin-1")
     ref = tokenize_content_reference(content)
