@@ -125,37 +125,27 @@ def decode_filters_udf(content: pd.Series) -> pd.Series:
     return pd.Series([None if c is None else decode_or_poison(bytes(c)) for c in content])
 
 
-def shard_content(content: bytes, pages_per_shard: int) -> list[tuple[int, bytes, int, int]]:
+def shard_spans(
+    content: bytes, pages_per_shard: int
+) -> list[tuple[int, int, int, int, int]]:
     """Split a content stream at %%PAGE markers into shards of
-    ``pages_per_shard`` pages. Returns (shard_idx, chunk, base_offset,
-    base_page); base_offset restores global byte offsets, base_page
-    restores global page numbers.
+    ``pages_per_shard`` pages, as (shard_idx, start, length, base_page,
+    pre_len) tuples — the offsets-only shape the JVM-side slicer
+    consumes. A shard's chunk is ``content[:pre_len] +
+    content[start:start + length]``; ``start - pre_len`` restores
+    global byte offsets and ``base_page`` global page numbers. Split
+    points are the %%PAGE comment tokens the tokenizer reads
+    (``page_marker_offsets``), never a marker quoted in a string, so no
+    shard starts mid-token.
 
     Font documents: the preamble's font/resource objects must reach
     every shard's tokenizer, so shards past the first get the preamble
-    PREPENDED (the preamble emits no runs, and base_offset is reduced
-    by its length so re-based offsets stay exact). Cross-shard ``Tf``
+    (``pre_len`` > 0) prepended; it emits no runs. Cross-shard ``Tf``
     state needs no forwarding because shard boundaries are PAGE
     boundaries and a conformant page establishes its own text state
     (§8.2: page content streams are independent); a document carrying
     font material PAST the first page boundary (where per-shard
-    re-parse could miss definitions) is conservatively left unsharded.
-    """
-    return [
-        (i, content[:pl] + content[s : s + ln], s - pl, bp)
-        for i, s, ln, bp, pl in shard_spans(content, pages_per_shard)
-    ]
-
-
-def shard_spans(
-    content: bytes, pages_per_shard: int
-) -> list[tuple[int, int, int, int, int]]:
-    """(shard_idx, start, length, base_page, pre_len) tuples — the
-    offsets-only shape the JVM-side slicer consumes; ``pre_len`` > 0
-    means "prepend content[:pre_len]" (non-contiguous chunk, two
-    substring slices). Split points are the %%PAGE comment tokens the
-    tokenizer reads (``page_marker_offsets``), never a marker quoted in
-    a string, so no shard starts mid-token."""
+    re-parse could miss definitions) is conservatively left unsharded."""
     positions = page_marker_offsets(content)
     if not positions:
         return [(0, 0, len(content), 0, 0)]

@@ -24,6 +24,13 @@ Design (same discipline as the PDF tiers):
   document; media spans record the offset of their ``<img`` byte.
   Offsets derive from content alone, so span sequences are invariant
   across partitioning/parallelism (north rule).
+- **One tag walk.** ``_walk`` holds every tokenizer rule once
+  (comments, CDATA, declarations, PIs, closing and bogus-comment tags,
+  a literal ``<``, raw-text bodies) and yields text ranges, closing
+  tags and open tags. Both consumers read it: ``extract_html`` builds
+  blocks from it, and the ``<head>`` metadata scan
+  (``parse_html_meta``) reads title and meta values from it, so the
+  scan skips exactly the markup the extractor skips.
 - **Blocks, not DOM.** Block-level open/close tags and ``<br>`` flush
   the current text run; inline elements (``a``, ``b``, ``em``, …) are
   transparent. This is the DOM heuristic that matters for reading
@@ -62,6 +69,7 @@ task).
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -237,7 +245,7 @@ def format_expr(prefix: Column) -> Column:
 
 
 def _parse_tag(
-    buf: bytes, i: int, charset: str = "utf-8"
+    buf: bytes, i: int, charset: str
 ) -> tuple[str, dict[str, str], bool, int]:
     """Parse an open tag at ``i`` (buf[i] == '<', buf[i+1] is a
     letter). Returns (name, attrs, self_closing, end_index_after_gt).
@@ -283,6 +291,81 @@ def _parse_tag(
     return name, attrs, self_closing, n
 
 
+# event kinds yielded by _walk
+_TEXT, _CLOSE, _OPEN = 0, 1, 2
+# the first ``</name`` + whitespace or '>' ends a raw-text body
+# (case-insensitive); compiled once per element, not per tag
+_RAW_CLOSE = {t: re.compile(rb"</" + t.encode() + rb"[\s>]", re.I) for t in RAW_TEXT}
+
+
+def _walk(buf: bytes, charset: str) -> Iterator[tuple]:
+    """The one HTML5 tag walk, read by ``extract_html`` and
+    ``parse_html_meta``. Yields, in document order:
+
+    - ``(_TEXT, start, end)``: the text range ``buf[start:end]``; a
+      ``<`` that opens no tag is a one-byte text range;
+    - ``(_CLOSE, name)``: a closing tag;
+    - ``(_OPEN, name, attrs, self_closing, lt, after, body_end)``: an
+      open tag spanning ``buf[lt:after]``. For a raw-text element that
+      is not self-closing, ``body_end`` is where its body ends (its
+      first close tag, or EOF) and the walk resumes past that close
+      tag; otherwise ``body_end`` is None.
+
+    Comments (to ``-->``), CDATA (to ``]]>``), declarations, PIs and
+    ``</`` bogus comments (each to the first ``>``) yield nothing; an
+    unterminated construct runs to EOF, and a ``<`` at EOF is dropped."""
+    n = len(buf)
+    i = 0
+    while i < n:
+        lt = buf.find(b"<", i)
+        if lt < 0:
+            yield _TEXT, i, n
+            return
+        if lt > i:
+            yield _TEXT, i, lt
+        if lt + 1 >= n:
+            return
+        c = buf[lt + 1]
+        if c == 0x21:  # '!'
+            if buf.startswith(b"<!--", lt):
+                end = buf.find(b"-->", lt + 4)
+                i = n if end < 0 else end + 3
+            elif buf.startswith(b"<![CDATA[", lt):
+                end = buf.find(b"]]>", lt + 9)
+                i = n if end < 0 else end + 3
+            else:  # doctype / other declaration
+                end = buf.find(b">", lt + 2)
+                i = n if end < 0 else end + 1
+            continue
+        if c == 0x3F or c == 0x2F:  # '?' PI, '/' closing tag
+            m = _TAG_NAME_RE.match(buf, lt + 2) if c == 0x2F else None
+            # a PI, or '</' followed by a non-letter (a bogus comment
+            # per HTML5), ends at the first '>'
+            end = buf.find(b">", lt + 2 if m is None else m.end())
+            i = n if end < 0 else end + 1
+            if m is not None:
+                yield _CLOSE, m.group(0).decode("ascii").lower()
+            continue
+        if not (0x41 <= c <= 0x5A or 0x61 <= c <= 0x7A):
+            # '<' not opening a tag is literal text (HTML5 tokenizer)
+            yield _TEXT, lt, lt + 1
+            i = lt + 1
+            continue
+        name, attrs, self_closing, after = _parse_tag(buf, lt, charset)
+        i = after
+        body_end = None
+        if name in RAW_TEXT and not self_closing:
+            # first matching close tag wins; unclosed → EOF
+            m = _RAW_CLOSE[name].search(buf, after)
+            if m is None:
+                body_end = i = n
+            else:
+                body_end = m.start()
+                end = buf.find(b">", body_end + 2)
+                i = n if end < 0 else end + 1
+        yield _OPEN, name, attrs, self_closing, lt, after, body_end
+
+
 # --------------------------------------------------------------------------
 # main extraction
 # --------------------------------------------------------------------------
@@ -303,8 +386,6 @@ def extract_html(
         return [], []
     buf = bytes(content)
     charset = detect_charset(buf)
-    n = len(buf)
-    i = 0
 
     strip_depth = 0  # nav/header/footer/aside nesting
     anchor_depth = 0
@@ -346,42 +427,12 @@ def extract_html(
         if anchor_depth > 0:
             link_parts.append(decoded)
 
-    while i < n:
-        lt = buf.find(b"<", i)
-        if lt < 0:
-            add_text(buf[i:], i)
-            break
-        if lt > i:
-            add_text(buf[i:lt], i)
-        if lt + 1 >= n:
-            break
-        c = buf[lt + 1]
-        if c == 0x21:  # '!'
-            if buf.startswith(b"<!--", lt):
-                end = buf.find(b"-->", lt + 4)
-                i = n if end < 0 else end + 3
-            elif buf.startswith(b"<![CDATA[", lt):
-                end = buf.find(b"]]>", lt + 9)
-                i = n if end < 0 else end + 3
-            else:  # doctype / other declaration
-                end = buf.find(b">", lt + 2)
-                i = n if end < 0 else end + 1
+    for ev in _walk(buf, charset):
+        if ev[0] == _TEXT:
+            add_text(buf[ev[1] : ev[2]], ev[1])
             continue
-        if c == 0x3F:  # '?' processing instruction
-            end = buf.find(b">", lt + 2)
-            i = n if end < 0 else end + 1
-            continue
-        if c == 0x2F:  # '/' closing tag
-            m = _TAG_NAME_RE.match(buf, lt + 2)
-            if not m:
-                # '</' followed by a non-letter is a bogus comment per
-                # HTML5: skip to '>'
-                end = buf.find(b">", lt + 2)
-                i = n if end < 0 else end + 1
-                continue
-            name = m.group(0).decode("ascii").lower()
-            end = buf.find(b">", m.end())
-            i = n if end < 0 else end + 1
+        if ev[0] == _CLOSE:
+            name = ev[1]
             if name in BLOCK_TAGS or name in STRIP_CONTAINERS:
                 flush()
             if name in STRIP_CONTAINERS:
@@ -391,24 +442,8 @@ def extract_html(
                 if anchor_depth > 0:
                     anchor_depth -= 1
             continue
-        if not (0x41 <= c <= 0x5A or 0x61 <= c <= 0x7A):
-            # '<' not opening a tag is literal text (HTML5 tokenizer)
-            add_text(b"<", lt)
-            i = lt + 1
-            continue
-
-        name, attrs, self_closing, after = _parse_tag(buf, lt, charset)
-        i = after
-
-        if name in RAW_TEXT and not self_closing:
-            # first matching close tag wins; unclosed → EOF
-            close = re.compile(rb"</" + name.encode() + rb"[\s>]", re.I)
-            m = close.search(buf, after)
-            if m is None:
-                i = n
-            else:
-                end = buf.find(b">", m.start() + 2)
-                i = n if end < 0 else end + 1
+        _kind, name, attrs, self_closing, lt, _after, body_end = ev
+        if body_end is not None:  # raw-text body: skipped content
             continue
 
         if name in BLOCK_TAGS or name in STRIP_CONTAINERS or name == "br":
@@ -452,12 +487,12 @@ def extract_html(
 # --------------------------------------------------------------------------
 # <head> metadata scan — the HTML analog of the PDF /Info dict scan
 # (operators/metadata.py; reference app/services/pdf_processor.py:447-494
-# reads pypdf's reader.metadata). Walks tags from the top of the
-# document through </head> (or the first <body>), collecting <title>
-# RCDATA and the standard <meta name=…/property=…> content values with
-# the same attribute parser the extractor uses — so quoted '>'s,
-# entities in attribute values, and comment/script decoys behave
-# identically.
+# reads pypdf's reader.metadata). Reads the extractor's tag walk
+# (``_walk``) from the top of the document through </head> (or the
+# first <body>), collecting the first <title> body and the standard
+# <meta name=…/property=…> content values — so quoted '>'s, entities
+# in attribute values, and comment/CDATA/PI/script decoys behave
+# identically in both consumers.
 # --------------------------------------------------------------------------
 
 HTML_META = T.StructType(
@@ -490,61 +525,25 @@ def parse_html_meta(content: bytes | None) -> dict[str, str | None]:
     if not content or sniff_format(content) != "html":
         return out
     buf = bytes(content)
-    n = len(buf)
     charset = detect_charset(buf)
     out["charset"] = charset
 
     def clean(s: str) -> str:
         return " ".join(decode_entities(s).split())
 
-    i = 0
-    while i < n:
-        lt = buf.find(b"<", i)
-        if lt < 0 or lt + 1 >= n:
-            break
-        c = buf[lt + 1]
-        if c == 0x21:
-            if buf.startswith(b"<!--", lt):
-                end = buf.find(b"-->", lt + 4)
-                i = n if end < 0 else end + 3
-            else:
-                end = buf.find(b">", lt + 2)
-                i = n if end < 0 else end + 1
-            continue
-        if c in (0x3F, 0x2F):  # PI / closing tag
-            m = _TAG_NAME_RE.match(buf, lt + 2) if c == 0x2F else None
-            end = buf.find(b">", lt + 2)
-            i = n if end < 0 else end + 1
-            if m and m.group(0).decode("ascii").lower() == "head":
+    for ev in _walk(buf, charset):
+        if ev[0] != _OPEN:
+            if ev[0] == _CLOSE and ev[1] == "head":
                 break
             continue
-        if not (0x41 <= c <= 0x5A or 0x61 <= c <= 0x7A):
-            i = lt + 1
-            continue
-        name, attrs, self_closing, after = _parse_tag(buf, lt, charset)
-        i = after
+        _kind, name, attrs, _self_closing, _lt, after, body_end = ev
         if name == "html" and out["lang"] is None and attrs.get("lang"):
             out["lang"] = attrs["lang"]
         if name == "body":
             break
-        if name == "title" and not self_closing:
-            close = re.compile(rb"</title[\s>]", re.I)
-            m = close.search(buf, after)
-            end = m.start() if m else n
-            if out["title"] is None:
-                out["title"] = clean(buf[after:end].decode(charset, "replace"))
-            i = end
-            continue
-        if name in RAW_TEXT and not self_closing:
-            close = re.compile(rb"</" + name.encode() + rb"[\s>]", re.I)
-            m = close.search(buf, after)
-            if m is None:
-                i = n
-            else:
-                end = buf.find(b">", m.start() + 2)
-                i = n if end < 0 else end + 1
-            continue
-        if name == "meta":
+        if name == "title" and body_end is not None and out["title"] is None:
+            out["title"] = clean(buf[after:body_end].decode(charset, "replace"))
+        elif name == "meta":
             key = _META_KEYS.get(attrs.get("name", "").lower()) or _META_PROPS.get(
                 attrs.get("property", "").lower()
             )

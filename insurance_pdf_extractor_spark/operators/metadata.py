@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .filters import decode_or_poison
+from .html import sniff_format
 from .layout import layout_lines
 from .tokenize import (
     _FLAT,
@@ -157,9 +158,12 @@ def pdf_info(content: bytes | None) -> dict:
     preview, and the /Info keys all read from the plain buffer.
     ``size_bytes``/``size_mb`` always report the RAW file size. A
     budget-cap bomb poisons the document text-free, mirroring the
-    tokenizer's rule."""
+    tokenizer's rule. Content without the ``%PDF-`` magic
+    (``sniff_format``; an HTML page, arbitrary bytes) is not read at
+    all: zero pages, empty info keys, "No text extracted" — as
+    ``parse_html_meta`` leaves non-HTML content empty."""
     raw = content or b""
-    b = decode_or_poison(raw)
+    b = decode_or_poison(raw) if sniff_format(raw) == "pdf" else b""
     text = b.decode("latin-1")  # one decode feeds both full-doc scans
     info = parse_info_dict(b, text=text)
     marks = page_marker_offsets_text(text)

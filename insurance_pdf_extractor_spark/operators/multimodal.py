@@ -30,18 +30,6 @@ from pyspark.sql import types as T
 
 from .filters import png_unfilter
 
-MEDIA_ASSET = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),      # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),    # opaque encoded bytes
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),

@@ -209,7 +209,6 @@ def stage_counts(curated: dict) -> dict[str, int]:
 # dedup), so resumed output == uninterrupted output, which the
 # kill-resume test asserts.
 
-CURATE_STAGES = ("quality", "exact_dedup", "near_dedup", "survivors", "packing")
 _CURATE_CKPT = "_curate_checkpoint"
 
 

@@ -94,20 +94,3 @@ RESULTS = T.StructType(
         T.StructField("created_at", T.TimestampType(), True),
     ]
 )
-
-# Checkpoint/lineage table (north rule: per-partition lineage +
-# counters so failed runs resume at partition granularity).
-CHECKPOINT = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("source_files", T.ArrayType(T.StringType()), True),
-        T.StructField("min_doc_id", T.StringType(), True),
-        T.StructField("max_doc_id", T.StringType(), True),
-        T.StructField("extractor_version", T.StringType(), False),
-        T.StructField("docs_processed", T.LongType(), False),
-        T.StructField("spans_emitted", T.LongType(), False),
-        T.StructField("docs_rejected", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-    ]
-)

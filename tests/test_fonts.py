@@ -22,7 +22,6 @@ from naive_tokenize import tokenize_content_reference
 
 from insurance_pdf_extractor_spark.operators.assemble import (
     extract_spans,
-    shard_content,
     shard_spans,
 )
 from insurance_pdf_extractor_spark.operators.filters import decode_content_filters
@@ -366,7 +365,9 @@ def test_sharded_runs_equal_fused(encoding):
     # buffer (orphan-CMap fallback for cid) — r5 regression: both sides
     # once identity-decoded 2-byte codes to the same gibberish
     assert any("Document sdoc" == r[4] for r in fused)
-    shards = shard_content(c, 2)
+    shards = [
+        (i, c[:pl] + c[s : s + ln], s - pl, bp) for i, s, ln, bp, pl in shard_spans(c, 2)
+    ]
     if encoding:
         assert len(shards) > 1  # the preamble prepend kept it shardable
         assert all(ch.startswith(b"%PDF") for _i, ch, _b, _p in shards)

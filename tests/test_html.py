@@ -317,6 +317,10 @@ def test_parse_html_meta():
     assert m["lang"] is None
     m = parse_html_meta(b'<!DOCTYPE html><html lang="fr-CA"><head><title>t</title></head>')
     assert m["lang"] == "fr-CA"
+    # CDATA runs to ']]>' (as in the extractor and stdlib html.parser):
+    # the <title> inside it is not the document's title
+    m = parse_html_meta(b"<html><head><![CDATA[ a > b <title>Fake</title> ]]><title>Real</title></head>")
+    assert m["title"] == "Real"
 
 
 def test_parse_html_meta_stops_at_body_and_handles_garbage():
@@ -443,58 +447,34 @@ def test_media_spans_interleave_in_order():
 # ---------------------------------------------------------------------------
 
 
-def test_differential_vs_stdlib_parser_corpus():
-    """The engine's regex/byte tokenizer vs an INDEPENDENT stdlib
-    html.parser-based reference driving the same block model: block
-    text sequences and media-ref sequences must agree on the rendered
-    corpus (offsets are pinned by the fixture geometry mirror — the
-    stdlib parser cannot report byte positions)."""
-    from naive_html import naive_extract
-
+def _corpus_pages():
+    """(doc_id, rendered page) pairs of the differential corpus."""
     from insurance_pdf_extractor_spark.sources.render import render_html
 
     for doc_id, n_words in [("dd-0", 0), ("dd-1", 7), ("dd-2", 95), ("dd-3", 200), ("dd-4", 411)]:
         rng = random.Random(hash(doc_id) & 0xFFFF)
         text = " ".join(rng.choice(_VOCAB) for _ in range(n_words))
-        b, _ = render_html(doc_id, text)
-        lines, media = extract_html(b)
-        ref_texts, ref_media = naive_extract(b)
-        assert [t for _p, _o, t in lines] == ref_texts, doc_id
-        assert [m[0] for m in media] == ref_media, doc_id
+        yield doc_id, render_html(doc_id, text)[0]
 
 
-def test_differential_vs_stdlib_parser_dirt():
-    """Dirty-construct differential: mixed casing, implied closes,
-    nested tables, unquoted attributes, comments with markup, quoted
-    '>' — both implementations must extract the same content."""
-    from naive_html import naive_extract
-
-    cases = [
-        b"<html><body><P>upper<p>implied close<LI>item<li>item2</body>",
-        b'<html><TABLE><tr><td>a</td><td>b<table><tr><td>inner</td></tr></table></td></tr></TABLE>',
-        b"<html><p title='q > r'>quoted</p><img src=media:u/1 alt=x><p>tail</p>",
-        b"<html><!-- <p>no</p> --><div>yes</div><script>var p = '<p>no</p>'</script>",
-        b"<html><nav><p>menu</p><img src='media:nav/1'></nav><main><p>body text</p></main>",
-        b"<html><p>a<br>b<br/>c</p>",
-        b"<html><blockquote>quoted block</blockquote><pre>pre text</pre>",
-        b"<html><p>x &amp; y &lt;z&gt; &#65;&#x42;</p>",
-        b'<html><video src="media:v/1" controls></video><audio><source src="media:a/1"></audio>',
-    ]
-    for i, b in enumerate(cases):
-        lines, media = extract_html(b)
-        ref_texts, ref_media = naive_extract(b)
-        assert [t for _p, _o, t in lines] == ref_texts, (i, lines, ref_texts)
-        assert [m[0] for m in media] == ref_media, i
+_DIRT = [
+    b"<html><body><P>upper<p>implied close<LI>item<li>item2</body>",
+    b'<html><TABLE><tr><td>a</td><td>b<table><tr><td>inner</td></tr></table></td></tr></TABLE>',
+    b"<html><p title='q > r'>quoted</p><img src=media:u/1 alt=x><p>tail</p>",
+    b"<html><!-- <p>no</p> --><div>yes</div><script>var p = '<p>no</p>'</script>",
+    b"<html><nav><p>menu</p><img src='media:nav/1'></nav><main><p>body text</p></main>",
+    b"<html><p>a<br>b<br/>c</p>",
+    b"<html><blockquote>quoted block</blockquote><pre>pre text</pre>",
+    b"<html><p>x &amp; y &lt;z&gt; &#65;&#x42;</p>",
+    b'<html><video src="media:v/1" controls></video><audio><source src="media:a/1"></audio>',
+]
 
 
-def test_differential_vs_stdlib_parser_random_markup():
-    """Seeded random well-formed-ish markup soup: generated from a
-    grammar both parsers must agree on."""
-    from naive_html import naive_extract
-
-    rng = random.Random(99)
+def _random_markup(seed: int = 99, trials: int = 50):
+    """Seeded random well-formed-ish body markup soup."""
+    rng = random.Random(seed)
     tags = ["p", "div", "b", "em", "span", "li", "h2", "td"]
-    for _trial in range(50):
+    for _trial in range(trials):
         parts = ["<html><body>"]
         depth_stack = []
         for _ in range(rng.randrange(5, 40)):
@@ -512,11 +492,117 @@ def test_differential_vs_stdlib_parser_random_markup():
             else:
                 parts.append("<br>")
         parts.append("</body></html>")
-        b = "".join(parts).encode()
+        yield "".join(parts).encode()
+
+
+def test_differential_vs_stdlib_parser_corpus():
+    """The engine's regex/byte tokenizer vs an INDEPENDENT stdlib
+    html.parser-based reference driving the same block model: block
+    text sequences and media-ref sequences must agree on the rendered
+    corpus (offsets are pinned by the fixture geometry mirror — the
+    stdlib parser cannot report byte positions)."""
+    from naive_html import naive_extract
+
+    for doc_id, b in _corpus_pages():
+        lines, media = extract_html(b)
+        ref_texts, ref_media = naive_extract(b)
+        assert [t for _p, _o, t in lines] == ref_texts, doc_id
+        assert [m[0] for m in media] == ref_media, doc_id
+
+
+def test_differential_vs_stdlib_parser_dirt():
+    """Dirty-construct differential: mixed casing, implied closes,
+    nested tables, unquoted attributes, comments with markup, quoted
+    '>' — both implementations must extract the same content."""
+    from naive_html import naive_extract
+
+    for i, b in enumerate(_DIRT):
+        lines, media = extract_html(b)
+        ref_texts, ref_media = naive_extract(b)
+        assert [t for _p, _o, t in lines] == ref_texts, (i, lines, ref_texts)
+        assert [m[0] for m in media] == ref_media, i
+
+
+def test_differential_vs_stdlib_parser_random_markup():
+    """Seeded random well-formed-ish markup soup: generated from a
+    grammar both parsers must agree on."""
+    from naive_html import naive_extract
+
+    for b in _random_markup():
         lines, media = extract_html(b)
         ref_texts, ref_media = naive_extract(b)
         assert [t for _p, _o, t in lines] == ref_texts, b
         assert [m[0] for m in media] == ref_media, b
+
+
+# markup hidden from the head scan: CDATA runs to ']]>', a PI and a
+# '</ …>' bogus comment to the first '>', and '<title/>' has no body
+_HEAD_DECOYS = [
+    b"<html><head><![CDATA[ a > b <title>Fake</title> ]]><title>Real</title></head>",
+    b"<html><head><![CDATA[ <meta name=author content=Fake> > "
+    b'<meta name="description" content="Fake"> ]]>'
+    b"<meta name=author content=Real><meta name=description content=Real></head>",
+    b'<!DOCTYPE html><![CDATA[ > <html lang="xx"> ]]><html lang="en"><head></head>',
+    b"<html><head><?pi <title>Fake</title> ?><title>Real</title></head>",
+    b"<html><head></ <title>Fake</title> ><title>Real</title></head>",
+    b"<html><head><title/><meta property=og:title content=og><title>Real</title></head>",
+]
+
+
+def _random_heads(seed: int = 17, trials: int = 300):
+    """Seeded random <head> soup over constructs both tokenizers read
+    alike (every tag terminated, raw-text closes without attributes)."""
+    rng = random.Random(seed)
+
+    def words() -> str:
+        return " ".join(rng.choice(_VOCAB) for _ in range(rng.randrange(0, 4)))
+
+    atoms = [
+        lambda: f"<title>{words()} &amp; {words()}</title>",
+        lambda: f"<TITLE>{words()} <b>x</b></TITLE >",
+        lambda: "<title/>",
+        lambda: f'<meta name="author" content="{words()}">',
+        lambda: f"<meta name=Description content='{words()} &mdash; d'>",
+        lambda: f"<meta property=og:title content={rng.choice(_VOCAB)}>",
+        lambda: "<meta name=author content>",
+        lambda: f"<!-- <title>{words()}</title> -->",
+        lambda: f"<![CDATA[ > <title>{words()}</title><meta name=author content=cd> ]]>",
+        lambda: "<?pi <meta name=description content=pi> ?>",
+        lambda: "</ <title>bogus</title> >",
+        lambda: f"<script>var t = '<title>{words()}</title>';</script>",
+        lambda: "<noscript><meta name=author content=ns></noscript>",
+        lambda: "<style>title { color: red }</style>",
+        lambda: f"<html lang={rng.choice(['de', 'en-GB', ''])}>",
+        lambda: "<link rel=icon href='/i.png'>",
+        lambda: words(),
+        lambda: "</head>" if rng.random() < 0.2 else "",
+        lambda: "<body>" if rng.random() < 0.2 else "<br/>",
+    ]
+    for _trial in range(trials):
+        parts = [rng.choice(["<!DOCTYPE html><html>", "<html>", "<HTML lang=fr>"]), "<head>"]
+        parts += [rng.choice(atoms)() for _ in range(rng.randrange(1, 12))]
+        yield "".join(parts).encode()
+
+
+def test_head_differential_vs_stdlib_parser():
+    """parse_html_meta vs a stdlib html.parser head reader
+    (naive_html.naive_head) on the extractor differentials' inputs,
+    head decoys and seeded random <head> markup."""
+    from naive_html import naive_head
+
+    from insurance_pdf_extractor_spark.operators.html import parse_html_meta
+
+    inputs = [b for _d, b in _corpus_pages()] + _DIRT + list(_random_markup())
+    inputs += _HEAD_DECOYS + list(_random_heads())
+    titled = 0
+    for b in inputs:
+        got = parse_html_meta(b)
+        assert got == naive_head(b), b
+        titled += got["title"] is not None
+    assert titled > 100  # the random heads exercise the title reader
+    for b in _HEAD_DECOYS:
+        got = parse_html_meta(b)
+        assert "Fake" not in got.values() and "xx" not in got.values(), b
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,7 @@ from insurance_pdf_extractor_spark.operators.metadata import (
 )
 from insurance_pdf_extractor_spark.sources.render import (
     default_metadata,
+    render_html,
     render_text,
 )
 
@@ -76,6 +77,19 @@ def test_pdf_info_empty_and_textless():
     assert info["num_pages"] == 1
     assert info["first_page_preview"] == "No text extracted"
     assert info["estimated_text_length"] == 0
+    # content without the %PDF- magic is not read as a PDF: an HTML
+    # page, or PDF-looking bytes behind no header
+    html, _ = render_html("m-1", "alpha beta gamma")
+    for raw in (html, b"%%PAGE 0\nBT\n100 700 Td\n(no magic) Tj\nET\n"):
+        info = pdf_info(raw)
+        assert info == {
+            "num_pages": 0,
+            "size_bytes": len(raw),
+            "size_mb": round(len(raw) / (1024 * 1024), 2),
+            **{snake: "" for snake in _KEYMAP.values()},
+            "first_page_preview": "No text extracted",
+            "estimated_text_length": 0,
+        }
 
 
 def test_info_obj_does_not_break_fast_path_or_spans(corpus_docs):

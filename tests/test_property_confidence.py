@@ -9,6 +9,7 @@ import random
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from insurance_pdf_extractor_spark import oracle
 from insurance_pdf_extractor_spark.constants import EMPTY_VALUE, FIELD_NAMES, MODEL_PRICING
@@ -46,12 +47,21 @@ def test_confidence_map_parity(spark, data):
         text = " | ".join(["Quote document header"] + present)
         rows.append((i, text, rec))
 
+    # explicit schema: when every row draws an empty carrier list,
+    # inference cannot type that column
+    schema = T.StructType(
+        [T.StructField("i", T.LongType()), T.StructField(DOC_TEXT, T.StringType())]
+        + [
+            T.StructField(f, T.ArrayType(T.StringType()) if f == "issuing_carrier" else T.StringType())
+            for f in FIELD_NAMES
+        ]
+    )
     df = spark.createDataFrame(
         [
             tuple([i, text] + [rec[f] for f in FIELD_NAMES])
             for i, text, rec in rows
         ],
-        ["i", DOC_TEXT] + FIELD_NAMES,
+        schema,
     )
     got = {r["i"]: r["m"] for r in df.select("i", confidence_map_expr(F.col(DOC_TEXT)).alias("m")).collect()}
 

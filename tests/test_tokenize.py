@@ -3,7 +3,7 @@ boilerplate stages (no Spark)."""
 
 from __future__ import annotations
 
-from insurance_pdf_extractor_spark.operators.assemble import assemble_spans, extract_spans, shard_content
+from insurance_pdf_extractor_spark.operators.assemble import assemble_spans, extract_spans, shard_spans
 from insurance_pdf_extractor_spark.operators.boilerplate import strip_boilerplate
 from insurance_pdf_extractor_spark.operators.layout import layout_lines
 from insurance_pdf_extractor_spark.operators.tokenize import page_marker_offsets, tokenize_content
@@ -117,12 +117,13 @@ def test_shard_content_roundtrip():
         b"%%%%PAGE %d\nBT\n100 700 Td\n(line%d) Tj\nET\n" % (i, i) for i in range(5)
     )
     content = b"%PDF-1.4\n" + pages
-    shards = shard_content(content, 2)
+    shards = shard_spans(content, 2)
     assert len(shards) == 3
     # re-based tokenization across shards == whole-document tokenization
     whole = tokenize_content(content)
     merged = []
-    for _idx, chunk, base_off, _base_page in shards:
+    for _idx, s, ln, _base_page, pl in shards:
+        chunk, base_off = content[:pl] + content[s : s + ln], s - pl
         for page, x, y, off, text in tokenize_content(chunk):
             merged.append((page, x, y, off + base_off, text))
     assert sorted(merged, key=lambda r: r[3]) == sorted(whole, key=lambda r: r[3])
