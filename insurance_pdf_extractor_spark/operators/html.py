@@ -246,12 +246,13 @@ def format_expr(prefix: Column) -> Column:
 
 def _parse_tag(
     buf: bytes, i: int, charset: str
-) -> tuple[str, dict[str, str], bool, int]:
+) -> tuple[str, dict[str, str], bool, int] | None:
     """Parse an open tag at ``i`` (buf[i] == '<', buf[i+1] is a
-    letter). Returns (name, attrs, self_closing, end_index_after_gt).
-    Attribute VALUES decode with the document charset (they carry
-    user content — meta descriptions, media refs); names are ASCII by
-    construction. On a malformed/unterminated tag, consumes to EOF."""
+    letter). Returns (name, attrs, self_closing, end_index_after_gt),
+    or None for a tag cut off at EOF (no closing '>'), which HTML5
+    drops. Attribute VALUES decode with the document charset (they
+    carry user content — meta descriptions, media refs); names are
+    ASCII by construction."""
     m = _TAG_NAME_RE.match(buf, i + 1)
     name = m.group(0).decode("ascii").lower()
     p = m.end()
@@ -288,7 +289,7 @@ def _parse_tag(
                 aval = aval[1:-1]
             attrs[aname] = aval.decode(charset, "replace")
         p = am.end()
-    return name, attrs, self_closing, n
+    return None
 
 
 # event kinds yielded by _walk
@@ -313,7 +314,9 @@ def _walk(buf: bytes, charset: str) -> Iterator[tuple]:
 
     Comments (to ``-->``), CDATA (to ``]]>``), declarations, PIs and
     ``</`` bogus comments (each to the first ``>``) yield nothing; an
-    unterminated construct runs to EOF, and a ``<`` at EOF is dropped."""
+    unterminated one runs to EOF. A tag cut off at EOF, open or
+    closing, ends the walk with no event (HTML5 eof-in-tag); a ``<`` or
+    ``</`` at EOF is text."""
     n = len(buf)
     i = 0
     while i < n:
@@ -323,7 +326,9 @@ def _walk(buf: bytes, charset: str) -> Iterator[tuple]:
             return
         if lt > i:
             yield _TEXT, i, lt
-        if lt + 1 >= n:
+        if lt + 1 >= n or (lt + 2 >= n and buf[lt + 1] == 0x2F):
+            # '<' or '</' at EOF opens no tag: text (HTML5)
+            yield _TEXT, lt, n
             return
         c = buf[lt + 1]
         if c == 0x21:  # '!'
@@ -342,7 +347,9 @@ def _walk(buf: bytes, charset: str) -> Iterator[tuple]:
             # a PI, or '</' followed by a non-letter (a bogus comment
             # per HTML5), ends at the first '>'
             end = buf.find(b">", lt + 2 if m is None else m.end())
-            i = n if end < 0 else end + 1
+            if end < 0:
+                return
+            i = end + 1
             if m is not None:
                 yield _CLOSE, m.group(0).decode("ascii").lower()
             continue
@@ -351,7 +358,10 @@ def _walk(buf: bytes, charset: str) -> Iterator[tuple]:
             yield _TEXT, lt, lt + 1
             i = lt + 1
             continue
-        name, attrs, self_closing, after = _parse_tag(buf, lt, charset)
+        tag = _parse_tag(buf, lt, charset)
+        if tag is None:
+            return
+        name, attrs, self_closing, after = tag
         i = after
         body_end = None
         if name in RAW_TEXT and not self_closing:

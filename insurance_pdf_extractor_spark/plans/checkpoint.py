@@ -9,6 +9,12 @@ buckets already recorded (the anti-join of SURVEY.md J3, taken in
 Python over at most ``n_buckets`` bucket ids) and processes only the
 remainder, making re-runs idempotent.
 
+The bucket is also the salt: the pending input is repartitioned on
+the bucket column (no partition count, so AQE coalesces the exchange
+to the input's size) and extracted presalted, so each bucket is
+extracted and written by one task and a run leaves one part file per
+bucket directory.
+
 The writer is parquet-partitioned by bucket (an Iceberg table with the
 same layout drops in when catalog jars are present — see
 sources/catalog.py); appends of distinct buckets never conflict.
@@ -63,7 +69,8 @@ def run_extract_job(
     buckets, minus the run's completed buckets, gives the sorted list
     of pending buckets (at most ``n_buckets`` ints). The
     input, the written-output read-back and the lineage rows all filter
-    on that list.
+    on that list. The pending input is salted by its bucket, one task
+    per bucket (module docstring).
 
     ``_limit_buckets`` is a test hook simulating a mid-run failure: only
     the first k pending buckets are processed before 'dying'.
@@ -79,11 +86,14 @@ def run_extract_job(
         return {"run_id": run_id, "buckets_completed": 0, "wall_ms": int((time.monotonic() - t0) * 1000)}
     in_run = F.col("bucket").isin(pending)
 
+    # the bucket is the salt: each bucket lands in one task, so each
+    # bucket directory gets one part file per run
     docs, rejects = extract_documents(
-        raw.filter(in_run).drop("bucket"),
+        raw.filter(in_run).repartition("bucket").drop("bucket"),
         max_size_bytes=max_size_bytes,
         shard_size_bytes=shard_size_bytes,
         shard_pages=shard_pages,
+        presalted=True,
     )
     docs = docs.withColumn("bucket", bucket_expr(n_buckets))
     rejects = rejects.withColumn("bucket", bucket_expr(n_buckets))

@@ -6,9 +6,10 @@ Both entry points are built from one private plan function, ``_extract``:
       → classify_rejects: size cap, format prefix, zero pages. Rejects
         are a side output (lineage), never silently dropped.
       → normal docs and all HTML: repartition on hash(doc_id), a
-        salted spread over partitions (skipped when presalted), then
-        ONE fused Arrow kernel (tokenize → layout → boilerplate →
-        assemble). One document is one row, so the kernel is a map.
+        salted spread over partitions (skipped when presalted) whose
+        width AQE sizes from shuffle bytes and cores, then ONE fused
+        Arrow kernel (tokenize → layout → boilerplate → assemble). One
+        document is one row, so the kernel is a map.
       → oversized PDFs: page-range sharding → shard spread → per-shard
         kernel → groupBy(doc_id) merge. Only the skewed tail pays these
         shuffles, of page chunks and small line lists.
@@ -129,14 +130,11 @@ def _extract(
     small = ok.filter((F.col("size_bytes") <= threshold) | ~is_pdf)
     # explicit salt: uniform hash spread of the fused-kernel docs over
     # partitions so a run of adjacent large documents cannot pile into
-    # one task. Oversized PDFs are spread per shard instead (below): a
-    # salt exchange in front of the shard path's Python UDFs would start
-    # them in every shuffle partition even when no document is
-    # oversized, since AQE cannot prune an empty exchange below a
-    # Python UDF.
+    # one task. No partition count: AQE sizes the exchange (see
+    # extract_documents). Oversized PDFs are spread per shard instead,
+    # after the page split (below).
     if not presalted:
-        n_part = int(raw.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        small = small.repartition(n_part, F.xxhash64("doc_id"))
+        small = small.repartition(F.xxhash64("doc_id"))
     small_docs = small.select(
         "doc_id",
         extract_spans_udf("content", "media", "n_pages").alias("spans"),
@@ -212,10 +210,18 @@ def extract_documents(
 ) -> tuple[DataFrame, DataFrame]:
     """documents_raw → (documents(doc_id, spans), rejects).
 
-    ``presalted``: the input is already hash(doc_id)-spread (e.g. by
-    render_documents_raw, or a bucketed/multi-file parquet table read
-    with ``files.maxPartitionBytes`` sizing) — skip the repartition so
-    the content bytes are never shuffled a second time. Use salted mode
+    Salted (the default), the fused-kernel documents are repartitioned
+    on ``xxhash64(doc_id)`` with no partition count: the exchange starts
+    at ``spark.sql.shuffle.partitions`` and AQE coalesces it to the
+    input's shuffle bytes and the cores, so a small input runs a few
+    kernel tasks instead of a fixed width of Python tasks (BENCH.md
+    "Per-task cost and the salt width").
+
+    ``presalted``: the input is already spread (e.g. by
+    render_documents_raw, by ``run_extract_job``'s bucket exchange, or
+    a bucketed/multi-file parquet table read with
+    ``files.maxPartitionBytes`` sizing) — skip the repartition so the
+    content bytes are never shuffled a second time. Use salted mode
     when the layout is unknown or adversarial (few huge files, doc
     order correlated with size); measured on a balanced layout,
     presalted is strictly faster (BENCH.md).

@@ -10,7 +10,11 @@ Notable choices:
   session overrides here.
 - AQE on: runtime partition coalescing + skew-join splitting are the
   first line of defense against skewed document sizes; explicit salting
-  in plans/pipeline.py is the second (north rule).
+  in plans/pipeline.py is the second (north rule). The salt exchanges
+  are repartitions by column with no partition count, so AQE also
+  sizes them: ``spark.sql.shuffle.partitions`` is their starting
+  width, and coalescing shrinks it to the input's shuffle bytes and
+  the cores.
 - Arrow batch size bounded so a batch of large documents fits executor
   memory in the pandas-UDF stages.
 """

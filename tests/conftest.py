@@ -21,18 +21,25 @@ def spark():
 @pytest.fixture(scope="session")
 def shuffle_partitions(spark):
     """``with shuffle_partitions(n):`` runs the block with
-    ``spark.sql.shuffle.partitions`` set to ``n`` (the extraction plan's
-    salt width), then restores the previous value."""
+    ``spark.sql.shuffle.partitions`` set to ``n`` (the width of the
+    extraction plan's salt exchange before AQE coalesces it), then
+    restores the previous settings. ``coalesce=False`` turns AQE
+    partition coalescing off, so the salt runs at exactly ``n``."""
 
     @contextmanager
-    def _set(n: int):
-        key = "spark.sql.shuffle.partitions"
-        old = spark.conf.get(key)
-        spark.conf.set(key, str(n))
+    def _set(n: int, coalesce: bool = True):
+        conf = {
+            "spark.sql.shuffle.partitions": str(n),
+            "spark.sql.adaptive.coalescePartitions.enabled": str(coalesce).lower(),
+        }
+        old = {k: spark.conf.get(k) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
         try:
             yield
         finally:
-            spark.conf.set(key, old)
+            for k, v in old.items():
+                spark.conf.set(k, v)
 
     return _set
 

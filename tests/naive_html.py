@@ -15,6 +15,9 @@ Deliberate scope notes (kept in sync with operators/html.py):
 - charset: the caller decodes bytes before feeding this parser.
 - convert_charrefs=True → entities arrive decoded in handle_data,
   matching decode_entities for the supported subset.
+- a tag cut off at EOF is dropped (HTML5 eof-in-tag); the stdlib 3.11
+  parser would emit it as text, so ``_close`` discards the unparsed
+  ``<tag`` / ``</tag`` remainder before ``close()``.
 - raw-text elements: stdlib 3.11 reads only script/style as raw text;
   the head reader switches the parser to raw-text mode for every
   ``_RAW_SKIP`` element so a ``<title>`` body is read like RCDATA. Its
@@ -25,6 +28,7 @@ Deliberate scope notes (kept in sync with operators/html.py):
 from __future__ import annotations
 
 import html
+import re
 from html.parser import HTMLParser
 
 from insurance_pdf_extractor_spark.operators.html import (
@@ -40,6 +44,16 @@ from insurance_pdf_extractor_spark.operators.html import (
 from insurance_pdf_extractor_spark.operators.boilerplate import norm_key
 
 _RAW_SKIP = {"script", "style", "noscript", "template", "textarea", "title", "svg", "math"}
+_CUT_TAG = re.compile(r"</?[a-zA-Z]")
+
+
+def _close(p: HTMLParser) -> None:
+    """``p.close()``, dropping a tag cut off at EOF: after ``feed`` the
+    parser holds back an incomplete tag as its unparsed ``rawdata``
+    (outside raw-text mode, where that remainder is element body)."""
+    if not p.cdata_elem and _CUT_TAG.match(p.rawdata):
+        p.rawdata = ""
+    p.close()
 
 
 class _Ref(HTMLParser):
@@ -116,7 +130,7 @@ def naive_extract(content: bytes) -> tuple[list[str], list[str]]:
     heuristics — the reference result the engine must match."""
     p = _Ref()
     p.feed(content.decode(detect_charset(content), "replace"))
-    p.close()
+    _close(p)
     p._flush()
     kept = [
         t
@@ -196,7 +210,7 @@ def naive_head(content: bytes) -> dict[str, str | None]:
     charset = detect_charset(content)
     p = _HeadRef()
     p.feed(content.decode(charset, "replace"))
-    p.close()
+    _close(p)
     if p.title is not None:  # unclosed title: its body runs to EOF
         p.title.append(p.rawdata)
         p._end_title()

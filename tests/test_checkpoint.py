@@ -4,6 +4,8 @@ single uninterrupted run."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from insurance_pdf_extractor_spark import corpus as C
@@ -18,6 +20,20 @@ def _spans_map(spark, path):
 def _lineage(spark, out_dir, run_id):
     ck = spark.read.parquet(f"{out_dir}/checkpoint").filter(F.col("run_id") == run_id)
     return [r.asDict() for r in ck.collect()]
+
+
+def _part_files(table_dir):
+    """{bucket directory name: number of parquet part files in it}."""
+    return {
+        d.name: sum(1 for f in d.iterdir() if f.name.startswith("part-"))
+        for d in Path(table_dir).glob("bucket=*")
+    }
+
+
+def _recount(raw, n_buckets):
+    """{bucket: input documents in it}, counted from the input."""
+    rows = raw.groupBy(bucket_expr(n_buckets).alias("bucket")).count().collect()
+    return {r["bucket"]: r["count"] for r in rows}
 
 
 def test_kill_resume(spark, corpus_docs, tmp_path):
@@ -41,6 +57,7 @@ def test_kill_resume(spark, corpus_docs, tmp_path):
     assert stats2["buckets_completed"] == 5
     resumed = _spans_map(spark, f"{part_dir}/documents")
     assert resumed == full
+    assert set(_part_files(f"{part_dir}/documents").values()) == {1}
 
     # the resume wrote one lineage row per pending bucket, and nothing
     # else; every bucket's counters add up to a recount of the input
@@ -48,11 +65,7 @@ def test_kill_resume(spark, corpus_docs, tmp_path):
     resumed_buckets = sorted(r["partition_id"] for r in lineage if r["partition_id"] not in killed)
     assert resumed_buckets == sorted(set(range(8)) - killed)
     assert len(lineage) == 8
-    recount = {
-        r["bucket"]: r["count"]
-        for r in raw.groupBy(bucket_expr(8).alias("bucket")).count().collect()
-    }
-    assert {r["partition_id"]: r["docs_processed"] + r["docs_rejected"] for r in lineage} == recount
+    assert {r["partition_id"]: r["docs_processed"] + r["docs_rejected"] for r in lineage} == _recount(raw, 8)
 
     # re-run after completion: nothing left to do (idempotent)
     stats3 = run_extract_job(raw, part_dir, run_id="r1", n_buckets=8)
@@ -66,6 +79,24 @@ def test_kill_resume(spark, corpus_docs, tmp_path):
     assert row["extractor_version"]
     assert row["spans_emitted"] > 0
     assert row["wall_ms"] >= 0
+
+
+def test_one_part_file_per_bucket(spark, corpus_docs, shuffle_partitions, tmp_path):
+    """The bucket is the salt: each bucket is extracted and written by
+    one task, so one run leaves exactly one part file in every
+    documents/ and rejects/ bucket directory, even with the exchange
+    held at 16 partitions (AQE coalescing off); lineage still adds up."""
+    raw = C.to_raw_df(spark, corpus_docs[:60])
+    out = str(tmp_path / "one")
+    with shuffle_partitions(16, coalesce=False):
+        stats = run_extract_job(raw, out, run_id="one", n_buckets=8)
+    assert stats["buckets_completed"] == 8
+    docs_files = _part_files(f"{out}/documents")
+    rejects_files = _part_files(f"{out}/rejects")
+    assert len(docs_files) == 8 and set(docs_files.values()) == {1}, docs_files
+    assert rejects_files and set(rejects_files.values()) == {1}, rejects_files
+    lineage = _lineage(spark, out, "one")
+    assert {r["partition_id"]: r["docs_processed"] + r["docs_rejected"] for r in lineage} == _recount(raw, 8)
 
 
 def test_all_rejected_batch_still_checkpoints(spark, tmp_path):

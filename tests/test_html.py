@@ -5,7 +5,9 @@ byte mirror, and the interleaved-format Spark pipeline."""
 from __future__ import annotations
 
 import random
+import re
 import sys
+import zlib
 from pathlib import Path
 
 import pytest
@@ -394,6 +396,18 @@ def test_hostile_bombs():
     assert len(lines) == 1
 
 
+def test_tag_cut_at_eof_is_dropped():
+    """HTML5 eof-in-tag: a tag with no closing '>' before EOF is dropped,
+    with its attributes — no media span, no head metadata."""
+    from insurance_pdf_extractor_spark.operators.html import parse_html_meta
+
+    lines, media = extract_html(b"<html><body><p>t</p><img src=media:x/1")
+    assert (texts(lines), media) == (["t"], [])
+    assert texts(extract_html(b"<html><p>t<b")[0]) == ["t"]
+    assert parse_html_meta(b"<html><head><meta name=author content=x")["author"] is None
+    assert parse_html_meta(b"<html lang=en><head><title>T</title></hea")["title"] == "T"
+
+
 # ---------------------------------------------------------------------------
 # renderer ↔ fixture mirror
 # ---------------------------------------------------------------------------
@@ -452,7 +466,7 @@ def _corpus_pages():
     from insurance_pdf_extractor_spark.sources.render import render_html
 
     for doc_id, n_words in [("dd-0", 0), ("dd-1", 7), ("dd-2", 95), ("dd-3", 200), ("dd-4", 411)]:
-        rng = random.Random(hash(doc_id) & 0xFFFF)
+        rng = random.Random(zlib.crc32(doc_id.encode()))
         text = " ".join(rng.choice(_VOCAB) for _ in range(n_words))
         yield doc_id, render_html(doc_id, text)[0]
 
@@ -521,6 +535,40 @@ def test_differential_vs_stdlib_parser_dirt():
         ref_texts, ref_media = naive_extract(b)
         assert [t for _p, _o, t in lines] == ref_texts, (i, lines, ref_texts)
         assert [m[0] for m in media] == ref_media, i
+
+
+# a tag, open or closing, and the comments whose bodies are not markup
+_TAG_OR_COMMENT = re.compile(rb"<!--.*?(?:-->|$)|</?[a-zA-Z][^<>]*>", re.S)
+
+
+def _cut_in_tags():
+    """Corpus pages cut off inside a tag: after its '<' or '</' (no tag
+    yet: text), after the first name letter, and before its '>'."""
+    for doc_id, b in _corpus_pages():
+        for m in _TAG_OR_COMMENT.finditer(b):
+            if not m.group().startswith(b"<!--"):
+                name = m.start() + (2 if m.group()[1:2] == b"/" else 1)
+                for cut in sorted({name, name + 1, m.end() - 1}):
+                    yield doc_id, b[:cut]
+
+
+def test_differential_vs_stdlib_parser_cut_tags():
+    """Pages cut off inside a tag: the engine and both stdlib references
+    drop the cut tag and keep a bare '<' or '</' as text (extracted
+    blocks, media and head metadata agree)."""
+    from naive_html import naive_extract, naive_head
+
+    from insurance_pdf_extractor_spark.operators.html import parse_html_meta
+
+    n = 0
+    for doc_id, b in _cut_in_tags():
+        lines, media = extract_html(b)
+        ref_texts, ref_media = naive_extract(b)
+        assert [t for _p, _o, t in lines] == ref_texts, (doc_id, b[-40:])
+        assert [m[0] for m in media] == ref_media, (doc_id, b[-40:])
+        assert parse_html_meta(b) == naive_head(b), (doc_id, b[-40:])
+        n += 1
+    assert n > 200
 
 
 def test_differential_vs_stdlib_parser_random_markup():

@@ -105,16 +105,24 @@ def test_sharded_path_used_and_equivalent(spark, corpus_docs, shuffle_partitions
 
 def test_parallelism_invariance(spark, corpus_docs, shuffle_partitions):
     """Identical output at different partition counts (north rule: all
-    ordering derives from data, never task order)."""
+    ordering derives from data, never task order). AQE may coalesce the
+    salt exchange of 40 small documents to one partition at any width,
+    so the uncoalesced arm pins it at 8 and 32 and checks that the
+    documents really spread over more partitions at 32."""
     sample = [d for d in corpus_docs if d.expected_spans is not None][:40]
     raw = C.to_raw_df(spark, sample)
 
-    def spans_at(n_part):
-        with shuffle_partitions(n_part):
+    def spans_at(n_part, coalesce=True):
+        with shuffle_partitions(n_part, coalesce):
             out, _ = extract_documents(raw)
-            return {r["doc_id"]: r["spans"] for r in out.collect()}
+            rows = out.select("*", F.spark_partition_id().alias("part")).collect()
+        return {r["doc_id"]: r["spans"] for r in rows}, len({r["part"] for r in rows})
 
-    assert spans_at(1) == spans_at(8)
+    base, _ = spans_at(1)
+    assert spans_at(8)[0] == base
+    (at8, parts8), (at32, parts32) = spans_at(8, False), spans_at(32, False)
+    assert at8 == base and at32 == base
+    assert 1 < parts8 < parts32
 
 
 def test_records_match_oracle(pipeline_out, corpus_docs):
@@ -147,16 +155,20 @@ def test_documents_schema(pipeline_out):
 
 def test_extract_results_parallelism_invariant(spark, corpus_docs, shuffle_partitions):
     """The single-pass plan emits identical rows at different partition
-    counts (north rule: all ordering data-derived)."""
+    counts (north rule: all ordering data-derived), with AQE coalescing
+    and with the salt exchange held at 8 and 32 partitions."""
     raw = C.to_raw_df(spark, corpus_docs[:40])
 
-    def snapshot(partitions):
-        with shuffle_partitions(partitions):
+    def snapshot(partitions, coalesce=True):
+        with shuffle_partitions(partitions, coalesce):
             res = extract_results(raw)
             rows = res.select("doc_id", "status", "extracted_data", "warnings", "file_size").collect()
         return sorted((r["doc_id"], r["status"], r["extracted_data"], tuple(r["warnings"] or []), r["file_size"]) for r in rows)
 
-    assert snapshot(2) == snapshot(16)
+    base = snapshot(2)
+    assert snapshot(16) == base
+    assert snapshot(8, coalesce=False) == base
+    assert snapshot(32, coalesce=False) == base
 
 
 def test_materialized_source_value_identical(spark, corpus_docs, shuffle_partitions):
@@ -188,12 +200,13 @@ def test_materialized_source_value_identical(spark, corpus_docs, shuffle_partiti
     assert base == shared
 
 
-@pytest.mark.parametrize("n_part", [1, 8])
+@pytest.mark.parametrize("n_part", [1, 8, 32])
 @pytest.mark.parametrize("presalted", [False, True])
 def test_entry_points_share_one_plan(spark, corpus_docs, shuffle_partitions, presalted, n_part):
     """extract_results is build_results over extract_documents' accepted
     documents plus one stub per extract_documents reject, salted or
-    presalted, at any partition count."""
+    presalted, at any partition count. AQE may coalesce 1 and 8 to the
+    same width; 32 runs with coalescing off, at its full width."""
     rejected_docs = [d for d in corpus_docs if d.n_pages == 0 or len(d.content) > 60_000]
     accepted_docs = [d for d in corpus_docs if d not in rejected_docs][:24]
     rows = C.raw_rows(rejected_docs + accepted_docs) + [("not-a-format", b"GIF89a....", [], 1, 10)]
@@ -203,7 +216,7 @@ def test_entry_points_share_one_plan(spark, corpus_docs, shuffle_partitions, pre
     def by_doc(df):
         return {r["doc_id"]: r.asDict(recursive=True) for r in df.collect()}
 
-    with shuffle_partitions(n_part):
+    with shuffle_partitions(n_part, coalesce=n_part < 32):
         docs, rejects = extract_documents(raw, **opts)
         expected = by_doc(build_results(docs, raw=raw))
         results = by_doc(extract_results(raw, **opts))

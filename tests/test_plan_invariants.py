@@ -154,6 +154,23 @@ def test_extract_pipeline_storage_plan_shape(spark, tmp_path):
     assert no_content, f"reject branch scan reads content bytes:\n{read_lines}"
 
 
+def test_extract_salt_exchange_is_coalescible(spark):
+    """The fused kernel's doc-id salt is a repartition by column with no
+    partition count (REPARTITION_BY_COL), so AQE sizes it from shuffle
+    bytes and cores; a fixed-count REPARTITION_BY_NUM salt would run
+    ``spark.sql.shuffle.partitions`` Python tasks whatever the input."""
+    import re
+
+    from insurance_pdf_extractor_spark.plans.pipeline import extract_documents
+    from insurance_pdf_extractor_spark.schema import DOCUMENTS_RAW
+
+    raw = spark.createDataFrame([("d-1", b"%PDF-1.4\n", [], 1, 9)], DOCUMENTS_RAW)
+    plan = _plan(spark, extract_documents(raw)[0])
+    salts = re.findall(r"hashpartitioning\(xxhash64\(doc_id#\d+, 42\), \d+\), (\w+)", plan)
+    assert salts == ["REPARTITION_BY_COL"], plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
+
+
 def test_html_meta_scan_is_map_only(spark):
     """The HTML <head> metadata scan rides the scan: one Arrow kernel,
     zero exchanges — at corpus scale it must stay a pure map over the
