@@ -36,9 +36,13 @@ dirty-corpus behavior):
 
 One of each, shared by every caller:
 
+- :class:`ObjectIndex` maps object numbers to body spans in one
+  header pass, read on demand; indirect ``/Length`` and every
+  font-layer reference (operators/fonts.py) resolve through it;
+- :func:`_dict_extent` is the one ``<<…>>`` scanner (compiled-pattern
+  searches from delimiter to delimiter), here and in the font layer;
 - :func:`read_stream_object` reads one stream object (dict, payload,
-  end); the buffer rewrite and the font layer's ToUnicode lookup
-  (operators/fonts.py) both read through it;
+  end) for the buffer rewrite and the ToUnicode lookup;
 - :func:`_rewrite_stream_objects` is the one walk over a buffer's
   objects; the ObjStm/XRef pre-pass and the filter pass are each a
   small per-stream rewrite on top of it;
@@ -68,6 +72,7 @@ import numpy as np
 MAX_DECODED_BYTES = 64 << 20
 
 _WS = b" \t\r\n\f\x00"
+_WS_RUN = re.compile(rb"[ \t\r\n\f\x00]*+")
 
 # run-start lookbehind + possessive runs: a digit sequence is tried
 # ONCE from its start (hex-string operands are multi-hundred-digit
@@ -75,15 +80,15 @@ _WS = b" \t\r\n\f\x00"
 # run — measured ~1.4 ms/doc on 2-byte-font content, the same ReDoS
 # class as _INFO_OBJ)
 _OBJ_HDR = re.compile(rb"(?<![0-9])(\d++)[ \t\r\n\f\x00]++(\d++)[ \t\r\n\f\x00]++obj\b")
-# (?![0-9]) pins the digit run so backtracking can't split "12 0 R"
-# into length "1" + a failed indirect-ref lookahead on "2 0 R"
-_LENGTH_DIRECT = re.compile(
-    rb"/Length[ \t\r\n\f\x00]+(\d+)(?![0-9])(?![ \t\r\n\f\x00]+\d+[ \t\r\n\f\x00]+R\b)"
-)
-# the common real-writer shape /Length 7 0 R: the length lives in its
-# own integer object (streamed out before the length is known)
-_LENGTH_INDIRECT = re.compile(
-    rb"/Length[ \t\r\n\f\x00]+(\d+)[ \t\r\n\f\x00]+(\d+)[ \t\r\n\f\x00]+R\b"
+# where an object body ends: the next header (group 1 set) or endobj
+_OBJ_EDGE = re.compile(_OBJ_HDR.pattern + rb"|endobj")
+_INT_BODY = re.compile(rb"[ \t\r\n\f\x00]*+(\d++)[ \t\r\n\f\x00]*+")
+MAX_OBJECTS = 10_000  # hostile-input bound on the headers one index reads
+
+# /Length N, or the common real-writer shape /Length N G R: the length
+# lives in its own integer object (streamed out before it is known)
+_LENGTH = re.compile(
+    rb"/Length[ \t\r\n\f\x00]+(\d++)(?:[ \t\r\n\f\x00]+(\d++)[ \t\r\n\f\x00]+R\b)?"
 )
 _FILTER = re.compile(
     rb"/Filter[ \t\r\n\f\x00]*(?:\[(?P<arr>[^\]]*)\]|/(?P<one>[A-Za-z0-9]+))"
@@ -438,57 +443,94 @@ def stream_object_bytes(data: bytes, names: tuple[str, ...], obj_num: int = 2) -
 # ---------------------------------------------------------------------------
 
 
+def _int(digits: bytes | str) -> int | None:
+    """A digit run's value; None when it is too long for ``int()``: such
+    a number names no object or length (dirt, not a bomb)."""
+    try:
+        return int(digits)
+    except ValueError:
+        return None
+
+
+class ObjectIndex:
+    """objnum → (generation, body start, body end) for one buffer's first
+    ``MAX_OBJECTS`` ``N G obj`` headers (no xref), read in one pass on
+    demand: :meth:`get` reads only as far as the number's first
+    definition, which wins as in the splice pass; :meth:`items` reads
+    to the end. A body ends at the next ``endobj`` or header, so bodies
+    never overlap."""
+
+    def __init__(self, buf: bytes):
+        self._seen: dict[int, tuple[int, int, int]] = {}
+        self._entries = self._read(buf)
+
+    @staticmethod
+    def _read(buf: bytes):
+        m = _OBJ_HDR.search(buf)
+        for _ in range(MAX_OBJECTS):
+            if m is None:
+                return
+            edge = _OBJ_EDGE.search(buf, m.end())
+            num, gen = _int(m.group(1)), _int(m.group(2))
+            if num is not None and gen is not None:
+                yield num, (gen, m.end(), len(buf) if edge is None else edge.start())
+            if edge is not None and edge.group(1) is None:  # endobj
+                edge = _OBJ_HDR.search(buf, edge.end())
+            m = edge
+
+    def get(self, num: int | None) -> tuple[int, int, int] | None:
+        if num not in self._seen:
+            for n, entry in self._entries:
+                self._seen.setdefault(n, entry)
+                if n == num:
+                    break
+        return self._seen.get(num)
+
+    def items(self):
+        self.get(None)  # no object has number None: reads every header
+        return self._seen.items()
+
+
 def _skip_ws(buf: bytes, i: int) -> int:
-    n = len(buf)
-    while i < n and buf[i] in _WS:
-        i += 1
-    return i
+    return _WS_RUN.match(buf, i).end()
+
+
+# past ordinary bytes and lone '>' to one dict delimiter: open, close, a
+# hex string, a hex string cut by the end of the buffer, a literal
+# string's opening paren
+_DICT_STEP = re.compile(
+    rb"(?:[^<>(]++|>(?!>))*+(?:(?P<open><<)|(?P<close>>>)|(?P<hex><[^>]*+>)|(?P<cut><)|(?P<lit>\())"
+)
+# inside a literal string: everything up to the next unescaped paren
+_STR_STEP = re.compile(rb"(?:[^()\\]++|\\.)*+[()]", re.S)
 
 
 def _dict_extent(buf: bytes, start: int) -> int:
     """End index (exclusive) of the ``<<…>>`` dict at ``start``,
-    honoring nesting, literal strings, and hex strings."""
-    n = len(buf)
-    i = start
+    honoring nesting, literal strings (escapes, nested parens) and hex
+    strings, one pattern match per delimiter. ``ValueError`` when
+    unterminated."""
     depth = 0
-    while i < n:
-        c = buf[i]
-        if c == 0x3C:  # '<'
-            if buf[i : i + 2] == b"<<":
-                depth += 1
-                i += 2
-                continue
-            # hex string: skip to '>'
-            j = buf.find(b">", i + 1)
-            if j == -1:
-                raise ValueError("unterminated hex string in dict")
-            i = j + 1
-            continue
-        if c == 0x3E:  # '>'
-            if buf[i : i + 2] == b">>":
-                depth -= 1
-                i += 2
-                if depth == 0:
-                    return i
-                continue
-            i += 1
-            continue
-        if c == 0x28:  # '(' literal string with escapes + nesting
-            lvl = 0
-            while i < n:
-                if buf[i] == 0x5C:  # backslash
-                    i += 2
-                    continue
-                if buf[i] == 0x28:
-                    lvl += 1
-                elif buf[i] == 0x29:
-                    lvl -= 1
-                    if lvl == 0:
-                        i += 1
-                        break
-                i += 1
-            continue
-        i += 1
+    pos = start
+    while (m := _DICT_STEP.match(buf, pos)) is not None:
+        pos = m.end()
+        kind = m.lastgroup
+        if kind == "open":
+            depth += 1
+        elif kind == "close":
+            depth -= 1
+            if depth == 0:
+                return pos
+        elif kind == "cut":
+            raise ValueError("unterminated hex string in dict")
+        elif kind == "lit":
+            level = 1
+            while level:
+                step = _STR_STEP.match(buf, pos)
+                if step is None:
+                    raise ValueError("unterminated string in dict")
+                pos = step.end()
+                level += 1 if buf[pos - 1] == 0x28 else -1
     raise ValueError("unterminated dict")
 
 
@@ -508,13 +550,9 @@ def _parse_filters(d: bytes) -> tuple[bytes, ...] | None:
 # improve ratios; decode post-processes the inflated bytes.
 
 _DPARMS = re.compile(rb"/DecodeParms[ \t\r\n\f\x00]*<<")
-_INT_KEY = {
-    b"Predictor": re.compile(rb"/Predictor[ \t\r\n\f\x00]+(\d+)"),
-    b"Columns": re.compile(rb"/Columns[ \t\r\n\f\x00]+(\d+)"),
-    b"Colors": re.compile(rb"/Colors[ \t\r\n\f\x00]+(\d+)"),
-    b"BitsPerComponent": re.compile(rb"/BitsPerComponent[ \t\r\n\f\x00]+(\d+)"),
-    b"EarlyChange": re.compile(rb"/EarlyChange[ \t\r\n\f\x00]+(\d+)"),
-}
+_INT_KEY = re.compile(
+    rb"/(Predictor|Columns|Colors|BitsPerComponent|EarlyChange)[ \t\r\n\f\x00]+(\d+)"
+)
 
 
 def _parse_decode_parms(d: bytes) -> dict[bytes, int] | None:
@@ -527,10 +565,8 @@ def _parse_decode_parms(d: bytes) -> dict[bytes, int] | None:
         return None
     sub = d[m.end() - 2 : sub_end]
     out: dict[bytes, int] = {}
-    for key, rx in _INT_KEY.items():
-        km = rx.search(sub)
-        if km is not None:
-            out[key] = int(km.group(1))
+    for km in _INT_KEY.finditer(sub):
+        out.setdefault(km.group(1), int(km.group(2)))  # the first of each key
     return out or None
 
 
@@ -676,25 +712,27 @@ def encode_predictor(data: bytes, predictor: int, columns: int = 1, colors: int 
     return bytes(out)
 
 
+_EOL = re.compile(rb"\r\n?|\n?")
+
+
 def _consume_eol(buf: bytes, i: int) -> int:
-    if buf[i : i + 2] == b"\r\n":
-        return i + 2
-    if buf[i : i + 1] in (b"\n", b"\r"):
-        return i + 1
-    return i
+    return _EOL.match(buf, i).end()
 
 
-def read_stream_object(content: bytes, start: int) -> tuple[bytes, bytes | None, int] | None:
+def read_stream_object(
+    content: bytes, start: int, objs: ObjectIndex
+) -> tuple[bytes, bytes | None, int] | None:
     """Read the object body that follows an ``N G obj`` header ending at
     ``start``: ``(dict, payload, end)``, ``end`` being past
     ``endstream``/``endobj`` plus one EOL. The EOL after the ``stream``
-    keyword may be CRLF, LF or a lone CR. ``/Length`` wins when direct
-    (or resolvable as an indirect integer object via a linear scan — no
-    xref needed) and truthful; otherwise scan for the ``endstream``
-    keyword (the pypdf fallback). ``payload`` is None when the dict is
-    not followed by ``stream`` (``end`` is then the dict's end) or when
-    no ``endstream`` follows (hopeless truncation: ``end`` is the end of
-    ``content``). None when no complete ``<<…>>`` dict starts there."""
+    keyword may be CRLF, LF or a lone CR. The first ``/Length`` wins
+    when truthful and direct, or a reference to a same-generation
+    integer object found through ``objs`` (the :class:`ObjectIndex` of
+    ``content``); otherwise scan for the ``endstream`` keyword (the
+    pypdf fallback). ``payload`` is None when the dict is not followed by
+    ``stream`` (``end`` is then the dict's end) or when no ``endstream``
+    follows (hopeless truncation: ``end`` is the end of ``content``).
+    None when no complete ``<<…>>`` dict starts there."""
     i = _skip_ws(content, start)
     if content[i : i + 2] != b"<<":
         return None
@@ -709,28 +747,17 @@ def read_stream_object(content: bytes, start: int) -> tuple[bytes, bytes | None,
     j = _consume_eol(content, j + 6)
     n = len(content)
     data: bytes | None = None
-    end = -1
-    length_val: int | None = None
-    lm = _LENGTH_DIRECT.search(d)
-    if lm is not None:
-        length_val = int(lm.group(1))
-    else:
-        im = _LENGTH_INDIRECT.search(d)
-        if im is not None:
-            ref = re.search(
-                rb"(?<![0-9])%s[ \t\r\n\f\x00]+%s[ \t\r\n\f\x00]+obj[ \t\r\n\f\x00]+(\d+)[ \t\r\n\f\x00]*endobj"
-                % (im.group(1), im.group(2)),
-                content,
-            )
-            if ref is not None:
-                length_val = int(ref.group(1))
-    if length_val is not None:
-        k = j + length_val
-        if length_val <= n - j:
-            k2 = _skip_ws(content, k)
-            if content[k2 : k2 + 9] == b"endstream":
-                data = content[j:k]
-                end = k2 + 9
+    length: int | None = None
+    lm = _LENGTH.search(d)
+    if lm is not None and lm.group(2) is None:
+        length = _int(lm.group(1))
+    elif lm is not None and (hit := objs.get(_int(lm.group(1)))) and hit[0] == _int(lm.group(2)):
+        body = _INT_BODY.fullmatch(content, hit[1], hit[2])
+        length = None if body is None else _int(body.group(1))
+    if length is not None and length <= n - j:
+        k = _skip_ws(content, j + length)
+        if content[k : k + 9] == b"endstream":
+            data, end = content[j : j + length], k + 9
     if data is None:
         e = content.find(b"endstream", j)
         if e == -1:
@@ -795,12 +822,13 @@ def _rewrite_stream_objects(content: bytes, rewrite, max_decoded: int) -> bytes:
     out: list[bytes] = []
     pos = 0
     budget = max_decoded
+    objs = ObjectIndex(content)
     while True:
         m = _OBJ_HDR.search(content, pos)
         if m is None:
             out.append(content[pos:])
             break
-        obj = read_stream_object(content, m.end())
+        obj = read_stream_object(content, m.end(), objs)
         if obj is None:
             out.append(content[pos : m.end()])
             pos = m.end()

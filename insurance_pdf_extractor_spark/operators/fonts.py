@@ -16,7 +16,9 @@ that resolution from scratch:
 - :func:`parse_font_maps` scans a document buffer once for font
   objects (``/Type /Font``), page-resource bindings
   (``/Font << /F1 12 0 R >>``), encoding dictionaries, and ToUnicode
-  CMap streams, producing ``{resource_name: FontMap}``;
+  CMap streams, producing ``{resource_name: FontMap}``; references
+  resolve through ``filters.ObjectIndex`` (generation not checked)
+  and dicts through ``filters._dict_extent``;
 - :class:`FontMap` decodes one shown string's byte image to text
   (1-byte code path for simple fonts, 2-byte path for Type0);
 - glyph names resolve through a public Adobe Glyph List subset plus
@@ -35,7 +37,8 @@ tier through :func:`show_decode`):
   page-resource refinement would need a page tree, which the
   sequential %%PAGE corpus does not carry);
 - hostile or corrupt font material (truncated dicts, garbage CMaps,
-  unresolvable streams) silently yields no map for that font — the
+  unresolvable streams, object numbers too long for ``int()``)
+  silently yields no map for that font — the
   document still extracts through the identity fallback, mirroring
   the per-stream dirt rule in operators/filters.py. Resource attacks
   (CMap range bombs) raise ``ValueError`` before materializing.
@@ -51,9 +54,11 @@ import re
 
 from .filters import (
     MAX_DECODED_BYTES,
+    ObjectIndex,
     StreamBombError,
     _decode_stream_data,
     _dict_extent,
+    _int,
     read_stream_object,
 )
 
@@ -368,7 +373,6 @@ def parse_cmap(data: bytes) -> tuple[int, dict[int, str]]:
 # document scan: font objects, resource bindings, encoding dicts
 # ---------------------------------------------------------------------------
 
-_OBJ_HDR_S = re.compile(rf"(?<![0-9])(\d++){_SP}++(\d++){_SP}++obj\b")
 _TYPE_FONT = re.compile(rf"/Type{_SP}*/Font(?![A-Za-z])")
 _SUBTYPE = re.compile(rf"/Subtype{_SP}*/([A-Za-z0-9]+)")
 _BASE_ENC_NAME = re.compile(rf"/BaseEncoding{_SP}*/([A-Za-z]+)")
@@ -382,15 +386,11 @@ _RES_ENTRY = re.compile(
     rf"/([^ \t\r\n\f\x00()<>\[\]{{}}/%]+){_SP}*(?:(\d+){_SP}+(\d+){_SP}+R\b|(<<))"
 )
 
-_MAX_OBJECTS = 10_000  # hostile-input bound on the object scan
-
 
 def _balanced_dict(text: str, start: int, buf: bytes | None = None) -> str | None:
     """The ``<<…>>`` body starting at ``start`` (index of the first
-    '<'), via the shared byte-level extent scanner. Pass ``buf`` (the
-    text's latin-1 bytes) when calling repeatedly — re-encoding a
-    multi-MB document per extraction is an O(doc) cost the caller can
-    pay once."""
+    '<'), via the shared dict scanner. Pass ``buf`` (the text's latin-1
+    bytes) for a whole document, so it is encoded once."""
     if buf is None:
         buf = text.encode("latin-1")
     try:
@@ -408,33 +408,13 @@ def _parse_differences(body: str, pos: int, cmap: dict[int, str]) -> None:
         if m.group(3) is not None:  # ']'
             return
         if m.group(1) is not None:
-            try:
-                code = int(m.group(1))
-            except ValueError:
+            if (code := _int(m.group(1))) is None:
                 return
             continue
         ch = glyph_to_char(m.group(2))
         if ch is not None and 0 <= code <= 0xFF:
             cmap[code] = ch
         code += 1
-
-
-def _object_bodies(text: str) -> dict[int, tuple[int, int]]:
-    """objnum → (body_start, body_end) spans via a linear header scan
-    (no xref — consistent with the whole sequential-scan design)."""
-    out: dict[int, tuple[int, int]] = {}
-    count = 0
-    for m in _OBJ_HDR_S.finditer(text):
-        count += 1
-        if count > _MAX_OBJECTS:
-            break
-        end = text.find("endobj", m.end())
-        if end == -1:
-            end = len(text)
-        num = int(m.group(1))
-        if num not in out:  # first definition wins, like the splice pass
-            out[num] = (m.end(), end)
-    return out
 
 
 _CMAP_REGION = re.compile(rb"begincmap(.*?)endcmap", re.S)
@@ -456,9 +436,7 @@ def _orphan_cmaps(buf: bytes) -> list[tuple[int, dict[int, str]] | None]:
     return out
 
 
-def _tounicode_map(
-    objnum: int, orig: bytes, budget: int, ctx: dict | None = None
-) -> tuple[int, dict[int, str]] | None:
+def _tounicode_map(objnum: int | None, ctx: dict) -> tuple[int, dict[int, str]] | None:
     """Locate ``objnum``'s stream object in the ORIGINAL buffer (the
     filter splice consumes wrappers in the decoded buffer, but the
     pristine bytes keep them), decode its payload through the /Filter
@@ -471,27 +449,24 @@ def _tounicode_map(
     assignment across fonts; exact for the overwhelmingly common
     one-font-one-CMap case and any count of fonts whose CMaps appear
     in reference order)."""
-    hdr = re.search(
-        rb"(?<![0-9])%d[ \t\r\n\f\x00]+\d+[ \t\r\n\f\x00]+obj" % objnum, orig
-    )
-    if hdr is None:
-        if ctx is None:
-            return None
+    orig = ctx["orig"]
+    hit = ctx["orig_objs"].get(objnum)
+    if hit is None:
         assigned = ctx.setdefault("assigned", {})
         if objnum in assigned:
             return assigned[objnum]
         orphans = ctx.get("orphans")
         if orphans is None:
-            orphans = ctx["orphans"] = _orphan_cmaps(ctx["buf"])
+            orphans = ctx["orphans"] = _orphan_cmaps(orig)
         tu = orphans[len(assigned)] if len(assigned) < len(orphans) else None
         assigned[objnum] = tu
         return tu
-    obj = read_stream_object(orig, hdr.end())
+    obj = read_stream_object(orig, hit[1], ctx["orig_objs"])
     if obj is None or obj[1] is None:
         return None
     d, data, _end = obj
     try:
-        payload = _decode_stream_data(data, d, budget)
+        payload = _decode_stream_data(data, d, ctx["budget"])
         return parse_cmap(payload)
     except StreamBombError:
         raise  # resource attack -> poison the document text-free
@@ -499,18 +474,11 @@ def _tounicode_map(
         return None  # ordinary dirt -> this font has no map
 
 
-def _build_font(
-    body: str,
-    objs: dict[int, tuple[int, int]],
-    text: str,
-    orig: bytes,
-    budget: int,
-    buf: bytes | None = None,
-    ctx: dict | None = None,
-) -> FontMap | None:
+def _build_font(body: str, ctx: dict) -> FontMap | None:
     """FontMap from one font dict body (or None if the font needs no
     byte translation — keeps the identity fast path for fonts that
-    carry only metrics)."""
+    carry only metrics). ``ctx`` is the document's scan state (see
+    :func:`parse_font_maps`)."""
     sub = _SUBTYPE.search(body)
     subtype = sub.group(1) if sub is not None else ""
     cmap: dict[int, str] = {}
@@ -527,14 +495,13 @@ def _build_font(
                     cmap.update(base)
                     have_any = True
             elif em.group(2) is not None:  # indirect -> encoding dict object
-                span = objs.get(int(em.group(2)))
-                if span is not None:
-                    seg = text[span[0] : span[1]]
-                    k = seg.find("<<")
-                    if k != -1:
-                        enc_body = _balanced_dict(text, span[0] + k, buf)
-            else:  # inline << ... >>
-                enc_body = _balanced_dict(text, em.start(4), buf)
+                hit = ctx["objs"].get(_int(em.group(2)))
+                text = ctx["text"]
+                k = -1 if hit is None else text.find("<<", hit[1], hit[2])
+                if k != -1:
+                    enc_body = _balanced_dict(text, k, ctx["buf"])
+            else:  # inline << ... >> (a position in ``body``)
+                enc_body = _balanced_dict(body, em.start(4))
         if enc_body is not None:
             bm = _BASE_ENC_NAME.search(enc_body)
             if bm is not None:
@@ -549,7 +516,7 @@ def _build_font(
 
     tm = _TOUNICODE.search(body)
     if tm is not None:
-        tu = _tounicode_map(int(tm.group(1)), orig, budget, ctx)
+        tu = _tounicode_map(_int(tm.group(1)), ctx)
         if tu is not None:
             tu_width, tu_map = tu
             nbytes = tu_width
@@ -576,25 +543,30 @@ def parse_font_maps(
     entry on the font object itself. First binding per name wins.
     Raises ValueError only for resource bombs (CMap entry floods);
     every other malformation degrades to "that font has no map"."""
-    objs = _object_bodies(text)
     buf = text.encode("latin-1")  # one encode for every dict extraction
-    ctx = {"buf": orig}  # orphan-CMap fallback state (spliced buffers)
+    objs = ObjectIndex(buf)
+    # scan state: the decoded text, its bytes and index; the pristine
+    # buffer and its on-demand index; later the orphan-CMap fallback
+    # state (spliced buffers)
+    ctx = {"text": text, "buf": buf, "objs": objs, "orig": orig, "budget": budget,
+           "orig_objs": ObjectIndex(orig)}
     built: dict[int, FontMap | None] = {}
 
     def font_by_obj(num: int) -> FontMap | None:
         if num in built:
             return built[num]
         fm: FontMap | None = None
-        span = objs.get(num)
-        if span is not None:
+        hit = objs.get(num)
+        if hit is not None:
+            _gen, s, e = hit
             # pos/endpos search — never slice the body (stream-object
             # bodies can be megabytes of payload)
-            if _TYPE_FONT.search(text, span[0], span[1]) is not None:
-                k = text.find("<<", span[0], span[1])
+            if _TYPE_FONT.search(text, s, e) is not None:
+                k = text.find("<<", s, e)
                 if k != -1:
                     body = _balanced_dict(text, k, buf)
                     if body is not None:
-                        fm = _build_font(body, objs, text, orig, budget, buf, ctx)
+                        fm = _build_font(body, ctx)
         built[num] = fm
         return fm
 
@@ -609,18 +581,16 @@ def parse_font_maps(
             if name in out:
                 continue
             if em.group(2) is not None:
-                fm = font_by_obj(int(em.group(2)))
+                fm = font_by_obj(_int(em.group(2)))
             else:
                 inline = _balanced_dict(rbody, em.start(4))
-                fm = (
-                    _build_font(inline, objs, text, orig, budget, None, ctx)
-                    if inline is not None and _TYPE_FONT.search(inline) is not None
-                    else None
-                )
+                fm = None
+                if inline is not None and _TYPE_FONT.search(inline) is not None:
+                    fm = _build_font(inline, ctx)
             if fm is not None:
                 out[name] = fm
     # PDF-1.0 /Name binding on the font object itself
-    for num, (s, e) in objs.items():
+    for num, (_gen, s, e) in objs.items():
         if _TYPE_FONT.search(text, s, e) is None:
             continue
         nm = _NAME_BIND.search(text, s, e)

@@ -201,9 +201,10 @@ def detect_charset(buf: bytes) -> str:
 _TAG_NAME_RE = re.compile(rb"[a-zA-Z][a-zA-Z0-9\-]*")
 # one attribute: name, optional = value (double-quoted / single-quoted /
 # unquoted). Quoted values may contain '<' and '>' — this is why tag
-# ends cannot be found with a bare find(b'>').
+# ends cannot be found with a bare find(b'>'). An unterminated quoted
+# value runs to EOF, so the tag is cut by EOF and dropped (HTML5).
 _ATTR_RE = re.compile(
-    rb"\s*([^\s=/>]+)(?:\s*=\s*(\"[^\"]*\"|'[^']*'|[^\s>]*))?"
+    rb"\s*([^\s=/>]+)(?:\s*=\s*(\"[^\"]*+\"?|'[^']*+'?|[^\s>]*))?"
 )
 _NONWS_RE = re.compile(rb"[^ \t\r\n\f]")
 

@@ -429,6 +429,87 @@ def test_indirect_length_resolved_from_integer_object():
     assert b"(resolved) Tj" in out and b"(tail) Tj" in out
 
 
+@pytest.mark.parametrize("decoy", [b"", b"17 0 obj (not an integer) endobj\n"])
+@pytest.mark.parametrize("gen", [0, 1])
+def test_indirect_length_is_first_definition_of_same_generation(gen, decoy):
+    # RunLength keeps the payload's 'endstream' bytes literal, so the
+    # fallback scan cuts the stream there and it drops as dirt; only a
+    # resolved /Length decodes it whole. The reference names generation
+    # ``gen`` and the first definition of object 17 must be the integer
+    body = b"BT (resolved) Tj ET\nendstream trap\nBT (tail) Tj ET\n"
+    enc = encode_chain(body, ("RunLengthDecode",))
+    doc = (
+        b"%PDF-1.4\n" + decoy
+        + b"2 0 obj\n<< /Length 17 %d R /Filter /RunLengthDecode >>\nstream\n" % gen
+        + enc
+        + b"\nendstream\nendobj\n17 0 obj %d endobj\n" % len(enc)
+    )
+    resolved = gen == 0 and not decoy
+    assert (b"(resolved) Tj" in decode_content_filters(doc)) == resolved
+
+
+def _dict_extent_byte_walk(buf: bytes, start: int) -> int:
+    """The byte-at-a-time dict walk that ``filters._dict_extent``
+    replaced, kept as its differential reference."""
+    n, i, depth = len(buf), start, 0
+    while i < n:
+        c = buf[i]
+        if c == 0x3C:  # '<': dict open, else a hex string to '>'
+            if buf[i : i + 2] == b"<<":
+                depth, i = depth + 1, i + 2
+                continue
+            j = buf.find(b">", i + 1)
+            if j == -1:
+                raise ValueError("unterminated hex string")
+            i = j + 1
+            continue
+        if c == 0x3E and buf[i : i + 2] == b">>":
+            depth, i = depth - 1, i + 2
+            if depth == 0:
+                return i
+            continue
+        if c == 0x28:  # '(': literal string, escapes and nesting
+            lvl = 0
+            while i < n:
+                if buf[i] == 0x5C:
+                    i += 2
+                    continue
+                lvl += (buf[i] == 0x28) - (buf[i] == 0x29)
+                i += 1
+                if lvl == 0:
+                    break
+            continue
+        i += 1
+    raise ValueError("unterminated dict")
+
+
+def test_dict_extent_matches_byte_walk():
+    def run(f, buf, start):
+        try:
+            return f(buf, start)
+        except ValueError:
+            return None
+
+    rng = random.Random(11)
+    atoms = [b"<", b">", b"(", b")", b"\\", b"a", b" ", b"<<", b">>", b"\n"]
+    for _ in range(30_000):
+        buf = b"".join(rng.choice(atoms) for _ in range(rng.randint(0, 30)))
+        start = rng.randint(0, len(buf))
+        assert run(flt._dict_extent, buf, start) == run(_dict_extent_byte_walk, buf, start), (buf, start)
+        assert flt._skip_ws(buf, start) == len(buf) - len(buf[start:].lstrip(b" \t\r\n\f\x00"))
+
+
+def test_object_index_first_definition_and_bounded_bodies():
+    buf = b"1 0 obj 5 endobj\n2 0 obj (open)\n1 0 obj 6 endobj\n3 1 obj 7"
+    idx = flt.ObjectIndex(buf)
+    assert idx.get(2) == (0, 24, 32) and idx.get(4) is None
+    got = {n: (g, buf[s:e]) for n, (g, s, e) in idx.items()}
+    # 2's body ends at the next header; the second object 1 is ignored
+    assert got == {1: (0, b" 5 "), 2: (0, b" (open)\n"), 3: (1, b" 7")}
+    many = b"".join(b"%d 0 obj 1 endobj\n" % k for k in range(flt.MAX_OBJECTS + 5))
+    assert len(flt.ObjectIndex(many).items()) == flt.MAX_OBJECTS
+
+
 # ---------------------------------------------------------------------------
 # PDF-1.5 compressed objects: /Type /ObjStm expansion, /Type /XRef drop
 # ---------------------------------------------------------------------------

@@ -191,6 +191,19 @@ def test_indirect_encoding_dict_and_first_binding_wins():
     assert fonts["/F1"].decode("A") == "d"
 
 
+def test_inline_encoding_dict_read_from_its_own_font():
+    # each font's inline /Encoding dict is read at its offset in that
+    # font's dict, not at the same offset in the document
+    doc = (
+        b"%PDF-1.4\n"
+        b"10 0 obj\n<< /Type /Font /Subtype /Type1 /Encoding << /Differences [ 65 /X ] >> >>\nendobj\n"
+        b"11 0 obj\n<< /Type /Font /Subtype /Type1 /Encoding << /Differences [ 65 /Y ] >> >>\nendobj\n"
+        b"5 0 obj\n<< /Font << /F1 10 0 R /F2 11 0 R >> >>\nendobj\n"
+    )
+    fonts = parse_font_maps(doc.decode("latin-1"), doc)
+    assert (fonts["/F1"].decode("A"), fonts["/F2"].decode("A")) == ("X", "Y")
+
+
 def test_differences_implicit_code_increment():
     # [ 65 /b /c /d ] maps 65,66,67 — codes increment after each name
     doc = (

@@ -539,23 +539,32 @@ def test_differential_vs_stdlib_parser_dirt():
 
 # a tag, open or closing, and the comments whose bodies are not markup
 _TAG_OR_COMMENT = re.compile(rb"<!--.*?(?:-->|$)|</?[a-zA-Z][^<>]*>", re.S)
+_QUOTED_VALUE = re.compile(rb"""=\s*("[^"]*"|'[^']*')""")
 
 
 def _cut_in_tags():
-    """Corpus pages cut off inside a tag: after its '<' or '</' (no tag
-    yet: text), after the first name letter, and before its '>'."""
-    for doc_id, b in _corpus_pages():
+    """Corpus and dirt pages cut off inside a tag: after its '<' or '</'
+    (no tag yet: text), after the first name letter, before its '>',
+    and at every byte inside a quoted value up to its closing quote
+    (a dirt-page value holds a '>', so such a cut leaves one behind)."""
+    pages = list(_corpus_pages()) + [(f"dirt-{i}", b) for i, b in enumerate(_DIRT)]
+    for doc_id, b in pages:
+        cuts = set()
         for m in _TAG_OR_COMMENT.finditer(b):
             if not m.group().startswith(b"<!--"):
                 name = m.start() + (2 if m.group()[1:2] == b"/" else 1)
-                for cut in sorted({name, name + 1, m.end() - 1}):
-                    yield doc_id, b[:cut]
+                cuts |= {name, name + 1, m.end() - 1}
+        for q in _QUOTED_VALUE.finditer(b):
+            cuts.update(range(q.start(1) + 1, q.end(1)))
+        for cut in sorted(cuts):
+            yield doc_id, b[:cut]
 
 
 def test_differential_vs_stdlib_parser_cut_tags():
     """Pages cut off inside a tag: the engine and both stdlib references
-    drop the cut tag and keep a bare '<' or '</' as text (extracted
-    blocks, media and head metadata agree)."""
+    drop the cut tag, also one cut inside a quoted value, and keep a
+    bare '<' or '</' as text (extracted blocks, media and head metadata
+    agree)."""
     from naive_html import naive_extract, naive_head
 
     from insurance_pdf_extractor_spark.operators.html import parse_html_meta
