@@ -96,13 +96,13 @@ Y_BIN_PT = 4.0
 # Oversized-document sharding threshold for skew defusal (north rule):
 # docs whose content exceeds this many bytes are split into page-range
 # shards before the tokenize stage and reassembled after layout.
-# MEASURED break-even (tools/bench_shard_breakeven.py, fresh JVM per
+# MEASURED break-even (BENCH.md "Shard threshold break-even", fresh JVM per
 # config, 8 cores, round 3): at 8-9 MB sharding costs +6% wall on the
 # block fast path and saves 4% on the interpreter path — i.e. the 8 MB
 # default threshold is wall-time NEUTRAL (within box noise), not the
 # feared multi-second regression (that figure came from a 47 MB doc).
 # Sharding's wall-time WIN is modest even for giants (1.22x at 140 MB,
-# tools/bench_skew.py) because only the tokenize stage parallelizes —
+# BENCH.md "Skew defusal") because only the tokenize stage parallelizes —
 # the per-doc merge + layout/boilerplate remainder is serial per doc
 # (Amdahl). Its real value at the default threshold is bounding
 # executor memory (one doc = one Arrow batch otherwise) and capping

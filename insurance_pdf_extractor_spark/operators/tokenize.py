@@ -68,6 +68,17 @@ _ESC = re.compile(r"\\([0-7]{1,3}|.)", re.S)
 # '1\xb2' at the SAME boundary (verified divergence before this class
 # was pinned down).
 _NUM_ONLY = re.compile(r"[+\-.0-9]+")
+# A %%PAGE value: an optional '-' and 1-9 ASCII digits (not isdigit(),
+# for the reason above). The length bound keeps int() far from its
+# 4,300-digit limit and every page number inside the shard path's int32
+# ``pages`` column. Any other value means the next page.
+_PAGE_NUM = re.compile(r"-?[0-9]{1,9}")
+
+
+def _marker_page(marker: str, page: int) -> int:
+    """Page number set by a ``%%PAGE`` comment, given the current one."""
+    rest = marker[6:].strip()
+    return int(rest) if _PAGE_NUM.fullmatch(rest) else page + 1
 
 
 def _unescape(m: re.Match) -> str:
@@ -325,8 +336,7 @@ def tokenize_content(content: bytes) -> list[tuple[int, float, float, int, str]]
         c = g(1)
         if c is not None:  # comment (stops at \r OR \n)
             if c.startswith("%%PAGE"):
-                rest = c[6:].strip()
-                page = int(rest) if rest.lstrip("-").isdigit() else page + 1
+                page = _marker_page(c, page)
             pos = m.end()
             continue
         if g(2) is not None:  # Td form
@@ -394,8 +404,7 @@ def _tokenize_interpreter(
             continue  # stray closer, skip
         if t0 == "%":
             if tok.startswith("%%PAGE"):
-                rest = tok[6:].strip()
-                page = int(rest) if rest.lstrip("-").isdigit() else page + 1
+                page = _marker_page(tok, page)
             continue
         if t0 == "[":
             array_marks.append(len(stack))

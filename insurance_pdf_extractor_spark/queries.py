@@ -1691,8 +1691,8 @@ def q_currency_clean(spark, sf_dir):
 )
 def q_json_extract_cascade(spark, sf_dir):
     # Kernel (pandas_udf) path is the default: 2.36x faster than the
-    # expression cascade at 2M responses (tools/bench_json_extract.py,
-    # BENCH.md) and byte-for-byte the reference's re.findall +
+    # expression cascade at 2M responses (BENCH.md "F1/F2 JSON-parse
+    # kernel A/B") and byte-for-byte the reference's re.findall +
     # json.loads loop; the expression form stays in json_extract.py as
     # the SQL-expressible semantics spec, parity-tested on this domain
     # (tests/test_json_extract.py::test_udf_kernel_parity).

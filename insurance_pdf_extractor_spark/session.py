@@ -17,6 +17,13 @@ Notable choices:
   the cores.
 - Arrow batch size bounded so a batch of large documents fits executor
   memory in the pandas-UDF stages.
+- Python workers start from ``pyspark_extract_worker`` (beside the
+  package directory) instead of ``pyspark.worker``. Stock workers
+  re-read the whole directory of ``pyspark.zip`` on every task; that
+  module re-reads an archive only when its inode, size or mtime
+  changed. Every stage of the pipeline is a pandas-UDF stage, so this
+  per-task start-up cost sets the price of small inputs (BENCH.md
+  "Per-task cost and the salt width").
 """
 
 from __future__ import annotations
@@ -59,6 +66,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.worker.module", "pyspark_extract_worker")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -98,7 +98,11 @@ def tokenize_content_reference(
             comment = text[i:eol]
             if comment.startswith("%%PAGE"):
                 rest = comment[6:].strip()
-                page = int(rest) if rest.lstrip("-").isdigit() else page + 1
+                digits = rest[1:] if rest.startswith("-") else rest
+                if 1 <= len(digits) <= 9 and all(d in "0123456789" for d in digits):
+                    page = int(rest)
+                else:
+                    page += 1
             i = eol
             continue
         if c == "(":

@@ -19,7 +19,7 @@ from insurance_pdf_extractor_spark.operators.tokenize import (
     _tokenize_interpreter,
     tokenize_content,
 )
-from insurance_pdf_extractor_spark.plans.pipeline import extract_results
+from insurance_pdf_extractor_spark.plans.pipeline import extract_documents, extract_results
 from insurance_pdf_extractor_spark.schema import DOCUMENTS_RAW
 
 # a digit run too long for int() (over 4,300 digits)
@@ -45,6 +45,10 @@ HOSTILE = [
     ("comment-noeol", b"%PDF-1.4\n% comment without newline"),
     ("page-garbage", b"%PDF-1.4\n%%PAGE xyz\nBT\n1 2 Td\n(x) Tj\nET\n"),
     ("negative-page", b"%PDF-1.4\n%%PAGE -5\nBT\n1 2 Td\n(x) Tj\nET\n"),
+    ("overlong-page", b"%PDF-1.4\n%%PAGE " + _LONG + b"\nBT\n1 2 Td\n(x) Tj\nET\n"),
+    ("superscript-page", b"%PDF-1.4\n%%PAGE \xb2\nBT\n1 2 Td\n(x) Tj\nET\n"),
+    ("double-minus-page", b"%PDF-1.4\n%%PAGE --5\nBT\n1 2 Td\n(x) Tj\nET\n"),
+    ("ten-digit-page", b"%PDF-1.4\n%%PAGE 9999999999\nBT\n1 2 Td\n(x) Tj\nET\n"),
     ("operators-only", b"%PDF-1.4\n" + b"q Q cm gs BT ET Tz Tr " * 300),
     ("lone-closers", b"%PDF-1.4\n)))]]]}}}>>>\nBT\n1 2 Td\n(ok) Tj\nET\n"),
     (
@@ -80,6 +84,30 @@ def test_overlong_digit_runs_are_dirt(name):
     content = dict(HOSTILE)[name]
     assert b"(tail) Tj" in decode_content_filters(content)
     assert [r[4] for r in tokenize_content(content)] == ["tail"]
+
+
+_BAD_PAGE_MARKERS = ["overlong-page", "superscript-page", "double-minus-page", "ten-digit-page"]
+
+
+@pytest.mark.parametrize("name", _BAD_PAGE_MARKERS)
+def test_unreadable_page_marker_is_next_page(name):
+    """A ``%%PAGE`` value that is not 1-9 ASCII digits (after an optional
+    '-') means the next page; the document's text survives."""
+    content = dict(HOSTILE)[name]
+    assert [(r[0], r[4]) for r in tokenize_content(content)] == [(1, "x")]
+
+
+def test_unreadable_page_markers_on_the_shard_path(spark, shuffle_partitions):
+    """The shard path carries page numbers in an int32 column: a
+    10-digit page value once failed the job there."""
+    raw = spark.createDataFrame(
+        [(n, dict(HOSTILE)[n], [], 1, len(dict(HOSTILE)[n])) for n in _BAD_PAGE_MARKERS],
+        DOCUMENTS_RAW,
+    )
+    with shuffle_partitions(4):
+        docs, _ = extract_documents(raw, shard_size_bytes=1, shard_pages=1)
+        got = {r["doc_id"]: [s["text"] for s in r["spans"]] for r in docs.collect()}
+    assert got == {n: ["x"] for n in _BAD_PAGE_MARKERS}
 
 
 def test_pipeline_accounts_for_every_hostile_doc(spark, shuffle_partitions):
