@@ -303,7 +303,7 @@ def main() -> None:
     # so the delta vs extract_from_storage_presalted_32x IS the
     # stream-filter decode cost inside the Arrow kernel.
     rawf_dir = tempfile.mkdtemp(prefix="bench_rawf_") + "/raw"
-    render_documents_raw(reps, mixed_filters=True).write.parquet(rawf_dir)
+    render_documents_raw(reps, mix="filters").write.parquet(rawf_dir)
     stored_f = spark.read.parquet(rawf_dir)
     storage_filtered_sec = _best_of(extract_results(stored_f, presalted=True))
     timings["extract_from_storage_filtered_32x"] = round(storage_filtered_sec, 3)
@@ -316,7 +316,7 @@ def main() -> None:
     # show-time map lookups, so the delta vs the filtered row is the
     # font parse + interpreter-tier cost on ~2/3 of the corpus.
     rawe_dir = tempfile.mkdtemp(prefix="bench_rawe_") + "/raw"
-    render_documents_raw(reps, encoded=True).write.parquet(rawe_dir)
+    render_documents_raw(reps, mix="full").write.parquet(rawe_dir)
     stored_e = spark.read.parquet(rawe_dir)
     storage_encoded_sec = _best_of(extract_results(stored_e, presalted=True))
     timings["extract_from_storage_encoded_32x"] = round(storage_encoded_sec, 3)
@@ -329,7 +329,7 @@ def main() -> None:
     # scan→kernel→fields window — the delta vs the encoded row is the
     # HTML kernel replacing the PDF interpreter on 1/3 of the docs.
     rawi_dir = tempfile.mkdtemp(prefix="bench_rawi_") + "/raw"
-    render_documents_raw(reps, interleaved=True).write.parquet(rawi_dir)
+    render_documents_raw(reps, mix="interleaved").write.parquet(rawi_dir)
     stored_i = spark.read.parquet(rawi_dir)
     storage_interleaved_sec = _best_of(extract_results(stored_i, presalted=True))
     timings["extract_from_storage_interleaved_32x"] = round(storage_interleaved_sec, 3)

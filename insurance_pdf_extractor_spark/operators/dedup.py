@@ -49,73 +49,23 @@ def words_expr(col: Column) -> Column:
     return F.split(normalize_text_expr(col), " ")
 
 
-def shingles_expr(col: Column, k: int = 3) -> Column:
-    """Word k-shingles as strings (empty array when doc shorter than k)."""
-    w = words_expr(col)
-    n = F.size(w)
-    return F.when(n < k, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.array_join(F.slice(w, i, k), " "),
-        )
-    )
-
-
-#: Mersenne prime modulus for the affine MinHash permutation family.
-#: 2^31-1 keeps every product within 62 bits — exact in int64 with no
-#: silent wraparound (cf. text_quality._WINNOW_P).
+#: Mersenne prime 2^31-1: the modulus of the token hashes, the k-gram
+#: rolling hash and the affine MinHash permutations, here and in
+#: text_quality's winnowing. Every operand stays below 2^31, so every
+#: product fits in 62 bits — exact in int64 with no silent wraparound.
 _MINHASH_P = 2147483647
-
-
-def hashed_shingles_expr(shingles: Column) -> Column:
-    """Shingle strings → non-negative 31-bit hashes. Compute this ONCE
-    into its own column before :func:`minhash_signature_expr` — inlining
-    it would make Catalyst re-evaluate the whole shingle pipeline per
-    hash slot (a measured ~36× slowdown at 64 hashes)."""
-    return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MINHASH_P)))
-
-
-def minhash_signature_expr(hashes: Column, n_hashes: int = 64) -> Column:
-    """n_hashes-wide MinHash signature over a PRE-HASHED shingle array
-    (see :func:`hashed_shingles_expr`). Hash family: deterministic affine
-    permutations ``(h*a_i + b_i) mod (2^31-1)``.
-
-    Implementation is a numpy-vectorized pandas_udf, not Spark
-    higher-order functions: HOF lambdas are interpreted per element
-    (never codegen'd), and n_shingles × n_hashes element evals measured
-    ~10× slower than one Arrow round-trip + a vectorized
-    broadcast-multiply. Empty docs get the sentinel max so they never
-    band-collide with real content."""
-    P = _MINHASH_P
-    A = (np.arange(n_hashes, dtype=np.int64) * 2 + 1) % P
-    B = (np.arange(n_hashes, dtype=np.int64) * 0x9E3779B9) % P
-    empty = [P] * n_hashes
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig(h: pd.Series) -> pd.Series:
-        out = []
-        for arr in h:
-            if arr is None or len(arr) == 0:
-                out.append(empty)
-            else:
-                v = np.asarray(arr, dtype=np.int64)
-                out.append(((v[None, :] * A[:, None] + B[:, None]) % P).min(axis=1).tolist())
-        return pd.Series(out)
-
-    return sig(hashes)
 
 
 def minhash_signature_from_token_hashes(
     tok_hashes: Column, k: int = 3, n_hashes: int = 64
 ) -> Column:
     """Fused k-gram + MinHash kernel: per-token hashes (ONE interpreted
-    HOF pass over words) → numpy rolling polynomial k-gram hashes →
-    affine-permutation minima, all in a single Arrow round-trip.
-
-    Replaces string-shingle construction (array_join over slices — an
-    interpreted lambda per shingle, the dominant cost of the previous
-    formulation) with vectorized arithmetic on the token hash array.
-    """
+    HOF pass over words, :func:`token_hashes_expr`) → numpy rolling
+    polynomial k-gram hashes → affine-permutation minima ``(g*a_i +
+    b_i) mod P``, all in a single Arrow round-trip — vectorized
+    arithmetic on the token hash array, never a string per shingle.
+    Documents shorter than ``k`` get the sentinel ``[P] * n_hashes`` so
+    they never band-collide with real content."""
     P = _MINHASH_P
     B = 1_000_003
     A = (np.arange(n_hashes, dtype=np.int64) * 2 + 1) % P

@@ -41,6 +41,7 @@ One of each, shared by every caller:
   font-layer reference (operators/fonts.py) resolve through it;
 - :func:`_dict_extent` is the one ``<<…>>`` scanner (compiled-pattern
   searches from delimiter to delimiter), here and in the font layer;
+  the index memoizes it per buffer, so no dict is scanned twice;
 - :func:`read_stream_object` reads one stream object (dict, payload,
   end) for the buffer rewrite and the ToUnicode lookup;
 - :func:`_rewrite_stream_objects` is the one walk over a buffer's
@@ -461,8 +462,15 @@ class ObjectIndex:
     never overlap."""
 
     def __init__(self, buf: bytes):
+        self.buf = buf
         self._seen: dict[int, tuple[int, int, int]] = {}
         self._entries = self._read(buf)
+        self._ends: dict[int, int] = {}
+
+    def dict_extent(self, start: int) -> int:
+        """:func:`_dict_extent` in this buffer, every scan sharing one
+        memo of dict and string ends."""
+        return _dict_extent(self.buf, start, self._ends)
 
     @staticmethod
     def _read(buf: bytes):
@@ -505,33 +513,79 @@ _DICT_STEP = re.compile(
 _STR_STEP = re.compile(rb"(?:[^()\\]++|\\.)*+[()]", re.S)
 
 
-def _dict_extent(buf: bytes, start: int) -> int:
+def _dict_extent(buf: bytes, start: int, ends: dict[int, int] | None = None) -> int:
     """End index (exclusive) of the ``<<…>>`` dict at ``start``,
     honoring nesting, literal strings (escapes, nested parens) and hex
     strings, one pattern match per delimiter. ``ValueError`` when
-    unterminated."""
+    unterminated.
+
+    ``ends`` is a memo for one buffer (:meth:`ObjectIndex.dict_extent`):
+    where each dict and literal string a scan opened ends, or -1 when it
+    never does. Where a dict or string ends depends only on where it
+    starts, so a later scan jumps over every one an earlier scan
+    passed; scans from every dict start of a buffer whose dicts nest or
+    stay open then cost one pass between them, not one pass each."""
+    if ends is None:
+        ends = {}
     depth = 0
     pos = start
-    while (m := _DICT_STEP.match(buf, pos)) is not None:
-        pos = m.end()
-        kind = m.lastgroup
-        if kind == "open":
-            depth += 1
-        elif kind == "close":
-            depth -= 1
-            if depth == 0:
-                return pos
-        elif kind == "cut":
-            raise ValueError("unterminated hex string in dict")
-        elif kind == "lit":
-            level = 1
-            while level:
+    dicts: list[int] = []  # open dicts' starts, innermost last
+    strs: list[int] = []  # open literal strings' starts, innermost last
+    try:
+        while True:
+            if strs:
                 step = _STR_STEP.match(buf, pos)
                 if step is None:
                     raise ValueError("unterminated string in dict")
                 pos = step.end()
-                level += 1 if buf[pos - 1] == 0x28 else -1
-    raise ValueError("unterminated dict")
+                if buf[pos - 1] == 0x29:  # ')'
+                    ends[strs.pop()] = pos
+                elif (end := ends.get(pos - 1)) is None:
+                    strs.append(pos - 1)
+                elif end < 0:
+                    raise ValueError("unterminated string in dict")
+                else:
+                    pos = end
+                continue
+            m = _DICT_STEP.match(buf, pos)
+            if m is None:
+                raise ValueError("unterminated dict")
+            pos = m.end()
+            kind = m.lastgroup
+            if kind == "close":
+                depth -= 1
+                if dicts:
+                    ends[dicts.pop()] = pos
+                if depth == 0:
+                    return pos
+            elif kind == "cut":
+                raise ValueError("unterminated hex string in dict")
+            elif kind == "lit":
+                end = ends.get(pos - 1)
+                if end is None:
+                    strs.append(pos - 1)
+                elif end < 0:
+                    raise ValueError("unterminated string in dict")
+                else:
+                    pos = end
+            elif kind == "open":
+                end = ends.get(pos - 2)
+                # a known end holds only from depth >= 0: a scan that
+                # starts inside a dict returns at the first close that
+                # takes its depth back to 0
+                if end is None or depth < 0:
+                    depth += 1
+                    dicts.append(pos - 2)
+                elif end < 0:
+                    raise ValueError("unterminated dict")
+                else:
+                    pos = end
+                    if depth == 0:
+                        return pos
+    except ValueError:
+        for p in dicts + strs:
+            ends[p] = -1
+        raise
 
 
 def _parse_filters(d: bytes) -> tuple[bytes, ...] | None:
@@ -719,25 +773,24 @@ def _consume_eol(buf: bytes, i: int) -> int:
     return _EOL.match(buf, i).end()
 
 
-def read_stream_object(
-    content: bytes, start: int, objs: ObjectIndex
-) -> tuple[bytes, bytes | None, int] | None:
+def read_stream_object(objs: ObjectIndex, start: int) -> tuple[bytes, bytes | None, int] | None:
     """Read the object body that follows an ``N G obj`` header ending at
-    ``start``: ``(dict, payload, end)``, ``end`` being past
-    ``endstream``/``endobj`` plus one EOL. The EOL after the ``stream``
-    keyword may be CRLF, LF or a lone CR. The first ``/Length`` wins
-    when truthful and direct, or a reference to a same-generation
-    integer object found through ``objs`` (the :class:`ObjectIndex` of
-    ``content``); otherwise scan for the ``endstream`` keyword (the
-    pypdf fallback). ``payload`` is None when the dict is not followed by
-    ``stream`` (``end`` is then the dict's end) or when no ``endstream``
-    follows (hopeless truncation: ``end`` is the end of ``content``).
-    None when no complete ``<<…>>`` dict starts there."""
+    ``start`` in ``objs``'s buffer: ``(dict, payload, end)``, ``end``
+    being past ``endstream``/``endobj`` plus one EOL. The EOL after the
+    ``stream`` keyword may be CRLF, LF or a lone CR. The first
+    ``/Length`` wins when truthful and direct, or a reference to a
+    same-generation integer object found through ``objs``; otherwise
+    scan for the ``endstream`` keyword (the pypdf fallback). ``payload``
+    is None when the dict is not followed by ``stream`` (``end`` is then
+    the dict's end) or when no ``endstream`` follows (hopeless
+    truncation: ``end`` is the end of the buffer). None when no
+    complete ``<<…>>`` dict starts there."""
+    content = objs.buf
     i = _skip_ws(content, start)
     if content[i : i + 2] != b"<<":
         return None
     try:
-        dend = _dict_extent(content, i)
+        dend = objs.dict_extent(i)
     except ValueError:
         return None
     d = content[i:dend]
@@ -828,7 +881,7 @@ def _rewrite_stream_objects(content: bytes, rewrite, max_decoded: int) -> bytes:
         if m is None:
             out.append(content[pos:])
             break
-        obj = read_stream_object(content, m.end(), objs)
+        obj = read_stream_object(objs, m.end())
         if obj is None:
             out.append(content[pos : m.end()])
             pos = m.end()

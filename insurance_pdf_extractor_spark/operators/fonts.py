@@ -18,7 +18,7 @@ that resolution from scratch:
   (``/Font << /F1 12 0 R >>``), encoding dictionaries, and ToUnicode
   CMap streams, producing ``{resource_name: FontMap}``; references
   resolve through ``filters.ObjectIndex`` (generation not checked)
-  and dicts through ``filters._dict_extent``;
+  and dicts through its memoized ``filters._dict_extent``;
 - :class:`FontMap` decodes one shown string's byte image to text
   (1-byte code path for simple fonts, 2-byte path for Type0);
 - glyph names resolve through a public Adobe Glyph List subset plus
@@ -387,14 +387,16 @@ _RES_ENTRY = re.compile(
 )
 
 
-def _balanced_dict(text: str, start: int, buf: bytes | None = None) -> str | None:
+def _balanced_dict(text: str, start: int, objs: ObjectIndex | None = None) -> str | None:
     """The ``<<…>>`` body starting at ``start`` (index of the first
-    '<'), via the shared dict scanner. Pass ``buf`` (the text's latin-1
-    bytes) for a whole document, so it is encoded once."""
-    if buf is None:
-        buf = text.encode("latin-1")
+    '<'), via the shared dict scanner. Pass ``objs`` (the index of the
+    text's latin-1 bytes) for a whole document, so it is encoded once
+    and its scans share one memo."""
     try:
-        end = _dict_extent(buf, start)
+        if objs is None:
+            end = _dict_extent(text.encode("latin-1"), start)
+        else:
+            end = objs.dict_extent(start)
     except ValueError:
         return None
     return text[start:end]
@@ -461,7 +463,7 @@ def _tounicode_map(objnum: int | None, ctx: dict) -> tuple[int, dict[int, str]] 
         tu = orphans[len(assigned)] if len(assigned) < len(orphans) else None
         assigned[objnum] = tu
         return tu
-    obj = read_stream_object(orig, hit[1], ctx["orig_objs"])
+    obj = read_stream_object(ctx["orig_objs"], hit[1])
     if obj is None or obj[1] is None:
         return None
     d, data, _end = obj
@@ -499,7 +501,7 @@ def _build_font(body: str, ctx: dict) -> FontMap | None:
                 text = ctx["text"]
                 k = -1 if hit is None else text.find("<<", hit[1], hit[2])
                 if k != -1:
-                    enc_body = _balanced_dict(text, k, ctx["buf"])
+                    enc_body = _balanced_dict(text, k, ctx["objs"])
             else:  # inline << ... >> (a position in ``body``)
                 enc_body = _balanced_dict(body, em.start(4))
         if enc_body is not None:
@@ -543,12 +545,12 @@ def parse_font_maps(
     entry on the font object itself. First binding per name wins.
     Raises ValueError only for resource bombs (CMap entry floods);
     every other malformation degrades to "that font has no map"."""
-    buf = text.encode("latin-1")  # one encode for every dict extraction
-    objs = ObjectIndex(buf)
-    # scan state: the decoded text, its bytes and index; the pristine
-    # buffer and its on-demand index; later the orphan-CMap fallback
-    # state (spliced buffers)
-    ctx = {"text": text, "buf": buf, "objs": objs, "orig": orig, "budget": budget,
+    # one encode for every dict extraction; the index holds the bytes
+    objs = ObjectIndex(text.encode("latin-1"))
+    # scan state: the decoded text and its index; the pristine buffer
+    # and its on-demand index; later the orphan-CMap fallback state
+    # (spliced buffers)
+    ctx = {"text": text, "objs": objs, "orig": orig, "budget": budget,
            "orig_objs": ObjectIndex(orig)}
     built: dict[int, FontMap | None] = {}
 
@@ -564,7 +566,7 @@ def parse_font_maps(
             if _TYPE_FONT.search(text, s, e) is not None:
                 k = text.find("<<", s, e)
                 if k != -1:
-                    body = _balanced_dict(text, k, buf)
+                    body = _balanced_dict(text, k, objs)
                     if body is not None:
                         fm = _build_font(body, ctx)
         built[num] = fm
@@ -573,7 +575,8 @@ def parse_font_maps(
     out: dict[str, FontMap] = {}
     # resource dicts: /Font << /F1 12 0 R  /F2 << ... >> >>
     for rm in _RES_FONT.finditer(text):
-        rbody = _balanced_dict(text, rm.end() - 2, buf)
+        rstart = rm.end() - 2
+        rbody = _balanced_dict(text, rstart, objs)
         if rbody is None:
             continue
         for em in _RES_ENTRY.finditer(rbody):
@@ -583,7 +586,7 @@ def parse_font_maps(
             if em.group(2) is not None:
                 fm = font_by_obj(_int(em.group(2)))
             else:
-                inline = _balanced_dict(rbody, em.start(4))
+                inline = _balanced_dict(text, rstart + em.start(4), objs)
                 fm = None
                 if inline is not None and _TYPE_FONT.search(inline) is not None:
                     fm = _build_font(inline, ctx)

@@ -5,9 +5,11 @@ columns with typed metadata, processed through Arrow-batched
 Decode is REAL for the formats this container can handle without
 PIL/ffmpeg — uncompressed 24-bit BMP (struct/numpy), 8-bit truecolor
 PNG (stdlib ``zlib`` inflate + all five scanline filters), PCM WAV
-(stdlib ``wave``), and a raw concatenated-frame video container
-(``RAWV``) — and remains an explicit ``NotImplementedError`` seam for
-formats that need entropy/DCT codecs (JPEG/MP3/MP4). The Spark-side
+(stdlib ``wave``) and baseline/progressive JPEG (operators/jpeg.py);
+video frame sampling walks real MP4 sample tables
+(operators/containers.py) — and remains an explicit
+``NotImplementedError`` seam for formats that need entropy codecs
+(MP3/AAC/H.264 content). The Spark-side
 plumbing — schema, batch shape, partitioning, UDF signatures — is
 identical either way, so wiring a real codec in is a per-format
 dispatch entry, not a redesign.
@@ -294,42 +296,6 @@ def decode_media(payload: bytes, mime: str) -> list[float]:
     )
 
 
-# --- RAWV: a trivial concatenated-frame video container ---------------
-# header b"RAWV" + u32 n_frames + u32 frame_ms, then per frame
-# u32 length + frame bytes (any image payload, typically BMP). Stands in
-# for a real container so frame *sampling* — offset parsing, byte
-# slicing, timestamp math — is real; a deployment swaps the per-frame
-# decode for ffmpeg through the same seam.
-
-
-def encode_rawv(frames: list[bytes], frame_ms: int) -> bytes:
-    parts = [struct.pack("<4sII", b"RAWV", len(frames), frame_ms)]
-    for fb in frames:
-        parts.append(struct.pack("<I", len(fb)))
-        parts.append(fb)
-    return b"".join(parts)
-
-
-def parse_rawv(payload: bytes) -> tuple[int, list[tuple[int, int, int]]]:
-    """Returns (frame_ms, [(frame_idx, byte_offset, byte_len), ...]) —
-    offsets only, so sampling can slice just the frames it needs
-    without materializing the rest of the container."""
-    if len(payload) < 12 or payload[:4] != b"RAWV":
-        raise ValueError("not a RAWV payload")
-    n_frames, frame_ms = struct.unpack_from("<II", payload, 4)
-    out, pos = [], 12
-    for i in range(n_frames):
-        if pos + 4 > len(payload):
-            raise ValueError("truncated RAWV frame table")
-        (ln,) = struct.unpack_from("<I", payload, pos)
-        pos += 4
-        if pos + ln > len(payload):
-            raise ValueError("truncated RAWV frame body")
-        out.append((i, pos, ln))
-        pos += ln
-    return frame_ms, out
-
-
 def fake_features(payload: bytes, n: int = 16) -> list[float]:
     """Deterministic stand-in decoder: 16-bin byte histogram, L1
     normalized. Same contract (bytes → float vector) as a real decoder."""
@@ -408,44 +374,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("err", T.StringType(), True),
     ]
 )
-
-
-def sample_frames_raw(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL frame sampling over RAWV payloads: parse the container's
-    frame table, then for each requested timestamp (0, every_ms, ...)
-    slice out the covering frame's bytes. Only sampled frames are
-    materialized — the offsets-only parse never copies skipped frames,
-    which at scale is the difference between reading every_ms/frame_ms
-    of the video and all of it. Corrupt containers poison-row."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, tss, payloads, errs = [], [], [], []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    frame_ms, table = parse_rawv(b)
-                except Exception as exc:
-                    refs.append(ref)
-                    tss.append(-1)
-                    payloads.append(None)
-                    errs.append(f"{type(exc).__name__}: {exc}")
-                    continue
-                total_ms = frame_ms * len(table)
-                t = 0
-                while t < total_ms:
-                    idx = t // frame_ms
-                    _, off, ln = table[idx]
-                    refs.append(ref)
-                    tss.append(t)
-                    payloads.append(b[off : off + ln])
-                    errs.append(None)
-                    t += every_ms
-            yield pd.DataFrame(
-                {"media_ref": refs, "frame_ts": tss, "frame_payload": payloads, "err": errs}
-            )
-
-    return assets.select("media_ref", "payload").mapInPandas(run, FRAME_SCHEMA)
 
 
 # --- deterministic synthetic assets ------------------------------------

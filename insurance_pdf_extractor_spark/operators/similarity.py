@@ -2,8 +2,9 @@
 (``array<float>``).
 
 - ``brute_force_topk``: exact baseline — broadcast the (small) query
-  set, JVM-side dot products via zip_with/aggregate, per-query top-k by
-  window. Linear in candidates; the right choice when queries are few.
+  set, cosine per pair in one vectorized pass per Arrow batch
+  (``batch_cosine_udf``), per-query top-k by window. Linear in
+  candidates; the right choice when queries are few.
 - ``lsh_topk``: scale path — random-hyperplane LSH: deterministic
   hyperplanes (seeded numpy, broadcast as literals), bucket on the sign
   signature, rerank only same-bucket candidates. At 10^12 rows the
@@ -15,37 +16,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def dot_expr(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(dot_expr(a, a))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Expression-form cosine (reference semantics spec). Spark HOF
-    lambdas are interpreted per element (measured ~10× slower than one
-    Arrow round-trip — dedup.py header), so the hot rerank paths use
-    ``batch_cosine_udf`` below; this stays as the readable spec and for
-    one-off expression contexts."""
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 def _leftfold_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     """Row-wise dot with SEQUENTIAL (left-fold) float64 accumulation —
     np.cumsum computes each running total in order, so the result is
-    bit-identical to the ``F.aggregate`` left fold in ``dot_expr`` and
-    to the pure-Python fixture oracle (tools/make_fixtures.py fold_dot).
+    bit-identical to the pure-Python fixture oracle
+    (tools/make_fixtures.py fold_dot).
     np.dot/np.matmul would be faster still but sum PAIRWISE, which
     diverges in the last bits and can flip a round(,6) tie."""
     return np.cumsum(A * B, axis=1)[:, -1]
@@ -54,8 +34,8 @@ def _leftfold_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
 def _vec_rows(series: pd.Series):
     """Per-row float64 arrays + validity mask. None / non-1-d / empty
     entries are invalid (arrs[i] is None). Keeps the vectorized kernels
-    from crashing the whole task on one null or ragged embedding — the
-    expression forms null-propagate, so the kernels must too."""
+    from crashing the whole task on one null or ragged embedding: such
+    rows come out null."""
     arrs, valid = [], []
     for x in series:
         if x is None:
@@ -86,12 +66,10 @@ def _with_nulls(out: np.ndarray, valid: np.ndarray) -> pd.Series:
 
 def batch_cosine_udf():
     """pandas_udf: (q_vec, cand_vec) → cosine, one vectorized numpy pass
-    per Arrow batch. Replaces the interpreted per-element HOF fold in
-    the ANN rerank hot paths (r2 verdict item 3); left-fold semantics
+    per Arrow batch, in every ANN rerank path; left-fold semantics
     preserved bit-for-bit via ``_leftfold_dot``. Null/ragged pairs
-    yield null (the expression form's behavior) instead of failing the
-    task; valid rows are grouped by dimensionality so one odd-length
-    vector cannot break the stack."""
+    yield null instead of failing the task; valid rows are grouped by
+    dimensionality so one odd-length vector cannot break the stack."""
 
     @F.pandas_udf(T.DoubleType())
     def cos(q: pd.Series, c: pd.Series) -> pd.Series:
@@ -144,27 +122,11 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return rs.randn(n_planes, dim).round(6).tolist()
 
 
-def lsh_signature_expr(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit signature against fixed hyperplanes → one long.
-    Expression-form spec; the data paths use ``lsh_signature_udf`` —
-    this form evaluates one interpreted ``dot_expr`` pass per plane."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(v)) for v in plane])
-        bit = F.when(dot_expr(vec, p) > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig.bitwiseOR(bit)
-    return sig
-
-
 def lsh_signature_udf(planes: list[list[float]]):
     """pandas_udf: embedding → sign-bit signature long, all planes in
-    one vectorized pass per Arrow batch (r2 verdict item 3: collapses
-    lsh_signature_expr's per-plane interpreted dot folds). The per-plane
-    dot keeps left-fold accumulation (cumsum over the dim axis) so the
-    sign decisions match the expression form and the fixture oracle
-    bit-for-bit."""
+    one vectorized pass per Arrow batch. The per-plane dot keeps
+    left-fold accumulation (cumsum over the dim axis) so the sign
+    decisions match the fixture oracle bit-for-bit."""
     P = np.asarray(planes, dtype=np.float64)  # (p, dim)
     weights = (1 << np.arange(len(planes), dtype=np.uint64)).astype(np.int64)
 

@@ -11,6 +11,8 @@ import pandas as pd
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from .dedup import _MINHASH_P, words_expr
+
 STOPWORDS = {
     "en": ["the", "a", "of", "to", "and", "in", "is", "on", "for", "with"],
     "de": ["der", "die", "das", "und", "ist", "von", "mit", "für", "auf", "ein"],
@@ -97,40 +99,25 @@ def lang_guess_expr(col: Column) -> Column:
 # --- winnowing (rolling-hash) fingerprints ---------------------------------
 #
 # Schleimer/Wilkerson/Aiken winnowing over word-token k-grams: per-token
-# xxhash64, polynomial rolling combine over each k-gram, then the min
-# hash of every sliding window of w consecutive k-gram hashes; distinct
-# mins form the fingerprint set. Pure column expressions — the token
-# hash array is computed once per row (see dedup.hashed_shingles_expr
-# for why the two-projection split matters).
+# hashes (dedup.token_hashes_expr, the MinHash token hashes), polynomial
+# rolling combine over each k-gram, then the min hash of every sliding
+# window of w consecutive k-gram hashes; distinct mins form the
+# fingerprint set. Pure column expressions — materialize the token hash
+# array into its own column first, so it is computed once per row.
 
 _WINNOW_B = 1_000_003  # polynomial base
-# Mersenne prime 2^31-1: token hashes and coefficients stay < 2^31, so
-# every intermediate product fits in 62 bits — no silent 64-bit
-# wraparound inside the JVM long arithmetic (which would diverge from
-# any big-integer reference implementation).
-_WINNOW_P = 2147483647
-
-
-def _norm_words_expr(col: Column) -> Column:
-    return F.split(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))), " ")
-
-
-def token_hashes_expr(col: Column) -> Column:
-    """Per-word xxhash64 (non-negative, mod 2^61-1). Materialize into
-    its own column before :func:`winnow_fingerprints_expr`."""
-    return F.transform(_norm_words_expr(col), lambda t: F.pmod(F.xxhash64(t), F.lit(_WINNOW_P)))
 
 
 def kgram_hashes_expr(hashes: Column, k: int = 5) -> Column:
     """Polynomial rolling hash of each k-gram of token hashes:
     sum(h_i * B^(k-1-i)) mod P (empty when doc shorter than k)."""
     n = F.size(hashes)
-    coeffs = [pow(_WINNOW_B, k - 1 - j, _WINNOW_P) for j in range(k)]
+    coeffs = [pow(_WINNOW_B, k - 1 - j, _MINHASH_P) for j in range(k)]
 
     def gram(i: Column) -> Column:
         acc = F.lit(0).cast("long")
         for j, c in enumerate(coeffs):
-            acc = F.pmod(acc + F.pmod(F.element_at(hashes, i + j) * F.lit(c), F.lit(_WINNOW_P)), F.lit(_WINNOW_P))
+            acc = F.pmod(acc + F.pmod(F.element_at(hashes, i + j) * F.lit(c), F.lit(_MINHASH_P)), F.lit(_MINHASH_P))
         return acc
 
     return F.when(n < k, F.array().cast("array<long>")).otherwise(
@@ -252,7 +239,7 @@ def vocab_topk(df, text_col: str = "text", id_col: str = "doc_id", k: int = 100)
     """
     words = (
         df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), F.explode(_norm_words_expr(F.col(text_col))).alias("word"))
+        .select(F.col(id_col), F.explode(words_expr(F.col(text_col))).alias("word"))
         .filter(F.col("word") != "")
     )
     return (
@@ -288,7 +275,7 @@ def tfidf_top_terms(
     """
     words = (
         df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), F.explode(_norm_words_expr(F.col(text_col))).alias("word"))
+        .select(F.col(id_col), F.explode(words_expr(F.col(text_col))).alias("word"))
         .filter(F.col("word") != "")
     )
     tf = words.groupBy(id_col, "word").agg(F.count("*").alias("tf"))
@@ -323,7 +310,7 @@ def doc_word_tf(df, text_col: str = "text", id_col: str = "doc_id"):
     text) are retained as a single null-word row via explode_outer so
     the document count is recoverable from this frame alone — no
     second corpus scan for n_docs."""
-    ws = F.filter(_norm_words_expr(F.col(text_col)), lambda x: x != "")
+    ws = F.filter(words_expr(F.col(text_col)), lambda x: x != "")
     exploded = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col), F.explode_outer(ws).alias("word")
     )
@@ -415,7 +402,7 @@ def bigram_logprob_scores(df, text_col: str = "text", id_col: str = "doc_id"):
     corpus scale the count tables are the co-location target (bucket
     by w1); AQE skew splits remain the second line of defense.
     """
-    ws = F.filter(_norm_words_expr(F.col(text_col)), lambda x: x != "")
+    ws = F.filter(words_expr(F.col(text_col)), lambda x: x != "")
     docs = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col), ws.alias("ws")
     )

@@ -61,7 +61,6 @@ def run_extract_job(
     shard_size_bytes: int | None = None,
     shard_pages: int = SHARD_PAGES,
     source_files: list[str] | None = None,
-    _limit_buckets: int | None = None,
 ) -> dict:
     """One (possibly resumed) extraction run. Returns run stats.
 
@@ -71,16 +70,13 @@ def run_extract_job(
     input, the written-output read-back and the lineage rows all filter
     on that list. The pending input is salted by its bucket, one task
     per bucket (module docstring).
-
-    ``_limit_buckets`` is a test hook simulating a mid-run failure: only
-    the first k pending buckets are processed before 'dying'.
     """
     spark = raw.sparkSession
     t0 = time.monotonic()
 
     raw = raw.withColumn("bucket", bucket_expr(n_buckets))
     present = {r["bucket"] for r in raw.select("bucket").distinct().collect()}
-    pending = sorted(present - completed_buckets(spark, out_dir, run_id))[:_limit_buckets]
+    pending = sorted(present - completed_buckets(spark, out_dir, run_id))
     if not pending:
         # fully-checkpointed run: nothing to do (common on retry loops)
         return {"run_id": run_id, "buckets_completed": 0, "wall_ms": int((time.monotonic() - t0) * 1000)}

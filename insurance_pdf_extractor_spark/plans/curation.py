@@ -255,8 +255,7 @@ def run_curate_job(
     shared (doc, word, tf) scan, not one scan per artifact.
 
     ``_stop_after`` is the kill-simulation test hook: the run 'dies'
-    after checkpointing that stage (mirrors ``_limit_buckets`` in
-    plans/checkpoint.run_extract_job).
+    after checkpointing that stage.
     """
     import time
 

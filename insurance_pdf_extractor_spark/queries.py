@@ -2008,7 +2008,7 @@ def q_pdf_metadata(spark, sf_dir):
         null_s.alias("charset"),
         null_s.alias("lang"),
     )
-    hraw = render_documents_raw(d, html_only=True)
+    hraw = render_documents_raw(d, mix="html")
     html = scan_html_meta(hraw).select(
         F.lit("html").alias("src"),
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -2690,7 +2690,7 @@ def q_winnow_fingerprints(spark, sf_dir):
     hashes are Spark-specific, so this is rows-only (the algorithm is
     value-tested against a pure-Python oracle in tests)."""
     d = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    hashed = d.select("doc_id", tq.token_hashes_expr(F.col("text")).alias("h"))
+    hashed = d.select("doc_id", dedup.token_hashes_expr(F.col("text")).alias("h"))
     grams = hashed.select("doc_id", tq.kgram_hashes_expr(F.col("h"), k=5).alias("g"))
     return grams.select(
         "doc_id",
@@ -2756,7 +2756,7 @@ def q_extract_pipeline(spark, sf_dir):
     the shared documents table: each row's text is rendered into a
     content stream, then extracted back through the full engine.
 
-    interleaved=True (round 5, second half): the corpus mixes FORMATS —
+    mix="interleaved" (round 5, second half): the corpus mixes FORMATS —
     a deterministic third of documents render as realistic HTML pages
     (template chrome, nav/footer/aside boilerplate, link-dense rows,
     repeated ad slots, entities, script/style/comment decoys, <img>
@@ -2786,7 +2786,7 @@ def q_extract_pipeline(spark, sf_dir):
     from .sources.render import render_documents_raw
 
     d = _load(spark, sf_dir, "documents")
-    raw = render_documents_raw(d, interleaved=True)
+    raw = render_documents_raw(d, mix="interleaved")
     docs, _rejects = extract_documents(raw, presalted=True)
     return docs.select(
         "doc_id", F.posexplode("spans").alias("order", "span")

@@ -34,6 +34,26 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# The workload's SQL and Arrow settings, the one table both session
+# builders apply (``jobs/extract.py`` only where the submitted conf has
+# no value).
+WORKLOAD_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
+    # byte-bound Arrow batches BOTH directions: a row is a whole
+    # document (up to SHARD_SIZE_BYTES), so record-count limits alone
+    # cannot bound executor memory; 64 MB input is the Spark 4 default,
+    # the output bound is -1 (unbounded) unless set
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(64 * 1024 * 1024),
+    "spark.sql.execution.arrow.maxBytesPerOutputBatch": str(64 * 1024 * 1024),
+    "spark.sql.parquet.filterPushdown": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
 
 def build_session(
     app_name: str = "insurance-pdf-extractor-spark",
@@ -49,23 +69,10 @@ def build_session(
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        .config(map=WORKLOAD_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        # byte-bound Arrow batches BOTH directions: a row is a whole
-        # document (up to SHARD_SIZE_BYTES), so record-count limits
-        # alone cannot bound executor memory; 64 MB input is the Spark
-        # 4 default, the output bound is -1 (unbounded) unless set
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.maxBytesPerOutputBatch", str(64 * 1024 * 1024))
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.worker.module", "pyspark_extract_worker")
     )
     for k, v in (extra_conf or {}).items():

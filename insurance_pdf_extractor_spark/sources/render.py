@@ -8,6 +8,8 @@ corpus is deterministic across runs and parallelism levels.
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -121,8 +123,6 @@ def font_preamble(encoding: str) -> bytes:
     """Font + page-resource (+ ToUnicode stream) objects for one
     encoding variant, emitted between the info object and the first
     page."""
-    from ..operators.filters import stream_object_bytes
-
     if encoding == "differences":
         font = (
             b"9001 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /SparkGraft-Cipher"
@@ -262,8 +262,6 @@ def _html_word(word: str, j: int) -> str:
 # md5 hex CHARACTER so the pdf_metadata gate's SQL oracle can
 # recompute it verbatim (substr(md5(doc_id),23,1) IN ('0'..'3')).
 def charset_for_doc(doc_id: str) -> str:
-    import hashlib
-
     return (
         "cp1252"
         if hashlib.md5(doc_id.encode("utf-8")).hexdigest()[22] in "0123"
@@ -323,13 +321,11 @@ def render_html(doc_id: str, text: str) -> tuple[bytes, int]:
         out.append(f'<p id="para-{i}">{prefix}{body}</p>\n')
         if (i + 1) % HTML_MEDIA_EVERY == 0:
             k = (i + 1) // HTML_MEDIA_EVERY - 1
-            import hashlib as _hl
-
             ref = f"media:{_esc_html(doc_id)}/{k}"
             # alternate media ELEMENT kinds so img/video/audio+source
             # all appear across any non-trivial corpus; salted with
             # doc identity so single-figure documents still vary
-            kk = k + int(_hl.md5(doc_id.encode("utf-8")).hexdigest()[20:22], 16)
+            kk = k + int(hashlib.md5(doc_id.encode("utf-8")).hexdigest()[20:22], 16)
             if kk % 3 == 0:
                 mtag = f'<img src="{ref}" alt="exhibit {k}">'
             elif kk % 3 == 1:
@@ -364,20 +360,8 @@ FORMAT_MIX = ("pdf", "pdf", "html")
 
 
 def format_for_doc(doc_id: str) -> str:
-    import hashlib
-
     h = int(hashlib.md5(doc_id.encode("utf-8")).hexdigest()[16:20], 16)
     return FORMAT_MIX[h % len(FORMAT_MIX)]
-
-
-@F.pandas_udf(RENDERED)
-def _render_udf(doc_id: pd.Series, text: pd.Series) -> pd.DataFrame:
-    contents, n_pages = [], []
-    for d, t in zip(doc_id, text):
-        c, n = render_text(str(d), t)
-        contents.append(c)
-        n_pages.append(n)
-    return pd.DataFrame({"content": contents, "n_pages": n_pages})
 
 
 # Deterministic per-doc filter assignment for the mixed-compression
@@ -395,8 +379,6 @@ FILTER_MIX: tuple[tuple[str, ...] | None, ...] = (
 
 
 def filters_for_doc(doc_id: str) -> tuple[str, ...] | None:
-    import hashlib
-
     h = int(hashlib.md5(doc_id.encode("utf-8")).hexdigest()[:8], 16)
     return FILTER_MIX[h % len(FILTER_MIX)]
 
@@ -409,8 +391,6 @@ STRUCTURE_MIX = ("classic", "objstm", "objstm_xref")
 
 
 def structure_for_doc(doc_id: str) -> str:
-    import hashlib
-
     h = int(hashlib.md5(doc_id.encode("utf-8")).hexdigest()[8:12], 16)
     return STRUCTURE_MIX[h % len(STRUCTURE_MIX)]
 
@@ -424,77 +404,47 @@ ENCODING_MIX: tuple[str | None, ...] = (None, "differences", "cid")
 
 
 def encoding_for_doc(doc_id: str) -> str | None:
-    import hashlib
-
     h = int(hashlib.md5(doc_id.encode("utf-8")).hexdigest()[12:16], 16)
     return ENCODING_MIX[h % len(ENCODING_MIX)]
 
 
-@F.pandas_udf(RENDERED)
-def _render_mixed_udf(doc_id: pd.Series, text: pd.Series) -> pd.DataFrame:
-    contents, n_pages = [], []
-    for d, t in zip(doc_id, text):
-        c, n = render_text(
-            str(d), t, filters=filters_for_doc(str(d)), structure=structure_for_doc(str(d))
-        )
-        contents.append(c)
-        n_pages.append(n)
-    return pd.DataFrame({"content": contents, "n_pages": n_pages})
+MIXES = ("plain", "filters", "full", "html", "interleaved")
+
+
+def render_doc(doc_id: str, text: str, mix: str) -> tuple[bytes, int]:
+    """One document's ``(content, n_pages)`` under a corpus ``mix``:
+
+    - ``"plain"``: unfiltered classic PDF;
+    - ``"filters"``: per-doc filter chain (``FILTER_MIX``) and PDF-1.5
+      structure (``STRUCTURE_MIX``); extracts byte-identical to plain
+      (operators/filters.py splice contract);
+    - ``"full"``: filters × structure × font encoding (``ENCODING_MIX``);
+    - ``"html"``: every document an HTML page;
+    - ``"interleaved"``: ``format_for_doc`` picks HTML or ``"full"``."""
+    if mix == "interleaved":
+        mix = "html" if format_for_doc(doc_id) == "html" else "full"
+    if mix == "plain":
+        return render_text(doc_id, text)
+    if mix == "html":
+        return render_html(doc_id, text)
+    if mix not in ("filters", "full"):
+        raise ValueError(f"unknown mix {mix!r}")
+    return render_text(
+        doc_id,
+        text,
+        filters=filters_for_doc(doc_id),
+        structure=structure_for_doc(doc_id),
+        encoding=encoding_for_doc(doc_id) if mix == "full" else None,
+    )
 
 
 @F.pandas_udf(RENDERED)
-def _render_full_udf(doc_id: pd.Series, text: pd.Series) -> pd.DataFrame:
-    """The full real-world matrix: filter chain × PDF-1.5 structure ×
-    font encoding, each a deterministic function of doc_id."""
-    contents, n_pages = [], []
-    for d, t in zip(doc_id, text):
-        ds = str(d)
-        c, n = render_text(
-            ds,
-            t,
-            filters=filters_for_doc(ds),
-            structure=structure_for_doc(ds),
-            encoding=encoding_for_doc(ds),
-        )
-        contents.append(c)
-        n_pages.append(n)
-    return pd.DataFrame({"content": contents, "n_pages": n_pages})
+def _render_udf(doc_id: pd.Series, text: pd.Series, mix: pd.Series) -> pd.DataFrame:
+    rendered = [render_doc(str(d), t, m) for d, t, m in zip(doc_id, text, mix)]
+    return pd.DataFrame(rendered, columns=["content", "n_pages"])
 
 
-@F.pandas_udf(RENDERED)
-def _render_html_udf(doc_id: pd.Series, text: pd.Series) -> pd.DataFrame:
-    """Every document as an HTML page (the html-metadata gate's corpus)."""
-    contents, n_pages = [], []
-    for d, t in zip(doc_id, text):
-        c, n = render_html(str(d), t)
-        contents.append(c)
-        n_pages.append(n)
-    return pd.DataFrame({"content": contents, "n_pages": n_pages})
-
-
-@F.pandas_udf(RENDERED)
-def _render_interleaved_udf(doc_id: pd.Series, text: pd.Series) -> pd.DataFrame:
-    """Interleaved-format corpus: per-doc md5 bits pick HTML or the
-    full PDF matrix (filters × structure × font encoding)."""
-    contents, n_pages = [], []
-    for d, t in zip(doc_id, text):
-        ds = str(d)
-        if format_for_doc(ds) == "html":
-            c, n = render_html(ds, t)
-        else:
-            c, n = render_text(
-                ds,
-                t,
-                filters=filters_for_doc(ds),
-                structure=structure_for_doc(ds),
-                encoding=encoding_for_doc(ds),
-            )
-        contents.append(c)
-        n_pages.append(n)
-    return pd.DataFrame({"content": contents, "n_pages": n_pages})
-
-
-# Rendering IS a pure function of (doc_id, text); asNondeterministic()
+# Rendering IS a pure function of (doc_id, text, mix); asNondeterministic()
 # only withdraws Catalyst's license to DUPLICATE the call — without it,
 # pushing the pipeline's validity filters (which reference rendered
 # content) below the spread exchange re-evaluated the render UDF a
@@ -502,21 +452,13 @@ def _render_interleaved_udf(doc_id: pd.Series, text: pd.Series) -> pd.DataFrame:
 # ArrowEvalPython render nodes per branch, 6 renders of the corpus for
 # a 3-branch plan).
 render_udf = _render_udf.asNondeterministic()
-render_mixed_udf = _render_mixed_udf.asNondeterministic()
-render_full_udf = _render_full_udf.asNondeterministic()
-render_interleaved_udf = _render_interleaved_udf.asNondeterministic()
-render_html_udf = _render_html_udf.asNondeterministic()
 
 
 def render_documents_raw(
-    documents: DataFrame,
-    partitions: int | None = None,
-    mixed_filters: bool = False,
-    encoded: bool = False,
-    interleaved: bool = False,
-    html_only: bool = False,
+    documents: DataFrame, partitions: int | None = None, mix: str = "plain"
 ) -> DataFrame:
-    """documents(doc_id, text, ...) → documents_raw for the pipeline.
+    """documents(doc_id, text, ...) → documents_raw for the pipeline,
+    each document rendered by :func:`render_doc` under ``mix``.
 
     Salts/repartitions the SLIM text rows by hash(doc_id) BEFORE the
     render UDF: a small parquet source arrives as one input split, and
@@ -525,31 +467,15 @@ def render_documents_raw(
     shuffle payload here is doc_id+text — far cheaper than shuffling
     rendered byte streams afterwards — and downstream stages inherit
     the spread, so ``extract_documents(..., presalted=True)`` can skip
-    its own repartition.
-
-    ``mixed_filters=True`` renders each page's content inside a
-    PDF stream object whose filter chain is a deterministic function
-    of doc_id (``FILTER_MIX`` — Flate/LZW/ASCIIHex/ASCII85+Flate/RLE
-    plus plain), exercising the real-world compressed-PDF input shape;
-    the extraction output is byte-for-byte identical to the plain
-    render (operators/filters.py splice contract)."""
+    its own repartition."""
+    if mix not in MIXES:
+        raise ValueError(f"unknown mix {mix!r}")
     spark = documents.sparkSession
     n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     documents = documents.repartition(n_part, F.xxhash64(F.col("doc_id").cast("string")))
-    # encoded=True adds the per-doc font-encoding dimension ON TOP of
-    # the filter/structure mix (the full real-world matrix);
-    # interleaved=True additionally mixes FORMATS — a third of the
-    # corpus renders as HTML pages (format_for_doc), the rest as the
-    # full PDF matrix
-    if interleaved:
-        udf = render_interleaved_udf
-    elif html_only:
-        udf = render_html_udf
-    else:
-        udf = render_full_udf if encoded else (render_mixed_udf if mixed_filters else render_udf)
     r = documents.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        udf(F.col("doc_id").cast("string"), F.col("text")).alias("r"),
+        render_udf(F.col("doc_id").cast("string"), F.col("text"), F.lit(mix)).alias("r"),
     )
     return r.select(
         "doc_id",

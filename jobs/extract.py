@@ -25,10 +25,11 @@ dropped silently.
 The job is resumable: re-running with the same --run-id and --output
 processes only buckets missing from the checkpoint table
 (plans/checkpoint.py). The master is NOT hard-coded — spark-submit
---master / cluster deploy mode decides; session settings that matter
-for the workload (AQE, Arrow batching) are applied as conf defaults
-only if unset; engine expressions are session-config independent (no
-ANSI / mapKeyDedupPolicy overrides needed).
+--master / cluster deploy mode decides; the workload's session
+settings (AQE, Arrow batching: ``session.WORKLOAD_CONF``) fill only
+keys the submitted conf leaves unset; engine expressions are
+session-config independent (no ANSI / mapKeyDedupPolicy overrides
+needed).
 """
 
 from __future__ import annotations
@@ -40,24 +41,21 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+from insurance_pdf_extractor_spark.session import WORKLOAD_CONF
 
 
 def build_cluster_session(app_name: str) -> SparkSession:
     """Session for spark-submit: respect the submitted master/conf and
-    only fill in workload defaults (cf. session.build_session, which
-    pins local[] for tests/bench)."""
-    b = SparkSession.builder.appName(app_name)
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
-        "spark.sql.execution.arrow.maxBytesPerBatch": str(64 * 1024 * 1024),
-        "spark.sql.execution.arrow.maxBytesPerOutputBatch": str(64 * 1024 * 1024),
-    }.items():
-        b = b.config(k, v)
+    only fill in the workload defaults it does not set (cf.
+    session.build_session, which pins local[] for tests/bench)."""
+    submitted = SparkContext.getOrCreate(SparkConf().setAppName(app_name)).getConf()
+    b = SparkSession.builder
+    for k, v in WORKLOAD_CONF.items():
+        if not submitted.contains(k):
+            b = b.config(k, v)
     return b.getOrCreate()
 
 

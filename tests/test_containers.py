@@ -273,6 +273,26 @@ def test_sample_frames_mp4_zero_duration_poison_row(spark):
     assert "non-positive mdhd duration" in rows[0]["err"]
 
 
+def test_sample_frames_mp4_corrupt_poison_row(spark):
+    """A corrupt container (junk bytes, a truncated file, no payload)
+    surfaces as one poison row per asset — no payload, ``frame_ts`` -1,
+    the parse error — while a valid asset in the same batch samples."""
+    from insurance_pdf_extractor_spark.operators.containers import sample_frames_mp4
+
+    good = synth_mp4(3)
+    assets = spark.createDataFrame(
+        [("good", good), ("junk", b"junk"), ("trunc", good[:-20]), ("none", None)],
+        "media_ref string, payload binary",
+    )
+    rows = sample_frames_mp4(assets, every_ms=100).collect()
+    assert any(r["media_ref"] == "good" and r["err"] is None for r in rows)
+    for ref in ("junk", "trunc", "none"):
+        bad = [r for r in rows if r["media_ref"] == ref]
+        assert len(bad) == 1, ref
+        assert bad[0]["frame_ts"] == -1 and bad[0]["frame_payload"] is None
+        assert "ValueError" in bad[0]["err"], bad[0]["err"]
+
+
 # --- r5 second half: MP4 CONTENT decode (MJPEG frames, PCM audio) ---------
 
 def test_mp4_pcm_roundtrip():

@@ -62,15 +62,22 @@ def test_simhash_near_dups(docs_df):
 
 
 def test_shingles_and_signature_shapes(spark):
+    """The MinHash kernel over token-hash k-shingles: one minimum per
+    permutation, the minima distinct across permutations and equal to a
+    big-int recomputation, and the ``[P] * n`` sentinel for a document
+    shorter than k."""
+    P, B = dedup._MINHASH_P, 1_000_003
     df = spark.createDataFrame([("a b c d e",), ("x y",)], "text: string")
-    sh = df.select(dedup.shingles_expr(F.col("text"), 3).alias("s")).collect()
-    assert sh[0]["s"] == ["a b c", "b c d", "c d e"]
-    assert sh[1]["s"] == []  # shorter than k
-    sig = df.select(
-        dedup.hashed_shingles_expr(dedup.shingles_expr(F.col("text"), 3)).alias("h")
-    ).select(dedup.minhash_signature_expr(F.col("h"), 8).alias("g")).collect()
-    assert len(sig[0]["g"]) == 8
-    assert len(set(sig[0]["g"])) > 1  # distinct permutations produce distinct minima
+    hashed = df.select(dedup.token_hashes_expr(F.col("text")).alias("h"))
+    rows = hashed.select(
+        "h", dedup.minhash_signature_from_token_hashes(F.col("h"), k=3, n_hashes=8).alias("g")
+    ).collect()
+    h, g = rows[0]["h"], rows[0]["g"]
+    assert len(h) == 5 and len(g) == 8
+    assert len(set(g)) > 1  # distinct permutations produce distinct minima
+    grams = [(h[i] * B * B + h[i + 1] * B + h[i + 2]) % P for i in range(3)]
+    assert g == [min((x * (2 * s + 1) + s * 0x9E3779B9) % P for x in grams) for s in range(8)]
+    assert rows[1]["g"] == [P] * 8  # shorter than k
 
 
 @pytest.fixture(scope="module")
@@ -141,7 +148,7 @@ def _py_winnow(text: str, tok_hash, k=5, w=4):
     arithmetic — exact match requires all Spark-side products to stay
     within 64-bit longs, which is why the modulus is 2^31-1."""
     from insurance_pdf_extractor_spark.operators.text_quality import _WINNOW_B as B
-    from insurance_pdf_extractor_spark.operators.text_quality import _WINNOW_P as P
+    from insurance_pdf_extractor_spark.operators.dedup import _MINHASH_P as P
     import re
 
     words = re.sub(r"\s+", " ", text.strip()).lower().split(" ")
@@ -171,7 +178,7 @@ def test_winnow_fingerprints_match_python_oracle(spark):
         "a b c d e f g h i j k l m n o p q r s t u v w x y z",
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    hashed = df.select("doc_id", "text", tq.token_hashes_expr(F.col("text")).alias("h"))
+    hashed = df.select("doc_id", "text", dedup.token_hashes_expr(F.col("text")).alias("h"))
     grams = hashed.select("doc_id", "text", "h", tq.kgram_hashes_expr(F.col("h"), k=5).alias("g"))
     out = grams.select(
         "doc_id", "text", "h", tq.winnow_fingerprints_expr(F.col("g"), window=4).alias("fp")
@@ -193,7 +200,7 @@ def test_winnow_shared_run_guarantee(spark):
     a = "unique one two three " + shared + " tail tokens here"
     b = "different prefix words " + shared + " other suffix"
     df = spark.createDataFrame([(0, a), (1, b)], "doc_id long, text string")
-    hashed = df.select("doc_id", tq.token_hashes_expr(F.col("text")).alias("h"))
+    hashed = df.select("doc_id", dedup.token_hashes_expr(F.col("text")).alias("h"))
     grams = hashed.select("doc_id", tq.kgram_hashes_expr(F.col("h"), k=5).alias("g"))
     fps = grams.select(
         "doc_id", tq.winnow_fingerprints_expr(F.col("g"), window=4).alias("fp")

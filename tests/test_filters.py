@@ -337,7 +337,7 @@ def test_pipeline_mixed_filters_equivalence(spark):
     )
     plain, _ = extract_documents(render_documents_raw(docs, partitions=4), presalted=True)
     mixed, _ = extract_documents(
-        render_documents_raw(docs, partitions=4, mixed_filters=True), presalted=True
+        render_documents_raw(docs, partitions=4, mix="filters"), presalted=True
     )
     a, b = _span_map(plain), _span_map(mixed)
     assert set(a) == set(b) and a == b
@@ -484,9 +484,9 @@ def _dict_extent_byte_walk(buf: bytes, start: int) -> int:
 
 
 def test_dict_extent_matches_byte_walk():
-    def run(f, buf, start):
+    def run(f, *args):
         try:
-            return f(buf, start)
+            return f(*args)
         except ValueError:
             return None
 
@@ -497,6 +497,12 @@ def test_dict_extent_matches_byte_walk():
         start = rng.randint(0, len(buf))
         assert run(flt._dict_extent, buf, start) == run(_dict_extent_byte_walk, buf, start), (buf, start)
         assert flt._skip_ws(buf, start) == len(buf) - len(buf[start:].lstrip(b" \t\r\n\f\x00"))
+        # one memo shared by scans from every delimiter, in random order
+        idx = flt.ObjectIndex(buf)
+        starts = [i for i in range(len(buf)) if buf[i] in b"<(>"]
+        rng.shuffle(starts)
+        for st in starts:
+            assert run(idx.dict_extent, st) == run(_dict_extent_byte_walk, buf, st), (buf, st)
 
 
 def test_object_index_first_definition_and_bounded_bodies():

@@ -512,7 +512,7 @@ def test_pipeline_encoded_matrix_spans_match_mirror(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     out, _ = extract_documents(
-        render_documents_raw(docs, partitions=4, encoded=True), presalted=True
+        render_documents_raw(docs, partitions=4, mix="full"), presalted=True
     )
     got = _span_map(out)
     for doc_id, text in rows:

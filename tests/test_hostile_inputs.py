@@ -216,3 +216,34 @@ def test_object_lookups_are_linear_time():
     runs = tokenize_content(doc)
     assert time.process_time() - t0 < _CPU_BOUND_S
     assert runs == [(0, 1.0, 2.0, doc.index(b"(tail)"), "tail")]
+
+
+_STREAM_TAIL = b"\n3 0 obj\n<< /Filter /FlateDecode /Length 1 >>\nstream\nx\nendstream\nendobj\n"
+_OPEN_DICTS = {
+    # font layer: a dict scan from every /Font <<
+    "font-open-dict": (tokenize_content, b"/Font << /F1 1 0 R ", b""),
+    "font-open-string": (tokenize_content, b"/Font << ( ", b""),
+    # filter layer: a dict scan from every N G obj << (the buffer holds
+    # stream and /Filter, so the object walk runs)
+    "obj-open-dict": (decode_content_filters, b"1 0 obj << /A 1 ", b""),
+    "obj-open-string": (decode_content_filters, b"1 0 obj << ( ", b""),
+    "obj-nested-closed": (decode_content_filters, b"1 0 obj << /A << ", b">> "),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_OPEN_DICTS))
+def test_open_dicts_are_scanned_once(name):
+    """Dicts left open, strings left open and deep nesting once made the
+    dict scan from every dict start run to the end of the buffer or of
+    its dict (quadratic: 3-7 s CPU at 4,000 repeats). Each dict and
+    string end is now found once per buffer."""
+    layer, atom, closer = _OPEN_DICTS[name]
+    n = 8000
+    doc = b"%PDF-1.4\n" + atom * n + closer * n + b"\n%%PAGE 0\nBT (tail) Tj ET\n" + _STREAM_TAIL
+    t0 = time.process_time()
+    out = layer(doc)
+    assert time.process_time() - t0 < _CPU_BOUND_S
+    if layer is decode_content_filters:
+        # the unreadable objects pass through; the one filtered stream
+        # object at the end decodes (its payload is corrupt: dropped)
+        assert out == doc[: doc.index(b"3 0 obj")]

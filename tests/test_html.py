@@ -342,7 +342,7 @@ def test_scan_html_meta_spark(spark):
     docs = spark.createDataFrame(
         [("md-1", "alpha beta gamma"), ("md-2", "")], "doc_id string, text string"
     )
-    raw = render_documents_raw(docs, html_only=True)
+    raw = render_documents_raw(docs, mix="html")
     got = {r["doc_id"]: r["meta"].asDict() for r in scan_html_meta(raw).collect()}
     assert got["md-1"]["title"] == "Document md-1"
     assert got["md-1"]["description"] == "Insurance quote md-1 — 3 words"
@@ -703,7 +703,7 @@ def test_spark_interleaved_pipeline_matches_fixture(spark, interleaved_corpus):
     fmts = {format_for_doc(d) for d in pairs}
     assert fmts == {"pdf", "html"}
 
-    raw = render_documents_raw(docs, interleaved=True)
+    raw = render_documents_raw(docs, mix="interleaved")
     out, rejects = extract_documents(raw, presalted=True)
     assert rejects.count() == 0
     got = {
@@ -725,7 +725,7 @@ def test_spark_interleaved_parallelism_invariance(spark, interleaved_corpus, shu
 
     def run(n_part):
         with shuffle_partitions(n_part):
-            raw = render_documents_raw(docs, partitions=n_part, interleaved=True)
+            raw = render_documents_raw(docs, partitions=n_part, mix="interleaved")
             out, _ = extract_documents(raw, presalted=True)
             return sorted(
                 (r["doc_id"], tuple((s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]))
@@ -747,7 +747,7 @@ def test_oversized_html_stays_in_fused_kernel(spark):
     big_id = next(f"big-html-{i}" for i in range(100) if format_for_doc(f"big-html-{i}") == "html")
     big_text = " ".join(f"word{i % 13} text" for i in range(3000))
     docs = spark.createDataFrame([(big_id, big_text)], "doc_id string, text string")
-    raw = render_documents_raw(docs, interleaved=True)
+    raw = render_documents_raw(docs, mix="interleaved")
     # force the shard threshold below this doc's size
     out, rejects = extract_documents(raw, presalted=True, shard_size_bytes=1024)
     assert rejects.count() == 0

@@ -1,6 +1,6 @@
 """Real codec-free media decode: BMP/WAV round-trips, feature values
-against hand arithmetic, RAWV frame sampling end-to-end through Spark,
-and poison-row behavior on corrupt payloads.
+against hand arithmetic, MP4 frame samples through feature extraction
+in Spark, and poison-row behavior on corrupt payloads.
 
 Reference parity anchor: the reference treats uploaded documents as
 opaque bytes plus MIME metadata (/root/reference/app/services/storage.py);
@@ -21,12 +21,9 @@ from insurance_pdf_extractor_spark.operators.multimodal import (
     decode_media,
     decode_wav,
     encode_bmp,
-    encode_rawv,
     encode_wav,
     extract_media_features,
-    parse_rawv,
     resize_area,
-    sample_frames_raw,
     synth_audio,
     synth_image,
     synth_media_assets,
@@ -141,18 +138,6 @@ def test_resize_area_fractional_preserves_mean():
     assert abs(r.mean() - a.mean()) < 1e-9
 
 
-def test_rawv_roundtrip_and_truncation():
-    frames = [encode_bmp(synth_image(i, h=4, w=4)) for i in range(3)]
-    rv = encode_rawv(frames, 40)
-    frame_ms, table = parse_rawv(rv)
-    assert frame_ms == 40
-    assert [rv[o : o + n] for _, o, n in table] == frames
-    with pytest.raises(ValueError):
-        parse_rawv(rv[:-5])
-    with pytest.raises(ValueError):
-        parse_rawv(b"NOPE" + rv[4:])
-
-
 def test_extract_media_features_real_decode(spark):
     """End-to-end Spark path: synthesized BMP+WAV assets through the
     real decoder; one corrupt payload poison-rows instead of failing
@@ -178,34 +163,15 @@ def test_extract_media_features_real_decode(spark):
     assert "ValueError" in rows["bad-1"]["err"]
 
 
-def test_sample_frames_raw_spark(spark):
-    """Real frame sampling: 5 frames at 100 ms, sampled every 250 ms ->
-    ts 0/250/500 covering frames 0/2/5->idx 2? (250//100=2, 500//100=5
-    is out of range: total 500 ms, so ts<500) => ts 0 and 250."""
-    frames = [encode_bmp(synth_image(i, h=4, w=4)) for i in range(5)]
-    rv = encode_rawv(frames, 100)
-    assets = spark.createDataFrame([("v1", rv), ("corrupt", b"junk")], "media_ref string, payload binary")
-    out = sample_frames_raw(assets, every_ms=250).collect()
-    by_ref = {}
-    for r in out:
-        by_ref.setdefault(r["media_ref"], []).append(r)
-    v1 = sorted(by_ref["v1"], key=lambda r: r["frame_ts"])
-    assert [r["frame_ts"] for r in v1] == [0, 250]
-    assert bytes(v1[0]["frame_payload"]) == frames[0]
-    assert bytes(v1[1]["frame_payload"]) == frames[2]
-    # sampled frames decode for real
-    assert (decode_bmp(bytes(v1[1]["frame_payload"])) == synth_image(2, h=4, w=4)).all()
-    c = by_ref["corrupt"]
-    assert len(c) == 1 and c[0]["frame_payload"] is None and "ValueError" in c[0]["err"]
-
-
 def test_frame_sample_into_feature_extraction(spark):
-    """The full video path: RAWV -> sampled frames -> real BMP feature
+    """The full video path: MP4 -> sampled frames -> real BMP feature
     extraction, all executor-side."""
+    from insurance_pdf_extractor_spark.operators.containers import encode_mp4, sample_frames_mp4
+
     frames = [encode_bmp(synth_image(i, h=4, w=4)) for i in range(4)]
-    rv = encode_rawv(frames, 500)
-    assets = spark.createDataFrame([("v1", rv)], "media_ref string, payload binary")
-    sampled = sample_frames_raw(assets, every_ms=1000)
+    mp4 = encode_mp4(frames, [500] * 4, timescale=1000)
+    assets = spark.createDataFrame([("v1", mp4)], "media_ref string, payload binary")
+    sampled = sample_frames_mp4(assets, every_ms=1000)
     as_assets = sampled.select(
         F.concat_ws("#", "media_ref", F.col("frame_ts").cast("string")).alias("media_ref"),
         F.lit("image").alias("kind"),

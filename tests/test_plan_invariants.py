@@ -179,7 +179,7 @@ def test_html_meta_scan_is_map_only(spark):
     from insurance_pdf_extractor_spark.sources.render import render_documents_raw
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    raw = render_documents_raw(docs, html_only=True, partitions=4)
+    raw = render_documents_raw(docs, partitions=4, mix="html")
     plan = _plan(spark, scan_html_meta(raw))
     assert "BatchEvalPython" not in plan
     # one exchange NODE total: the render path's deliberate pre-UDF
@@ -204,7 +204,7 @@ def test_interleaved_storage_routes_html_around_shard_path(spark, tmp_path):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(200)
     raw_dir = str(tmp_path / "rawi")
-    render_documents_raw(docs, interleaved=True).write.parquet(raw_dir)
+    render_documents_raw(docs, mix="interleaved").write.parquet(raw_dir)
     stored = spark.read.parquet(raw_dir)
 
     plan = _plan(spark, extract_results(stored))
@@ -221,19 +221,29 @@ def test_interleaved_storage_routes_html_around_shard_path(spark, tmp_path):
     assert res.filter(res.status == "error").count() == 0
 
 
-def test_render_path_renders_once_per_branch(spark):
+@pytest.mark.parametrize("mix", ["plain", "filters", "full", "html", "interleaved"])
+def test_render_path_renders_once_per_branch(spark, mix):
     """render_udf is marked nondeterministic so filter pushdown cannot
     duplicate it — the plan historically evaluated the render kernel
-    TWICE per union branch (6 corpus renders)."""
+    TWICE per union branch (6 corpus renders). Every mix runs the same
+    UDF."""
     from insurance_pdf_extractor_spark.plans.pipeline import extract_results
     from insurance_pdf_extractor_spark.sources.render import render_documents_raw
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(spark, extract_results(render_documents_raw(docs)))
+    plan = _plan(spark, extract_results(render_documents_raw(docs, mix=mix)))
     renders = plan.count("render_udf")
     # one logical reference per branch (small / oversized / reject);
     # the formatted plan mentions each ArrowEvalPython node once
-    assert renders <= 3, f"render duplicated by pushdown: {renders} references"
+    assert 1 <= renders <= 3, f"render duplicated by pushdown: {renders} references"
+
+
+def test_unknown_render_mix_raises(spark):
+    from insurance_pdf_extractor_spark.sources.render import render_documents_raw
+
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="unknown mix"):
+        render_documents_raw(docs, mix="encoded")
 
 
 def test_analytics_stay_in_whole_stage_codegen(spark, registry):

@@ -72,7 +72,7 @@ def words(t: str) -> list[str]:
 
 
 def fold_dot(a, b) -> float:
-    """dot_expr: left fold of per-element double products."""
+    """Left fold of per-element double products (similarity._leftfold_dot)."""
     acc = 0.0
     for x, y in zip(a, b):
         acc += float(x) * float(y)
