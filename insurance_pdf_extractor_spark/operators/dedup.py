@@ -519,7 +519,6 @@ def contamination_hits(
     bench_text_col: str = "text",
     window: int = 40,
     train_stride: int = 20,
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: per training document, how many of
     its ``train_stride``-grid windows appear VERBATIM anywhere in the
@@ -537,8 +536,8 @@ def contamination_hits(
     same recall contract as duplicated_window_positions).
 
     The join carries (id, pos, 8-byte key) on the train side and bare
-    keys on the bench side; with ``broadcast_bench`` the key set ships
-    to executors and the scan is map-side — zero shuffle of the
+    keys on the bench side; the key set is broadcast to executors, so
+    the scan is map-side — zero shuffle of the
     training corpus. Returns every training doc: (id, n_hits,
     first_hit_pos) with (0, -1) for clean docs.
     """
@@ -574,9 +573,7 @@ def contamination_hits(
         )
         .distinct()
     )
-    if broadcast_bench:
-        bw = F.broadcast(bw)
-    hits = tw.join(bw, "k").groupBy(id_col).agg(
+    hits = tw.join(F.broadcast(bw), "k").groupBy(id_col).agg(
         F.count("*").alias("n_hits"), F.min("pos").alias("first_hit_pos")
     )
     return (
@@ -787,7 +784,6 @@ def bloom_bitmaps(
     n_bits: int = 1 << 20,
     n_hashes: int = 5,
     n_shards: int = 1,
-    saturation_warn: float = 0.5,
 ) -> np.ndarray:
     """Build fingerprint-range-sharded Bloom bitmaps over an int64 key
     column EXECUTOR-side: per partition, one packed uint64 bitmap per
@@ -804,8 +800,7 @@ def bloom_bitmaps(
     task, and a single shard's bitmap can be rebuilt by scanning one
     partition directory (see :func:`write_fingerprint_table`).
 
-    Warns when any shard's fill fraction exceeds ``saturation_warn``
-    (default 50%): a saturated bitmap answers "maybe" for everything —
+    Warns when any shard's fill fraction exceeds 50%: a saturated bitmap answers "maybe" for everything —
     still correct (the confirm join is exact) but pure overhead, the
     silent-degradation mode the r3 advice flagged. Size n_bits at
     ~10 bits/key/shard for 1% fpp.
@@ -845,11 +840,11 @@ def bloom_bitmaps(
         acc[row["shard"]] |= np.frombuffer(row["bits"], dtype=np.uint64)
     fill = bloom_fill_fractions(acc)
     worst = float(fill.max()) if len(fill) else 0.0
-    if worst > saturation_warn:
+    if worst > 0.5:
         import warnings
 
         warnings.warn(
-            f"bloom bitmap saturated: max shard fill {worst:.2f} > {saturation_warn} "
+            f"bloom bitmap saturated: max shard fill {worst:.2f} > 0.5 "
             f"(n_bits={n_bits}, n_shards={n_shards}) — the filter degrades to "
             "pass-through and every row pays the confirm join; raise n_bits or n_shards",
             stacklevel=2,
@@ -894,21 +889,13 @@ def auto_bloom_params(
     return total // n_shards, n_shards
 
 
-def bloom_bitmap(df: DataFrame, key_col: str, n_bits: int = 1 << 20, n_hashes: int = 5) -> np.ndarray:
-    """Single-shard convenience wrapper over :func:`bloom_bitmaps`
-    (returns the flat 1-D bitmap the original API exposed)."""
-    return bloom_bitmaps(df, key_col, n_bits=n_bits, n_hashes=n_hashes, n_shards=1)[0]
-
-
-def bloom_contains_udf(
-    df: DataFrame, bitmap: np.ndarray, n_bits: int | None = None, n_hashes: int = 5
-):
+def bloom_contains_udf(df: DataFrame, bitmap: np.ndarray, n_hashes: int = 5):
     """Vectorized membership test against broadcast Bloom bitmap(s)
     (numpy gather + shift per Arrow batch, no per-row Python). Accepts
     the flat 1-D single bitmap or the (n_shards, n_words) sharded array
     from :func:`bloom_bitmaps`; for the sharded form each key probes
-    only ITS fingerprint-range shard. ``n_bits`` is derivable from the
-    array shape (n_words x 64) — pass it only as a cross-check.
+    only ITS fingerprint-range shard; ``n_bits`` is the array's row
+    width (n_words x 64).
 
     The Spark broadcast stays pinned for the session unless released:
     the handle is exposed as ``might_contain.broadcast`` so long-lived
@@ -917,10 +904,7 @@ def bloom_contains_udf(
     one-shot batch jobs can ignore it."""
     b2 = np.atleast_2d(bitmap)
     n_shards, n_words = b2.shape
-    if n_bits is None:
-        n_bits = n_words << 6
-    elif n_bits != n_words << 6:
-        raise ValueError(f"n_bits={n_bits} inconsistent with bitmap shape ({n_words << 6})")
+    n_bits = n_words << 6
     bc = df.sparkSession.sparkContext.broadcast(b2.tobytes())
 
     @F.pandas_udf("boolean")
@@ -934,6 +918,43 @@ def bloom_contains_udf(
 
     might_contain.broadcast = bc
     return might_contain
+
+
+def history_bitmaps(
+    hist_fp: DataFrame,
+    n_bits: int | None = None,
+    n_hashes: int = 5,
+    n_shards: int | None = None,
+) -> np.ndarray:
+    """The Bloom bitmaps over a history fingerprint frame's ``__bk``
+    key (:func:`history_fingerprints`). ``n_bits``/``n_shards`` left at
+    None auto-size from the history cardinality
+    (:func:`auto_bloom_params`, ~10 bits/key); explicit values win."""
+    if n_bits is None or n_shards is None:
+        auto_bits, auto_shards = auto_bloom_params(hist_fp)
+        n_bits, n_shards = n_bits or auto_bits, n_shards or auto_shards
+    return bloom_bitmaps(hist_fp, "__bk", n_bits=n_bits, n_hashes=n_hashes, n_shards=n_shards)
+
+
+def _unseen(
+    rows: DataFrame, bk: Column, hist_fp: DataFrame, bitmaps: np.ndarray, n_hashes: int
+) -> DataFrame:
+    """The ``rows`` (carrying an md5 ``__fp``) whose fingerprint is not
+    in ``hist_fp``: bloom-negative rows on the ``bk`` probe are
+    definitely unseen and skip the join; positives are exact-confirmed
+    by an anti-join on ``__fp``.
+
+    The flagged frame is materialized ONCE: both union branches consume
+    it, and exchange reuse would cache only the shuffle — the upstream
+    finalization + the Arrow bloom probe would otherwise run twice per
+    action (the dedup_clusters localCheckpoint precedent)."""
+    maybe = bloom_contains_udf(rows, bitmaps, n_hashes=n_hashes)
+    flagged = rows.withColumn("__maybe", maybe(bk)).localCheckpoint(eager=False)
+    fresh = flagged.filter(~F.col("__maybe"))
+    confirmed = flagged.filter(F.col("__maybe")).join(
+        hist_fp.select("__fp"), "__fp", "left_anti"
+    )
+    return fresh.unionByName(confirmed).drop("__maybe")
 
 
 def history_fingerprints(history: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1033,24 +1054,9 @@ def incremental_dedup(
         )
     )
     if bitmaps is None:
-        if n_bits is None or n_shards is None:
-            auto_bits, auto_shards = auto_bloom_params(hist_fp)
-            n_bits, n_shards = n_bits or auto_bits, n_shards or auto_shards
-        bitmaps = bloom_bitmaps(
-            hist_fp, "__bk", n_bits=n_bits, n_hashes=n_hashes, n_shards=n_shards
-        )
-    maybe = bloom_contains_udf(batch, bitmaps, n_hashes=n_hashes)
-    # Materialize the flagged frame ONCE: both union branches consume
-    # it, and exchange reuse would cache only the shuffle — the groupBy
-    # finalization + the Arrow bloom probe would otherwise run twice
-    # per action (the dedup_clusters localCheckpoint precedent; the
-    # frame is slim: fp, id, count, bk, flag).
-    flagged = firsts.withColumn("__maybe", maybe(F.col("__bk"))).localCheckpoint(eager=False)
-    fresh = flagged.filter(~F.col("__maybe"))  # bloom-negative: definitely unseen
-    confirmed = flagged.filter(F.col("__maybe")).join(
-        hist_fp.select("__fp"), "__fp", "left_anti"
-    )
-    return fresh.unionByName(confirmed).select(id_col, "n_batch_dups")
+        bitmaps = history_bitmaps(hist_fp, n_bits, n_hashes, n_shards)
+    unseen = _unseen(firsts, F.col("__bk"), hist_fp, bitmaps, n_hashes)
+    return unseen.select(id_col, "n_batch_dups")
 
 
 def history_filter(
@@ -1084,21 +1090,6 @@ def history_filter(
         hist_fp = history_fingerprints(history, text_col)
     norm = normalize_text_expr(F.col(text_col))
     if bitmaps is None:
-        if n_bits is None or n_shards is None:
-            auto_bits, auto_shards = auto_bloom_params(hist_fp)
-            n_bits, n_shards = n_bits or auto_bits, n_shards or auto_shards
-        bitmaps = bloom_bitmaps(
-            hist_fp, "__bk", n_bits=n_bits, n_hashes=n_hashes, n_shards=n_shards
-        )
-    maybe = bloom_contains_udf(batch, bitmaps, n_hashes=n_hashes)
-    tagged = (
-        batch.filter(F.col(text_col).isNotNull())
-        .withColumn("__fp", F.md5(norm))
-        .withColumn("__maybe", maybe(F.xxhash64(norm)))
-        .localCheckpoint(eager=False)
-    )
-    fresh = tagged.filter(~F.col("__maybe"))
-    confirmed = tagged.filter(F.col("__maybe")).join(
-        hist_fp.select("__fp"), "__fp", "left_anti"
-    )
-    return fresh.unionByName(confirmed).drop("__fp", "__maybe")
+        bitmaps = history_bitmaps(hist_fp, n_bits, n_hashes, n_shards)
+    rows = batch.filter(F.col(text_col).isNotNull()).withColumn("__fp", F.md5(norm))
+    return _unseen(rows, F.xxhash64(norm), hist_fp, bitmaps, n_hashes).drop("__fp")

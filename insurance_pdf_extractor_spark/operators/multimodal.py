@@ -275,9 +275,13 @@ def wav_features(samples: np.ndarray, rate: int, n_segments: int = 8) -> list[fl
 
 def decode_media(payload: bytes, mime: str) -> list[float]:
     """Real decode entry point, dispatched by mime. Codec-free formats
-    (BMP, PCM WAV) decode for real; formats that need PIL/ffmpeg raise —
+    (BMP, PNG, JPEG, PCM WAV) decode for real; an opaque
+    ``application/octet-stream`` payload yields its byte histogram
+    (:func:`histogram_features`); formats that need PIL/ffmpeg raise —
     the explicit extension seam a real deployment fills per-format."""
     mime = (mime or "").lower()
+    if mime == "application/octet-stream":
+        return histogram_features(payload)
     if mime in ("image/bmp", "image/x-bmp", "image/x-ms-bmp"):
         return bmp_features(decode_bmp(payload))
     if mime == "image/png":
@@ -296,8 +300,8 @@ def decode_media(payload: bytes, mime: str) -> list[float]:
     )
 
 
-def fake_features(payload: bytes, n: int = 16) -> list[float]:
-    """Deterministic stand-in decoder: 16-bin byte histogram, L1
+def histogram_features(payload: bytes, n: int = 16) -> list[float]:
+    """Features of an opaque payload: 16-bin byte histogram, L1
     normalized. Same contract (bytes → float vector) as a real decoder."""
     if not payload:
         return [0.0] * n
@@ -307,31 +311,27 @@ def fake_features(payload: bytes, n: int = 16) -> list[float]:
     return (hist / total).astype(np.float32).tolist()
 
 
-def extract_media_features(assets: DataFrame, use_fake: bool = True) -> DataFrame:
+def extract_media_features(assets: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads. Arrow batch
     shape: pdf columns (media_ref, kind, payload, mime); one output row
     per asset. Partitioning is inherited — repartition upstream by
     hash(media_ref) for balance when payload sizes are skewed.
 
-    ``use_fake=False`` dispatches :func:`decode_media` by mime — REAL
-    decode for BMP/WAV, poison-row (features=null + err) for corrupt
-    payloads or formats the container has no codec for."""
+    Each payload goes through :func:`decode_media` by mime; a corrupt
+    payload or a format the container has no codec for gives a poison
+    row (features=null + err)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, shas, sizes, errs = [], [], [], []
             for payload, mime in zip(pdf["payload"], pdf["mime"]):
                 b = bytes(payload) if payload is not None else b""
-                if use_fake:
-                    feats.append(fake_features(b))
+                try:
+                    feats.append(decode_media(b, mime))
                     errs.append(None)
-                else:
-                    try:
-                        feats.append(decode_media(b, mime))
-                        errs.append(None)
-                    except Exception as exc:  # poison row, keep the batch
-                        feats.append(None)
-                        errs.append(f"{type(exc).__name__}: {exc}")
+                except Exception as exc:  # poison row, keep the batch
+                    feats.append(None)
+                    errs.append(f"{type(exc).__name__}: {exc}")
                 shas.append(hashlib.sha1(b).hexdigest())
                 sizes.append(len(b))
             yield pd.DataFrame(

@@ -56,7 +56,6 @@ def pack_documents(
     budget: int = 512,
     bucket_chars: int = 2,
     salt: str = ":pack",
-    cache: bool = True,
 ) -> DataFrame:
     """One row per (document, chunk) it occupies: (id, n_tokens,
     start_offset, chunk_id, begin_in_chunk, end_in_chunk). Documents
@@ -64,18 +63,15 @@ def pack_documents(
     nothing, so their absence does not perturb other offsets).
 
     The keyed (id, tok, okey, bucket) projection is read twice — once
-    for the bucket totals, once for the placement pass — so cache=True
-    persists it (~40 B/doc). Pass cache=False to re-scan instead when
-    even the slim projection exceeds cluster memory.
+    for the bucket totals, once for the placement pass — so it is
+    persisted (~40 B/doc; ``persist()`` spills what memory cannot hold).
     """
     okey = _digest(F.col(id_col), salt)
     keyed = df.select(
         F.col(id_col).alias("_id"),
         F.col(token_col).cast("long").alias("_tok"),
         okey.alias("_okey"),
-    ).withColumn("_bucket", F.substring("_okey", 1, bucket_chars))
-    if cache:
-        keyed = keyed.persist()
+    ).withColumn("_bucket", F.substring("_okey", 1, bucket_chars)).persist()
 
     w = (
         Window.partitionBy("_bucket")

@@ -98,20 +98,15 @@ def kmeans_fit(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache: bool = True,
 ) -> np.ndarray:
     """Lloyd iterations; returns (k, dim) unit-norm float64 centroids,
     each quantized to 6 decimals before normalization so an independent
     reimplementation lands on identical values.
 
-    cache=True persists the slim (id, vec) projection for the fit's
-    n_iter+1 passes and unpersists on exit — the right default while
-    the projection fits cluster memory; at corpus scale where it does
-    not, pass cache=False and each iteration re-scans (IO per iteration
-    vs memory, the standard Lloyd trade)."""
-    slim = emb.select(F.col(id_col), F.col(vec_col))
-    if cache:
-        slim = slim.persist()
+    The slim (id, vec) projection is persisted for the fit's n_iter+1
+    passes (``persist()`` spills what memory cannot hold) and
+    unpersisted on exit."""
+    slim = emb.select(F.col(id_col), F.col(vec_col)).persist()
     try:
         C = _quantize_centroids(_pick_centroids(slim, k, id_col, vec_col))
         for _ in range(n_iter):
@@ -135,8 +130,7 @@ def kmeans_fit(
             C = _quantize_centroids(newC)
         return C
     finally:
-        if cache:
-            slim.unpersist()
+        slim.unpersist()
 
 
 def _quantize_centroids(C: np.ndarray) -> np.ndarray:

@@ -15,9 +15,11 @@ to the input's size) and extracted presalted, so each bucket is
 extracted and written by one task and a run leaves one part file per
 bucket directory.
 
-The writer is parquet-partitioned by bucket (an Iceberg table with the
-same layout drops in when catalog jars are present — see
-sources/catalog.py); appends of distinct buckets never conflict.
+The job writes parquet directly, partitioned by bucket. The documents
+and rejects writes overwrite dynamically: they replace only the bucket
+directories they write, so a bucket directory holds the output of the
+run that last completed it, and a run that died between its data
+writes and its lineage write is re-run without duplicating rows.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..constants import EXTRACTOR_VERSION, MAX_FILE_SIZE_BYTES, SHARD_PAGES
+from ..constants import EXTRACTOR_VERSION, MAX_FILE_SIZE_BYTES
 from .pipeline import extract_documents
 
 CHECKPOINT_DIR = "checkpoint"
@@ -39,17 +41,18 @@ def bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
 
 
-def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
-    """Buckets already recorded for this run (empty when no checkpoint
-    exists yet)."""
+def completed_keys(spark: SparkSession, table_dir: str, run_id: str, key: str) -> set:
+    """The distinct ``key`` values (buckets, curation stages) a
+    checkpoint table records for ``run_id``; empty when the table does
+    not exist yet."""
     from pyspark.errors import AnalysisException
 
     try:
-        ck = spark.read.parquet(f"{out_dir}/{CHECKPOINT_DIR}")
+        ck = spark.read.parquet(table_dir)
     except AnalysisException:  # no checkpoint dir yet (PATH_NOT_FOUND)
         return set()
-    rows = ck.filter(F.col("run_id") == run_id).select("partition_id").distinct().collect()
-    return {r["partition_id"] for r in rows}
+    rows = ck.filter(F.col("run_id") == run_id).select(key).distinct().collect()
+    return {r[key] for r in rows}
 
 
 def run_extract_job(
@@ -59,7 +62,6 @@ def run_extract_job(
     n_buckets: int = 32,
     max_size_bytes: int = MAX_FILE_SIZE_BYTES,
     shard_size_bytes: int | None = None,
-    shard_pages: int = SHARD_PAGES,
     source_files: list[str] | None = None,
 ) -> dict:
     """One (possibly resumed) extraction run. Returns run stats.
@@ -76,7 +78,8 @@ def run_extract_job(
 
     raw = raw.withColumn("bucket", bucket_expr(n_buckets))
     present = {r["bucket"] for r in raw.select("bucket").distinct().collect()}
-    pending = sorted(present - completed_buckets(spark, out_dir, run_id))
+    done = completed_keys(spark, f"{out_dir}/{CHECKPOINT_DIR}", run_id, "partition_id")
+    pending = sorted(present - done)
     if not pending:
         # fully-checkpointed run: nothing to do (common on retry loops)
         return {"run_id": run_id, "buckets_completed": 0, "wall_ms": int((time.monotonic() - t0) * 1000)}
@@ -88,7 +91,6 @@ def run_extract_job(
         raw.filter(in_run).repartition("bucket").drop("bucket"),
         max_size_bytes=max_size_bytes,
         shard_size_bytes=shard_size_bytes,
-        shard_pages=shard_pages,
         presalted=True,
     )
     docs = docs.withColumn("bucket", bucket_expr(n_buckets))
@@ -96,8 +98,10 @@ def run_extract_job(
 
     docs_path = f"{out_dir}/{DOCUMENTS_DIR}"
     rejects_path = f"{out_dir}/{REJECTS_DIR}"
-    docs.write.partitionBy("bucket").mode("append").parquet(docs_path)
-    rejects.write.partitionBy("bucket").mode("append").parquet(rejects_path)
+    for df, path in ((docs, docs_path), (rejects, rejects_path)):
+        df.write.partitionBy("bucket").mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(path)
 
     wall_ms = int((time.monotonic() - t0) * 1000)
 

@@ -26,13 +26,14 @@ only).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.pii import redact_pii_expr
 from ..operators import dedup, text_quality as tq
 from ..operators.packing import pack_documents
 from ..operators.sampling import hash_sample_expr, hash_split_expr
+from .checkpoint import completed_keys
 
 
 def _token_counter(tokenizer: str, text_col: str):
@@ -212,19 +213,6 @@ def stage_counts(curated: dict) -> dict[str, int]:
 _CURATE_CKPT = "_curate_checkpoint"
 
 
-def _curate_completed(spark: SparkSession, out_dir: str, run_id: str) -> set[str]:
-    from pyspark.errors import AnalysisException
-
-    try:
-        ck = spark.read.parquet(f"{out_dir}/{_CURATE_CKPT}")
-    except AnalysisException:  # no checkpoint yet
-        return set()
-    return {
-        r["stage"]
-        for r in ck.filter(F.col("run_id") == run_id).select("stage").distinct().collect()
-    }
-
-
 def run_curate_job(
     docs: DataFrame,
     out_dir: str,
@@ -260,7 +248,7 @@ def run_curate_job(
     import time
 
     spark = docs.sparkSession
-    done = _curate_completed(spark, out_dir, run_id)
+    done = completed_keys(spark, f"{out_dir}/{_CURATE_CKPT}", run_id, "stage")
     ran: list[str] = []
     skipped: list[str] = []
 

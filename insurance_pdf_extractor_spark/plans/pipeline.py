@@ -231,7 +231,7 @@ def extract_documents(
 
 
 @contextmanager
-def materialized_source(raw: DataFrame, storage_level: StorageLevel | None = None):
+def materialized_source(raw: DataFrame):
     """Persist a COMPUTED source once so the extraction plan's three
     branch subtrees (small-doc / oversized / reject — see
     :func:`extract_results`) read one materialization instead of each
@@ -255,8 +255,7 @@ def materialized_source(raw: DataFrame, storage_level: StorageLevel | None = Non
 
     The cache is dropped (non-blocking) on exit so repeated timed runs
     re-execute the source honestly."""
-    level = storage_level if storage_level is not None else StorageLevel.MEMORY_AND_DISK
-    persisted = raw.persist(level)
+    persisted = raw.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         yield persisted
     finally:
@@ -304,14 +303,15 @@ def extract_results(
 
 def build_results(
     documents: DataFrame,
-    raw: DataFrame | None = None,
     model_used: str = DEFAULT_MODEL,
     prompt_version: str = "v1",
 ) -> DataFrame:
     """documents(doc_id, spans) → results rows mirroring the reference's
     extractions table (app/services/storage.py:29-54): 18-field record,
     validation errors/warnings, status, confidence scores, deterministic
-    token/cost metrics."""
+    token/cost metrics. A ``size_bytes`` column carried through the
+    kernel stage (``_extract``'s accepted documents) becomes
+    ``file_size``."""
     rec = extract_fields(documents)
     fields = _field_cols(rec)
     out_tok = (F.length(F.to_json(F.struct(*[F.col(f) for f in fields]))) / 4).cast("long")
@@ -347,12 +347,7 @@ def build_results(
         (F.col("input_tokens") + F.col("output_tokens")).alias("total_tokens"),
         estimated_cost_expr("input_tokens", "output_tokens", model_used).alias("estimated_cost"),
     )
-    if "size_bytes" in rec.columns:
-        # size carried through the kernel stage — no join needed
-        rec = rec.withColumnRenamed("size_bytes", "file_size")
-    elif raw is not None:
-        rec = rec.join(raw.select("doc_id", F.col("size_bytes").alias("file_size")), "doc_id", "left")
-    return rec.drop(DOC_TEXT)
+    return rec.withColumnRenamed("size_bytes", "file_size").drop(DOC_TEXT)
 
 
 def _field_cols(df: DataFrame) -> list[str]:

@@ -2314,8 +2314,8 @@ def q_export_roundtrip(spark, sf_dir):
 # results written under schema v1 (no `commission` field) coexist with
 # rows appended after the field config gained the column; the evolved
 # read surfaces NULL commission for pre-migration rows, exactly like the
-# reference's migrated SQLite rows. No data rewrite on either backend
-# (Iceberg native evolution / parquet footer mergeSchema).
+# reference's migrated SQLite rows. No data rewrite (parquet footer
+# mergeSchema).
 # ---------------------------------------------------------------------------
 @register(
     "schema_evolution",
@@ -2328,7 +2328,7 @@ def q_export_roundtrip(spark, sf_dir):
     """,
 )
 def q_schema_evolution(spark, sf_dir):
-    from .sources.catalog import read_table_evolved, write_table
+    from .sources.catalog import read_table_evolved
 
     o = _load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 13 == 0)
     base = o.select(
@@ -2344,8 +2344,8 @@ def q_schema_evolution(spark, sf_dir):
         .withColumn("commission", F.lit("15.0%"))
     )
     path = _gate_tmpdir("schema_evo_") + "/results"
-    write_table(v1, path, mode="overwrite")
-    write_table(v2, path, mode="append")
+    v1.write.mode("overwrite").parquet(path)
+    v2.write.mode("append").parquet(path)
     # pre-migration rows surface NULL for the evolved column; map to the
     # reference's 'EMPTY VALUE' sentinel (app/models/extraction.py:22-46)
     # exactly as its migrated SQLite rows read back
@@ -2705,8 +2705,8 @@ def q_winnow_fingerprints(spark, sf_dir):
 @register("media_features", _fx("media_features"))
 def q_media_features(spark, sf_dir):
     """Multimodal decode: five src branches through one mapInPandas
-    feature extractor — the deterministic fake decoder (byte histogram,
-    opaque mime), REAL uncompressed-BMP image decode, REAL compressed
+    feature extractor — the byte histogram of an opaque
+    (application/octet-stream) payload, REAL uncompressed-BMP image decode, REAL compressed
     PNG decode (stdlib-zlib inflate + scanline unfiltering), REAL
     baseline JPEG decode (new r5 — huffman entropy decode + fixed-point
     IDCT + 4:2:0 upsampling + restart markers, operators/jpeg.py), and
@@ -2732,9 +2732,7 @@ def q_media_features(spark, sf_dir):
         .unionByName(synth_media_assets(real_docs, "jpeg"))
         .unionByName(synth_media_assets(real_docs, "wav"))
     )
-    feats = extract_media_features(assets).unionByName(
-        extract_media_features(real_assets, use_fake=False)
-    )
+    feats = extract_media_features(assets.unionByName(real_assets))
     # fixed-format serialization of the float vector ("%.6f" is printf
     # semantics on both JVM and any reimplementation) — scalar columns
     # only, so the driver canonicalizer can sort/hash the frame

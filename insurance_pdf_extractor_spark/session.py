@@ -59,14 +59,13 @@ def build_session(
     app_name: str = "insurance-pdf-extractor-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict | None = None,
 ) -> SparkSession:
     cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cores}]"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
-    b = (
+    spark = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config(map=WORKLOAD_CONF)
@@ -74,9 +73,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.worker.module", "pyspark_extract_worker")
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -1,46 +1,15 @@
-"""Table writer/reader abstraction: Iceberg when the catalog is on the
-classpath, parquet-with-identical-layout otherwise.
+"""Parquet table maintenance: the schema-evolved read and small-file
+compaction.
 
 The reference's SQLite DDL + ALTER-TABLE migration probes
-(app/services/storage.py:29-155, scripts/migrate_database.py) map to
-Iceberg schema evolution; in this sandbox (no Iceberg jars) the parquet
-fallback keeps layouts identical so a catalog swap is config-only.
+(app/services/storage.py:29-155, scripts/migrate_database.py) map to a
+``mergeSchema`` parquet read. Tables are plain parquet directories
+written with ``df.write``; there is no table catalog.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-def write_table(df: DataFrame, target: str, mode: str = "append", partition_by: list[str] | None = None) -> None:
-    """target: an Iceberg table name (catalog.db.tbl) when Iceberg is
-    present, else a filesystem path."""
-    spark = df.sparkSession
-    if iceberg_available(spark) and "/" not in target:
-        writer = df.writeTo(target)
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(target)
-
-
-def read_table(spark: SparkSession, target: str) -> DataFrame:
-    if iceberg_available(spark) and "/" not in target:
-        return spark.read.format("iceberg").load(target)
-    return spark.read.parquet(target)
 
 
 def read_table_evolved(spark: SparkSession, target: str) -> DataFrame:
@@ -50,10 +19,8 @@ def read_table_evolved(spark: SparkSession, target: str) -> DataFrame:
 
     This is the Spark analog of the reference's ALTER-TABLE migration
     probes (app/services/storage.py:133-155,
-    scripts/migrate_database.py:30-48): Iceberg handles it natively via
-    schema evolution; the parquet fallback unions the per-file schemas
-    with ``mergeSchema`` (footer-level union, no data rewrite — the same
-    no-rewrite contract Iceberg gives).
+    scripts/migrate_database.py:30-48): the read unions the per-file
+    schemas with ``mergeSchema`` (footer-level union, no data rewrite).
 
     Backfill contract: rows written before the ``magic`` prefix column
     existed surface ``magic = NULL`` here, which downstream
@@ -65,10 +32,7 @@ def read_table_evolved(spark: SparkSession, target: str) -> DataFrame:
     the metadata-only reject scan; that cost is confined to
     mixed-generation tables and disappears once a maintenance rewrite
     materializes the column."""
-    if iceberg_available(spark) and "/" not in target:
-        df = spark.read.format("iceberg").load(target)
-    else:
-        df = spark.read.option("mergeSchema", True).parquet(target)
+    df = spark.read.option("mergeSchema", True).parquet(target)
     if "magic" in df.columns and "content" in df.columns:
         from pyspark.sql import functions as F
 
@@ -87,27 +51,18 @@ def compact_table(
 ) -> dict:
     """Small-file compaction — the maintenance rewrite a 10^12-row
     table needs after many checkpointed micro-appends (each resumable
-    bucket append of plans/checkpoint.py creates files; a month of runs
-    creates millions). Iceberg exposes this as the rewrite_data_files
-    procedure; the parquet fallback rewrites in place with the same
-    contract: identical rows, file count set by total bytes /
-    ``target_file_bytes``, optional sort for locality (range partition
-    + in-file sort, so readers get clustered + min/max-prunable files).
+    bucket write of plans/checkpoint.py creates files; a month of runs
+    creates millions). The rewrite keeps the rows identical, sets the
+    file count by total bytes / ``target_file_bytes`` and optionally
+    sorts for locality (range partition + in-file sort, so readers get
+    clustered + min/max-prunable files).
 
     Returns {"files_before", "files_after", "bytes"} for the caller's
-    metrics sink. The rewrite is atomic-ish for the parquet fallback
-    (write to a sibling tmp dir, then swap) — Iceberg does this
-    transactionally; a posix rename pair is the closest fallback and is
-    explicitly NOT concurrent-writer safe (documented trade)."""
+    metrics sink. The rewrite is atomic-ish (write to a sibling tmp
+    dir, then swap); a posix rename pair is explicitly NOT
+    concurrent-writer safe (documented trade)."""
     import os
     import shutil
-
-    if iceberg_available(spark) and "/" not in target:
-        spark.sql(
-            f"CALL system.rewrite_data_files(table => '{target}', "
-            f"options => map('target-file-size-bytes','{target_file_bytes}'))"
-        )
-        return {"files_before": -1, "files_after": -1, "bytes": -1}
 
     def _stats(d: str):
         files = [

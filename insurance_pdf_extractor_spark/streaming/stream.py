@@ -144,22 +144,14 @@ def start_bloom_ingest_dedup(
     bitmaps plus an exact confirm anti-join for bloom-positives only;
     the history table is scanned once at start, never per batch.
     ``n_bits``/``n_shards`` left at None auto-size from the history
-    cardinality (dedup.auto_bloom_params, ~10 bits/key, shards capped
+    cardinality (dedup.history_bitmaps, ~10 bits/key, shards capped
     at 16 MiB each) — at 10^12 accepted docs, pass a bucketed
     fingerprint table as ``history`` upstream and the capacity
     (n_shards x n_bits) tracks it automatically."""
-    from ..operators.dedup import (
-        auto_bloom_params,
-        bloom_bitmaps,
-        history_fingerprints,
-        history_filter,
-    )
+    from ..operators.dedup import history_bitmaps, history_filter, history_fingerprints
 
     hist_fp = history_fingerprints(history).localCheckpoint()
-    if n_bits is None or n_shards is None:
-        auto_bits, auto_shards = auto_bloom_params(hist_fp)
-        n_bits, n_shards = n_bits or auto_bits, n_shards or auto_shards
-    bitmaps = bloom_bitmaps(hist_fp, "__bk", n_bits=n_bits, n_hashes=n_hashes, n_shards=n_shards)
+    bitmaps = history_bitmaps(hist_fp, n_bits, n_hashes, n_shards)
     stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:

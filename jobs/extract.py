@@ -24,7 +24,9 @@ dropped silently.
 
 The job is resumable: re-running with the same --run-id and --output
 processes only buckets missing from the checkpoint table
-(plans/checkpoint.py). The master is NOT hard-coded — spark-submit
+(plans/checkpoint.py). A processed bucket's directory under
+documents/ and rejects/ is replaced, not appended to, so it holds the
+output of the run that last completed that bucket. The master is NOT hard-coded — spark-submit
 --master / cluster deploy mode decides; the workload's session
 settings (AQE, Arrow batching: ``session.WORKLOAD_CONF``) fill only
 keys the submitted conf leaves unset; engine expressions are

@@ -17,7 +17,7 @@ def results_df(spark, corpus_docs, shuffle_partitions):
     raw = C.to_raw_df(spark, corpus_docs)
     with shuffle_partitions(4):
         docs, _ = extract_documents(raw)
-    res = build_results(docs, raw=raw)
+    res = build_results(docs)
     # deterministic created_at spread over 60 days for time-window ops
     res = res.withColumn(
         "created_at",

@@ -85,6 +85,30 @@ def test_kill_resume(spark, corpus_docs, tmp_path):
     assert row["wall_ms"] >= 0
 
 
+def test_resume_after_death_before_lineage_keeps_one_copy(spark, corpus_docs, tmp_path):
+    """A run that died after its documents/ and rejects/ writes but
+    before its lineage write left data for buckets the checkpoint does
+    not record. The resume re-extracts those buckets; it must replace
+    the dead run's rows, not add a second copy of every document."""
+    import shutil
+
+    raw = C.to_raw_df(spark, corpus_docs[:60])
+    out = str(tmp_path / "died")
+    run_extract_job(raw, out, run_id="r1", n_buckets=8)
+    docs_once = spark.read.parquet(f"{out}/documents").count()
+    rejects_once = spark.read.parquet(f"{out}/rejects").count()
+    shutil.rmtree(f"{out}/checkpoint")  # the lineage write never happened
+
+    stats = run_extract_job(raw, out, run_id="r1", n_buckets=8)
+    assert stats["buckets_completed"] == 8
+    docs = spark.read.parquet(f"{out}/documents")
+    assert docs.count() == docs.select("doc_id").distinct().count() == docs_once
+    assert spark.read.parquet(f"{out}/rejects").count() == rejects_once
+    lineage = _lineage(spark, out, "r1")
+    assert sum(r["docs_processed"] for r in lineage) == docs_once
+    assert {r["partition_id"]: r["docs_processed"] + r["docs_rejected"] for r in lineage} == _recount(raw, 8)
+
+
 def test_one_part_file_per_bucket(spark, corpus_docs, shuffle_partitions, tmp_path):
     """The bucket is the salt: each bucket is extracted and written by
     one task, so one run leaves exactly one part file in every

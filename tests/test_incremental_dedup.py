@@ -50,9 +50,9 @@ def _as_set(df):
 
 def test_bloom_bitmap_has_no_false_negatives(spark):
     keys = spark.range(0, 500).select(F.xxhash64("id").alias("k"))
-    bm = dedup.bloom_bitmap(keys, "k", n_bits=1 << 16, n_hashes=5)
+    bm = dedup.bloom_bitmaps(keys, "k", n_bits=1 << 16, n_hashes=5, n_shards=1)
     flags = (
-        keys.withColumn("hit", dedup.bloom_contains_udf(keys, bm, 1 << 16, 5)(F.col("k")))
+        keys.withColumn("hit", dedup.bloom_contains_udf(keys, bm, n_hashes=5)(F.col("k")))
         .agg(F.sum(F.col("hit").cast("int")).alias("n"))
         .first()
     )
@@ -61,10 +61,10 @@ def test_bloom_bitmap_has_no_false_negatives(spark):
 
 def test_bloom_bitmap_rejects_most_non_members(spark):
     keys = spark.range(0, 500).select(F.xxhash64("id").alias("k"))
-    bm = dedup.bloom_bitmap(keys, "k", n_bits=1 << 20, n_hashes=5)
+    bm = dedup.bloom_bitmaps(keys, "k", n_bits=1 << 20, n_hashes=5, n_shards=1)
     others = spark.range(10_000, 10_500).select(F.xxhash64("id").alias("k"))
     n_hits = (
-        others.withColumn("hit", dedup.bloom_contains_udf(others, bm, 1 << 20, 5)(F.col("k")))
+        others.withColumn("hit", dedup.bloom_contains_udf(others, bm, n_hashes=5)(F.col("k")))
         .filter("hit")
         .count()
     )
@@ -75,7 +75,7 @@ def test_bloom_bitmap_rejects_most_non_members(spark):
 def test_bloom_bitmap_requires_power_of_two(spark):
     keys = spark.range(3).select(F.xxhash64("id").alias("k"))
     with pytest.raises(ValueError):
-        dedup.bloom_bitmap(keys, "k", n_bits=1000)
+        dedup.bloom_bitmaps(keys, "k", n_bits=1000, n_shards=1)
 
 
 @pytest.mark.parametrize("n_bits", [1 << 6, 1 << 20])
@@ -130,9 +130,9 @@ def test_bloom_prefilter_routes_rows_off_the_join(spark, corpus):
     hist_keys = history.filter(F.col("text").isNotNull()).select(
         F.xxhash64(norm).alias("k")
     )
-    bm = dedup.bloom_bitmap(hist_keys, "k", n_bits=1 << 20, n_hashes=5)
+    bm = dedup.bloom_bitmaps(hist_keys, "k", n_bits=1 << 20, n_hashes=5, n_shards=1)
     flags = fresh_docs.select(
-        dedup.bloom_contains_udf(fresh_docs, bm, 1 << 20, 5)(F.xxhash64(norm)).alias("hit")
+        dedup.bloom_contains_udf(fresh_docs, bm, n_hashes=5)(F.xxhash64(norm)).alias("hit")
     )
     assert flags.filter("hit").count() == 0  # novel rows skip the join
 
@@ -308,8 +308,8 @@ def test_history_filter_keeps_in_batch_dups_and_schema(spark, corpus):
 
 def test_bloom_contains_udf_exposes_broadcast_handle(spark):
     keys = spark.range(0, 10).select(F.xxhash64("id").alias("k"))
-    bm = dedup.bloom_bitmap(keys, "k", n_bits=1 << 8, n_hashes=3)
-    fn = dedup.bloom_contains_udf(keys, bm, 1 << 8, 3)
+    bm = dedup.bloom_bitmaps(keys, "k", n_bits=1 << 8, n_hashes=3, n_shards=1)
+    fn = dedup.bloom_contains_udf(keys, bm, n_hashes=3)
     assert hasattr(fn, "broadcast")
     n = keys.withColumn("hit", fn(F.col("k"))).filter("hit").count()
     assert n == 10
@@ -420,7 +420,7 @@ def test_sharded_bloom_no_false_negatives_and_shape(spark):
     keys = spark.range(0, 500).select(F.xxhash64("id").alias("k"))
     bms = dedup.bloom_bitmaps(keys, "k", n_bits=1 << 12, n_hashes=5, n_shards=8)
     assert bms.shape == (8, (1 << 12) >> 6)
-    fn = dedup.bloom_contains_udf(keys, bms, 1 << 12, 5)
+    fn = dedup.bloom_contains_udf(keys, bms, n_hashes=5)
     assert keys.withColumn("hit", fn(F.col("k"))).filter("hit").count() == 500
     # xxhash64 keys spread across the top-bit ranges: several shards populated
     assert (dedup.bloom_fill_fractions(bms) > 0).sum() >= 4
@@ -430,7 +430,7 @@ def test_sharded_bloom_rejects_non_members(spark):
     keys = spark.range(0, 500).select(F.xxhash64("id").alias("k"))
     bms = dedup.bloom_bitmaps(keys, "k", n_bits=1 << 17, n_hashes=5, n_shards=4)
     others = spark.range(10_000, 10_500).select(F.xxhash64("id").alias("k"))
-    fn = dedup.bloom_contains_udf(others, bms, 1 << 17, 5)
+    fn = dedup.bloom_contains_udf(others, bms, n_hashes=5)
     assert others.withColumn("hit", fn(F.col("k"))).filter("hit").count() <= 2
 
 

@@ -140,9 +140,9 @@ def test_scalar_fixture_parity_spot_check():
 
 
 def test_spark_decode_path(spark):
-    """synth_media_assets('jpeg') -> extract_media_features(use_fake=
-    False): real decode inside mapInPandas, poison-row discipline for a
-    corrupt payload mixed into the batch."""
+    """synth_media_assets('jpeg') -> extract_media_features: real decode
+    inside mapInPandas, poison-row discipline for a corrupt payload
+    mixed into the batch."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -163,7 +163,7 @@ def test_spark_decode_path(spark):
             }
         )
     )
-    out = extract_media_features(assets.unionByName(corrupt), use_fake=False).collect()
+    out = extract_media_features(assets.unionByName(corrupt)).collect()
     by_ref = {r.media_ref: r for r in out}
     assert len(by_ref) == 7
     assert by_ref["bad-1"].features is None and by_ref["bad-1"].err is not None

@@ -148,7 +148,7 @@ def test_extract_media_features_real_decode(spark):
         [("bad-1", "image", b"not a bmp", "image/bmp")],
         "media_ref string, kind string, payload binary, mime string",
     )
-    rows = {r["media_ref"]: r for r in extract_media_features(assets.unionByName(bad), use_fake=False).collect()}
+    rows = {r["media_ref"]: r for r in extract_media_features(assets.unionByName(bad)).collect()}
     assert len(rows) == 9
     for d in range(4):
         br = rows[f"bmp-{d}"]
@@ -178,7 +178,7 @@ def test_frame_sample_into_feature_extraction(spark):
         F.col("frame_payload").alias("payload"),
         F.lit("image/bmp").alias("mime"),
     )
-    rows = {r["media_ref"]: r for r in extract_media_features(as_assets, use_fake=False).collect()}
+    rows = {r["media_ref"]: r for r in extract_media_features(as_assets).collect()}
     assert set(rows) == {"v1#0", "v1#1000"}
     assert np.allclose(rows["v1#1000"]["features"], bmp_features(synth_image(2, h=4, w=4)), atol=1e-6)
 

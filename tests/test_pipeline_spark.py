@@ -218,7 +218,8 @@ def test_entry_points_share_one_plan(spark, corpus_docs, shuffle_partitions, pre
 
     with shuffle_partitions(n_part, coalesce=n_part < 32):
         docs, rejects = extract_documents(raw, **opts)
-        expected = by_doc(build_results(docs, raw=raw))
+        sizes = raw.select("doc_id", F.col("size_bytes").alias("file_size"))
+        expected = by_doc(build_results(docs).join(sizes, "doc_id", "left"))
         results = by_doc(extract_results(raw, **opts))
         rejected = {r["doc_id"]: r for r in rejects.collect()}
 

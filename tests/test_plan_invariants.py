@@ -302,8 +302,8 @@ def test_incremental_dedup_plan_shape(spark, registry):
 
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     keys = d.select(F.xxhash64("text").alias("k"))
-    bm = dedup.bloom_bitmap(keys, "k", n_bits=1 << 10, n_hashes=3)
-    probe = dedup.bloom_contains_udf(keys, bm, 1 << 10, 3)
+    bm = dedup.bloom_bitmaps(keys, "k", n_bits=1 << 10, n_hashes=3, n_shards=1)
+    probe = dedup.bloom_contains_udf(keys, bm, n_hashes=3)
     probe_plan = _plan(spark, keys.withColumn("hit", probe(F.col("k"))))
     assert "ArrowEvalPython" in probe_plan
     assert "BatchEvalPython" not in probe_plan

@@ -3,6 +3,7 @@ export sinks, and multimodal plumbing."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from insurance_pdf_extractor_spark import corpus as C
@@ -58,36 +59,40 @@ def test_export_sinks(spark, corpus_docs, tmp_path):
     assert jback.count() == res.count()
 
 
-def test_catalog_fallback(spark, tmp_path):
-    from insurance_pdf_extractor_spark.sources.catalog import iceberg_available, read_table, write_table
-
-    df = spark.range(10).withColumn("x", F.col("id") * 2)
-    path = str(tmp_path / "tbl")
-    write_table(df, path, mode="overwrite")
-    assert read_table(spark, path).count() == 10
-    assert iceberg_available(spark) in (True, False)
-
-
 def test_multimodal_features_and_frames(spark):
     from insurance_pdf_extractor_spark.operators.multimodal import (
+        bmp_features,
+        decode_bmp,
+        encode_bmp,
         extract_media_features,
-        fake_features,
+        histogram_features,
         sample_frames,
+        synth_image,
     )
 
+    bmp = encode_bmp(synth_image(3, h=4, w=4))
     rows = [
         ("m1", "image", b"\x00\x01\x02" * 100, "image/png", 8, 8, 0),
         ("m2", "video", b"\xff" * 50, "video/mp4", 0, 0, 3500),
+        ("m3", "image", bmp, "image/bmp", 4, 4, 0),
+        ("m4", "image", b"\x00\x01\x02" * 100, "application/octet-stream", 0, 0, 0),
     ]
     assets = spark.createDataFrame(
         rows,
         "media_ref string, kind string, payload binary, mime string, width int, height int, duration_ms long",
     )
     feats = {r["media_ref"]: r for r in extract_media_features(assets).collect()}
+    # garbage under a real codec's mime: a poison row, not a failed batch
     assert feats["m1"]["n_bytes"] == 300
-    assert len(feats["m1"]["features"]) == 16
-    assert feats["m1"]["features"] == fake_features(b"\x00\x01\x02" * 100)
-    assert abs(sum(feats["m2"]["features"]) - 1.0) < 1e-6
+    assert feats["m1"]["features"] is None and feats["m1"]["err"] is not None
+    # no content codec for MP4 video: poison row naming the seam
+    assert feats["m2"]["features"] is None and "NotImplementedError" in feats["m2"]["err"]
+    assert feats["m3"]["err"] is None
+    assert feats["m3"]["features"] == pytest.approx(bmp_features(decode_bmp(bmp)), abs=1e-6)
+    # an opaque payload yields its L1-normalized byte histogram
+    assert feats["m4"]["err"] is None and len(feats["m4"]["features"]) == 16
+    assert feats["m4"]["features"] == histogram_features(b"\x00\x01\x02" * 100)
+    assert abs(sum(feats["m4"]["features"]) - 1.0) < 1e-6
 
     frames = sample_frames(assets, every_ms=1000).collect()
     assert [(r["media_ref"], r["frame_ts"]) for r in frames] == [("m2", 0), ("m2", 1000), ("m2", 2000)]
