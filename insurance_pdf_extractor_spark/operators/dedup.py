@@ -800,10 +800,10 @@ def bloom_bitmaps(
     task, and a single shard's bitmap can be rebuilt by scanning one
     partition directory (see :func:`write_fingerprint_table`).
 
-    Warns when any shard's fill fraction exceeds 50%: a saturated bitmap answers "maybe" for everything —
-    still correct (the confirm join is exact) but pure overhead, the
-    silent-degradation mode the r3 advice flagged. Size n_bits at
-    ~10 bits/key/shard for 1% fpp.
+    Warns when any shard's fill fraction exceeds 50%: a saturated
+    bitmap answers "maybe" for everything — still correct (the confirm
+    join is exact) but pure overhead, the silent-degradation mode the
+    r3 advice flagged. Size n_bits at ~10 bits/key/shard for 1% fpp.
     """
     if n_bits & (n_bits - 1):
         raise ValueError(f"n_bits must be a power of two, got {n_bits}")
